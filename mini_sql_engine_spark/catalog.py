@@ -156,29 +156,25 @@ def content_token(sf_dir: str, table: str = "documents") -> str:
 
 
 class DFMemo:
-    """Per-sf_dir memo of persist()ed DataFrames, keyed on CONTENT.
+    """Memo of the persist()ed DataFrames of ONE sf_dir, checked on CONTENT.
 
-    Three guarantees the bare ``dict[str, DataFrame]`` pattern lacked
-    (round-10 advice on ``_BPE_CACHE``):
-
-    - staleness: the entry is keyed on :func:`content_token` of the
-      driving table, so regenerating the fixture parquet in place
-      misses the cache instead of replaying a persisted result over
-      dead data;
-    - eviction: a superseded or stale entry is unpersist()ed and
-      dropped when detected — persisted blocks don't accumulate
-      across regenerations;
-    - session hygiene: entries whose SparkSession is not the caller's
-      (stopped session, fresh test session) are likewise evicted, not
-      just skipped.
+    One directory at a time: the ops of one curation chain share a
+    directory, so they share the entry, and a ``put`` for another
+    directory unpersists and drops the previous one. A finished corpus
+    therefore pins neither its cached blocks nor the executed plans
+    (and their memory pages) behind them. ``get`` misses, and evicts
+    the entry, when the driving table's :func:`content_token` changed
+    (fixture regenerated in place) or the entry belongs to another
+    SparkSession (stopped session, fresh test session).
     """
 
     def __init__(self, table: str = "documents") -> None:
         self._table = table
-        self._entries: dict[str, tuple[str, tuple[DataFrame, ...]]] = {}
+        self._entry: tuple[str, str, tuple[DataFrame, ...]] | None = None
 
-    @staticmethod
-    def _unpersist(dfs: tuple[DataFrame, ...]) -> None:
+    def _drop(self) -> None:
+        dfs = self._entry[2] if self._entry is not None else ()
+        self._entry = None
         for df in dfs:
             try:
                 df.unpersist()
@@ -188,21 +184,17 @@ class DFMemo:
     def get(
         self, spark: SparkSession, sf_dir: str
     ) -> tuple[DataFrame, ...] | None:
-        ent = self._entries.get(sf_dir)
-        if ent is None:
+        if self._entry is None or self._entry[0] != sf_dir:
             return None
-        token, dfs = ent
+        _, token, dfs = self._entry
         if token != content_token(sf_dir, self._table) or any(
             df.sparkSession is not spark for df in dfs
         ):
-            del self._entries[sf_dir]
-            self._unpersist(dfs)
+            self._drop()
             return None
         return dfs
 
     def put(self, sf_dir: str, *dfs: DataFrame) -> tuple[DataFrame, ...]:
-        old = self._entries.pop(sf_dir, None)
-        if old is not None:
-            self._unpersist(old[1])
-        self._entries[sf_dir] = (content_token(sf_dir, self._table), dfs)
+        self._drop()
+        self._entry = (sf_dir, content_token(sf_dir, self._table), dfs)
         return dfs

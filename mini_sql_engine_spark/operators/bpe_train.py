@@ -147,20 +147,20 @@ def _greedy_apply(t2: DataFrame, best: DataFrame) -> DataFrame:
     return merged
 
 
-_BPE_CACHE = DFMemo()  # content-keyed: regenerated fixtures miss
+_BPE_CACHE = DFMemo()  # one directory, content-checked
 
 
 def _bpe_trained(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
-    """(merge_rows, final_table) after BPE_ROUNDS — memoized per
-    sf_dir: `ext_bpe_train` and `ext_bpe_apply` both consume the SAME
-    training run (4 s each at sf0.1 when each re-trained; the pair was
-    the suite's two slowest queries in the round-8 bench). persist()
-    like `_MINHASH_CACHE`, lineage retained; the DFMemo key carries
-    the documents table's content token, so in-place fixture
-    regeneration invalidates instead of replaying stale state, and
-    superseded entries are unpersisted (round-10 advice)."""
+    """(merge_rows, final_table) after BPE_ROUNDS — memoized for the
+    current sf_dir: `ext_bpe_train` and `ext_bpe_apply` both consume the
+    SAME training run (4 s each at sf0.1 when each re-trained; the pair
+    was the suite's two slowest queries in the round-8 bench). persist()
+    like `_MINHASH_CACHE`, lineage retained. The DFMemo holds one
+    directory and checks the documents table's content token: in-place
+    fixture regeneration misses instead of replaying stale state, and
+    training on another sf_dir unpersists the previous run."""
     cached = _BPE_CACHE.get(spark, sf_dir)
     if cached is not None:
         return cached

@@ -82,13 +82,15 @@ def _shingled(spark: SparkSession, sf_dir: str) -> DataFrame:
     persist()ed, NOT localCheckpoint'ed: every consumer self-joins or
     reuses this relation 2–3× and Spark does not reuse the exchange
     across the a<b self-join, so materializing the shingling once cuts
-    each jaccard-family query ~3×. This is the one relation that lives
-    for the whole session (memoized per sf_dir), so it keeps its
-    LINEAGE: persist recomputes deterministically if a cached block is
-    ever dropped, while a checkpoint severs lineage and pins the
-    session to whatever block state survives — the wrong durability
-    trade for long-lived shared state. (Short-lived per-query
-    localCheckpoints inside one action are unaffected.)"""
+    each jaccard-family query ~3×. It is shared by every op on the
+    current corpus (a one-directory DFMemo: the first op on another
+    sf_dir unpersists it) and handed to downstream frames that may
+    outlive the memo entry, so it keeps its LINEAGE: persist recomputes
+    deterministically if a cached block is dropped or unpersisted,
+    while a checkpoint severs lineage and pins the session to whatever
+    block state survives — the wrong durability trade for shared state.
+    (Short-lived per-query localCheckpoints inside one action are
+    unaffected.)"""
     cached = _SHINGLE_CACHE.get(spark, sf_dir)
     if cached is not None:
         return cached[0]
@@ -154,7 +156,7 @@ _CLUSTER_CACHE = DFMemo()
 
 def jaccard_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Verified near-dup pairs (jacc ≥ threshold), persist()ed and
-    memoized per sf_dir like `_shingled`: a dozen downstream
+    memoized for the current sf_dir like `_shingled`: a dozen downstream
     operators (canonical keep, clusters, k-core, triangles, top
     pairs, recall benchmark, locality sharding, Adamic–Adar,
     modularity, …) all start from this table, and the inverted-index
@@ -716,9 +718,9 @@ def dup_loss_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# content-keyed memos: in-place fixture regeneration invalidates, and
-# superseded entries unpersist (same staleness class as _BPE_CACHE,
-# round-10 advice)
+# one-directory, content-keyed memos (see DFMemo): in-place fixture
+# regeneration invalidates, and the first op on another sf_dir
+# unpersists the previous corpus's entry
 _MINHASH_CACHE = DFMemo()
 _SIMHASH_CACHE = DFMemo()
 
@@ -731,10 +733,11 @@ def minhash_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined back onto the (small) deduplicated candidate set afterwards,
     so array bytes never ride the candidate-generation shuffle.
 
-    persist()ed + memoized per sf_dir like `jaccard_dedup`: the
-    verified pair table is consumed by its own query AND the blocker
-    audits (capture_recapture, the association consumer), each of which
-    would otherwise re-run the banded self-join. Lineage retained —
+    persist()ed + memoized for the current sf_dir like `jaccard_dedup`:
+    the verified pair table is consumed by its own query AND the blocker
+    audits (capture_recapture, the association consumer) on the same
+    corpus, each of which would otherwise re-run the banded self-join;
+    the first call on another sf_dir unpersists it. Lineage retained —
     see `_shingled` for the persist-vs-checkpoint argument."""
     cached = _MINHASH_CACHE.get(spark, sf_dir)
     if cached is not None:
@@ -775,8 +778,9 @@ def minhash_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def simhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup pairs at hamming ≤ 3 via exact 4×15-bit banding.
 
-    persist()ed + memoized per sf_dir — consumed by its own query and
-    the blocker audits (see `minhash_lsh_dedup`)."""
+    persist()ed + memoized for the current sf_dir — consumed by its own
+    query and the blocker audits on the same corpus (see
+    `minhash_lsh_dedup`)."""
     cached = _SIMHASH_CACHE.get(spark, sf_dir)
     if cached is not None:
         return cached[0]
@@ -1215,10 +1219,10 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         prev_sum = cur_sum
     else:
         raise RuntimeError(f"label propagation not converged in {MAX_CC_ITERS} rounds")
-    # memoized per sf_dir (labels are already localCheckpoint-
-    # materialized): four consumers — the clusters query, the size
-    # histogram, modularity and the golden-record merge — would each
-    # re-run the whole propagation loop otherwise
+    # memoized for the current sf_dir (labels are already
+    # localCheckpoint-materialized): four consumers — the clusters
+    # query, the size histogram, modularity and the golden-record
+    # merge — would each re-run the whole propagation loop otherwise
     out = labels.selectExpr("node AS doc_id", "label AS cluster_id")
     return _CLUSTER_CACHE.put(sf_dir, out)[0]
 

@@ -1,7 +1,10 @@
 """Property tests for functions.frames: the JVM-side literal builders
 must be drop-in equivalent to createDataFrame on values, names, and
 types (nullability intentionally differs: VALUES columns are
-non-nullable, which is strictly more precise and union-compatible)."""
+non-nullable, which is strictly more precise and union-compatible).
+
+Also the frames the engine keeps alive between calls: the session's
+memory page size and the one-directory ``DFMemo`` lifetime."""
 
 from __future__ import annotations
 
@@ -9,6 +12,7 @@ import math
 
 from hypothesis import HealthCheck, given, settings, strategies as st
 
+from mini_sql_engine_spark.catalog import DFMemo
 from mini_sql_engine_spark.functions.frames import (
     _split_schema,
     jvm_empty,
@@ -115,3 +119,33 @@ def test_sql_lit_rejects_binary():
     for v in (b"hi", bytearray(b"hi"), memoryview(b"hi")):
         with _pytest.raises(TypeError, match="binary literals"):
             _sql_lit(v)
+
+
+def test_session_page_size(spark):
+    # unset, Spark derives 64 MiB pages from an 8g driver on 4 cores,
+    # and every hash relation or aggregation map a kept plan holds
+    # pins at least one page
+    mm = spark.sparkContext._jsc.sc().env().memoryManager()
+    assert mm.pageSizeBytes() == 2 * 1024 * 1024
+
+
+def test_dfmemo_holds_one_directory(spark, tmp_path):
+    for name in ("a", "b"):
+        (tmp_path / name).mkdir()
+        (tmp_path / name / "documents.parquet").write_bytes(b"v1")
+    a, b = str(tmp_path / "a"), str(tmp_path / "b")
+    memo = DFMemo()
+    df_a = memo.put(a, spark.range(3).persist())[0]
+    assert df_a.count() == 3
+    # ops on the same directory share the entry
+    assert memo.get(spark, a)[0] is df_a
+    assert df_a.is_cached and df_a.storageLevel.useMemory
+    # the first put for another directory drops and unpersists it
+    df_b = memo.put(b, spark.range(4).persist())[0]
+    assert memo.get(spark, a) is None
+    assert not df_a.is_cached and not df_a.storageLevel.useMemory
+    assert memo.get(spark, b)[0] is df_b
+    # an in-place regeneration of the driving table misses and evicts
+    (tmp_path / "b" / "documents.parquet").write_bytes(b"v2 longer")
+    assert memo.get(spark, b) is None
+    assert not df_b.is_cached and not df_b.storageLevel.useMemory
