@@ -70,10 +70,12 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # bench). The memo returns the same immutable DataFrame object:
     # no data or results are cached (every action still scans the
     # parquet); the content_token key (size+mtime) invalidates the
-    # entry if the fixture file is regenerated in place.
+    # entry if the fixture file is regenerated in place. A stopped
+    # session's id() can be reused by a new one, so an entry of another
+    # session is a miss and is replaced (as in DFMemo.get).
     key = (id(spark), name, content_token(sf_dir, name))
     df = _SCAN_MEMO.get(key)
-    if df is None:
+    if df is None or df.sparkSession is not spark:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
         if name == "events":

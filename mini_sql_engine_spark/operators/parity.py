@@ -32,11 +32,14 @@ _ENGINE_CACHE: dict[tuple[int, str], Engine] = {}
 
 def engine_for(spark: SparkSession, sf_dir: str) -> Engine:
     """Cache one Engine per (session, sf_dir) — registration is lazy but
-    repeated parquet schema reads are wasted work at test cadence."""
+    repeated parquet schema reads are wasted work at test cadence. A
+    stopped session's id() can be reused, so an Engine of another
+    session is a miss and is replaced."""
     key = (id(spark), sf_dir)
-    if key not in _ENGINE_CACHE:
-        _ENGINE_CACHE[key] = Engine.from_parquet_dir(spark, sf_dir)
-    return _ENGINE_CACHE[key]
+    eng = _ENGINE_CACHE.get(key)
+    if eng is None or eng.spark is not spark:
+        eng = _ENGINE_CACHE[key] = Engine.from_parquet_dir(spark, sf_dir)
+    return eng
 
 
 def _via_engine(dialect_query: str, out_cols: list[str]) -> Callable:

@@ -332,17 +332,98 @@ class _Fragment(WriterCommitMessage):
         self.path = path
 
 
+def _write_fragment(staging: str, iterator) -> _Fragment:
+    """Executor side of both writers: one task's rows as a private
+    headerless integer CSV fragment under ``staging``."""
+    import uuid
+
+    frag = os.path.join(staging, f"part-{uuid.uuid4().hex}.csv")
+    with open(frag, "w") as fh:
+        for row in iterator:
+            fh.write(",".join(str(int(v)) for v in row) + "\n")
+    return _Fragment(frag)
+
+
+def _checked_catalog(data_dir: str, table: str, columns: list[str]) -> dict:
+    """``metadata.txt`` of ``data_dir`` (empty if none yet); raises when
+    ``table`` is registered with a column list other than ``columns``."""
+    meta_path = os.path.join(data_dir, "metadata.txt")
+    catalog = load_metadata(meta_path) if os.path.exists(meta_path) else {}
+    if table in catalog and catalog[table] != columns:
+        raise EngineError(
+            f"schema mismatch for {table!r}: catalog has "
+            f"{catalog[table]}, writing {columns}"
+        )
+    return catalog
+
+
+def commit_table(
+    data_dir: str,
+    table: str,
+    columns: list[str],
+    fragments: Sequence[str],
+    overwrite: bool,
+    keep_bytes: int | None = None,
+) -> str:
+    """Driver-side commit of the native format; returns ``<table>.csv``.
+
+    The one implementation behind every writer of the format: the
+    Python batch writer, the streaming sink, and the JVM-written state
+    tables of ``streaming/upsert.py``. Checks ``columns`` against
+    ``metadata.txt``, concatenates the prior table (when appending;
+    only its first ``keep_bytes`` with that given) and then
+    ``fragments`` in order into a temp file, moves it onto
+    ``<table>.csv`` with one atomic ``os.replace``, and registers a new
+    table in ``metadata.txt``. A crash before the swap leaves the
+    previous table intact and readers never observe a partial file.
+
+    Single-concurrent-writer assumption: append is read-merge-replace,
+    so two simultaneous appends to the SAME table race on the replace
+    and the last one wins (dropping the other's rows) — acceptable for
+    a single-file compatibility format; concurrent multi-writer append
+    needs a real table format (Iceberg/Delta) instead.
+    """
+    import shutil
+    import uuid
+
+    catalog = _checked_catalog(data_dir, table, columns)
+    final = os.path.join(data_dir, f"{table}.csv")
+    merged = os.path.join(data_dir, f".{table}.merge-{uuid.uuid4().hex[:8]}")
+    try:
+        with open(merged, "wb") as out:
+            if not overwrite and os.path.exists(final):
+                left = os.path.getsize(final) if keep_bytes is None else keep_bytes
+                with open(final, "rb") as prev:
+                    # bounded chunks: a streamed table grows for the
+                    # stream's lifetime, so never buffer it whole
+                    while left > 0 and (chunk := prev.read(min(1 << 20, left))):
+                        out.write(chunk)
+                        left -= len(chunk)
+            for path in fragments:
+                with open(path, "rb") as frag:
+                    shutil.copyfileobj(frag, out)
+        os.replace(merged, final)
+    finally:
+        if os.path.exists(merged):
+            os.remove(merged)
+    if table not in catalog:
+        with open(os.path.join(data_dir, "metadata.txt"), "a") as mf:
+            mf.write(f"<begin_table>\n{table}\n" + "\n".join(columns) + "\n<end_table>\n")
+    return final
+
+
 class MiniSQLWriter(DataSourceWriter):
     """Two-phase commit into the reference's single-CSV-per-table format.
 
     Each task streams its rows to a private staging fragment (`write`,
-    executor-side); only the driver-side `commit` merges the fragments
-    into ``<table>.csv`` and registers the table in ``metadata.txt`` —
-    so readers never observe a partial table and a failed job leaves
-    the previous table intact (`abort` removes the staging dir). The
-    single-file merge is the FORMAT's inherent bottleneck, not the
-    writer's: this sink is the compatibility export path back to the
-    reference engine; parquet is the scale path.
+    executor-side); the driver-side `commit` hands the fragments to
+    :func:`commit_table`, the format's one shared commit (the JVM-written
+    streaming state tables use it too), so readers never observe a
+    partial table and a failed job leaves the previous table intact
+    (`abort` removes the staging dir). The single-file merge is the
+    FORMAT's inherent bottleneck, not the writer's: this sink is the
+    compatibility export path back to the reference engine; parquet is
+    the scale path.
 
     ``mode("append")`` appends rows to an existing table of the same
     columns; ``mode("overwrite")`` replaces it.
@@ -367,45 +448,18 @@ class MiniSQLWriter(DataSourceWriter):
         os.makedirs(self.staging, exist_ok=True)
 
     def write(self, iterator) -> _Fragment:
-        import uuid
-
-        frag = os.path.join(self.staging, f"part-{uuid.uuid4().hex}.csv")
-        with open(frag, "w") as fh:
-            for row in iterator:
-                fh.write(",".join(str(int(v)) for v in row) + "\n")
-        return _Fragment(frag)
+        return _write_fragment(self.staging, iterator)
 
     def commit(self, messages) -> None:
         import shutil
 
-        final = os.path.join(self.data_dir, f"{self.table}.csv")
-        meta_path = os.path.join(self.data_dir, "metadata.txt")
-        catalog = load_metadata(meta_path) if os.path.exists(meta_path) else {}
-        if self.table in catalog and catalog[self.table] != self.columns:
-            raise EngineError(
-                f"schema mismatch for {self.table!r}: catalog has "
-                f"{catalog[self.table]}, writing {self.columns}"
-            )
-        # Two-phase commit: merge everything (the prior table first, when
-        # appending) into a temp file inside the staging dir, then
-        # os.replace() onto the final path — the swap is atomic, so a
-        # crash mid-merge leaves the previous table intact and readers
-        # never observe a partial file. Single-concurrent-writer
-        # assumption: append is read-merge-replace, so two simultaneous
-        # append jobs to the SAME table race on the replace and the last
-        # one wins (dropping the other's rows) — acceptable for a
-        # single-file compatibility format; concurrent multi-writer
-        # append needs a real table format (Iceberg/Delta) instead.
-        merged = os.path.join(self.staging, "_merged.csv")
-        with open(merged, "w") as out:
-            if not self.overwrite and os.path.exists(final):
-                with open(final) as prev:
-                    shutil.copyfileobj(prev, out)
-            for m in messages:
-                if m is not None:
-                    with open(m.path) as frag:
-                        shutil.copyfileobj(frag, out)
-        os.replace(merged, final)
+        final = commit_table(
+            self.data_dir,
+            self.table,
+            self.columns,
+            [m.path for m in messages if m is not None],
+            self.overwrite,
+        )
         if self.retain:
             # time travel: archive THIS committed version under
             # .versions/<table>.v{N}.csv (N monotonic). The archive
@@ -426,15 +480,6 @@ class MiniSQLWriter(DataSourceWriter):
             vtmp = os.path.join(vdir, f".{self.table}.v{n}.tmp")
             shutil.copyfile(final, vtmp)
             os.replace(vtmp, os.path.join(vdir, f"{self.table}.v{n}.csv"))
-        if self.table not in catalog:
-            with open(meta_path, "a") as mf:
-                mf.write(
-                    "<begin_table>\n"
-                    + self.table
-                    + "\n"
-                    + "\n".join(self.columns)
-                    + "\n<end_table>\n"
-                )
         shutil.rmtree(self.staging, ignore_errors=True)
 
     def abort(self, messages) -> None:
@@ -459,10 +504,11 @@ class MiniSQLStreamWriter(DataSourceStreamWriter):
     the previous attempt died. Later batches only commit after this
     one succeeds, so the truncation window can never clip a successor.
 
-    Same single-concurrent-writer assumption as the batch writer; the
-    scale path is a real table format — this sink is the streaming
-    half of the reference-format compatibility story (the connector
-    now covers read, write, stream-read, and stream-write).
+    Same single-concurrent-writer assumption and the same
+    :func:`commit_table` as the batch writer; the scale path is a real
+    table format — this sink is the streaming half of the
+    reference-format compatibility story (the connector covers read,
+    write, stream-read, and stream-write).
     """
 
     def __init__(self, data_dir: str, table: str, columns: list[str]) -> None:
@@ -477,37 +523,21 @@ class MiniSQLStreamWriter(DataSourceStreamWriter):
         os.makedirs(self.staging, exist_ok=True)
 
     def write(self, iterator) -> _Fragment:
-        import uuid
-
-        frag = os.path.join(self.staging, f"part-{uuid.uuid4().hex}.csv")
-        with open(frag, "w") as fh:
-            for row in iterator:
-                fh.write(",".join(str(int(v)) for v in row) + "\n")
-        return _Fragment(frag)
+        return _write_fragment(self.staging, iterator)
 
     def _log_path(self) -> str:
         return os.path.join(self.data_dir, f"{self.table}.streamlog.json")
 
     def commit(self, messages, batchId: int) -> None:
         import json
-        import shutil
 
         final = os.path.join(self.data_dir, f"{self.table}.csv")
-        # Schema guard FIRST — before the commit-log write and the
-        # merge/os.replace data swap — so a schema-drifted batch is
-        # rejected with the table bytes AND the streamlog untouched
-        # (matching MiniSQLWriter.commit, which validates before
-        # merging). Checking after the swap would record + append the
-        # bad batch and only then raise, leaving the table corrupted.
-        meta_path = os.path.join(self.data_dir, "metadata.txt")
-        catalog = (
-            load_metadata(meta_path) if os.path.exists(meta_path) else {}
-        )
-        if self.table in catalog and catalog[self.table] != self.columns:
-            raise EngineError(
-                f"schema mismatch for {self.table!r}: catalog has "
-                f"{catalog[self.table]}, writing {self.columns}"
-            )
+        # Schema guard FIRST — before the commit-log write and the data
+        # swap — so a schema-drifted batch is rejected with the table
+        # bytes AND the streamlog untouched. Checking after the swap
+        # would record + append the bad batch and only then raise,
+        # leaving the table corrupted.
+        _checked_catalog(self.data_dir, self.table, self.columns)
         logp = self._log_path()
         log: dict[str, int] = {}
         if os.path.exists(logp):
@@ -528,38 +558,13 @@ class MiniSQLStreamWriter(DataSourceStreamWriter):
             with open(tmp, "w") as fh:
                 json.dump(log, fh)
             os.replace(tmp, logp)  # log lands BEFORE the data swap
-        merged = os.path.join(self.staging, "_merged.csv")
-        with open(merged, "wb") as out:
-            if size_before and os.path.exists(final):
-                # copy the committed prefix in bounded chunks — the
-                # table grows with stream lifetime, so a single
-                # prev.read(size_before) would buffer the whole table
-                # in memory every batch
-                with open(final, "rb") as prev:
-                    remaining = size_before
-                    while remaining > 0:
-                        chunk = prev.read(min(1 << 20, remaining))
-                        if not chunk:
-                            break
-                        out.write(chunk)
-                        remaining -= len(chunk)
-            for m in messages:
-                if m is not None:
-                    with open(m.path, "rb") as frag:
-                        shutil.copyfileobj(frag, out)
-        os.replace(merged, final)
-        if self.table not in catalog:
-            with open(meta_path, "a") as mf:
-                mf.write(
-                    "<begin_table>\n"
-                    + self.table
-                    + "\n"
-                    + "\n".join(self.columns)
-                    + "\n<end_table>\n"
-                )
-        for m in messages:  # fragments are per-batch scratch
-            if m is not None and os.path.exists(m.path):
-                os.remove(m.path)
+        frags = [m.path for m in messages if m is not None]
+        commit_table(
+            self.data_dir, self.table, self.columns, frags, False, size_before
+        )
+        for path in frags:  # fragments are per-batch scratch
+            if os.path.exists(path):
+                os.remove(path)
 
     def abort(self, messages, batchId: int) -> None:
         import shutil

@@ -1,6 +1,6 @@
 """Streaming MERGE/upsert sink: foreachBatch into the native format.
 
-Closes the loop between the streaming pack and the native writer
+Closes the loop between the streaming pack and the native format
 (sources/datasource.py): a keyed running-totals table is maintained in
 the reference's ``metadata.txt`` + single-CSV format by a per-micro-
 batch MERGE, with an idempotent replay guard giving effectively-
@@ -9,11 +9,13 @@ exactly-once table state over foreachBatch's at-least-once contract.
 Exactly-once mechanics: the table's commit version rides INSIDE the
 table as a sentinel row (user_id = -1, n_events = last applied batch
 id) — because the native format is one file swapped with a single
-atomic ``os.replace`` (the writer's two-phase commit), the version and
-the data commit together. A replayed batch (failure between sink write
-and checkpoint commit) sees its own batch id already recorded and
-skips, so no delta is double-applied; a crash mid-write leaves the
-previous table intact.
+atomic ``os.replace`` (``datasource.commit_table``, the format's one
+driver-side commit), the version and the data commit together. A
+replayed batch (failure between sink write and checkpoint commit) sees
+its own batch id already recorded and skips, so no delta is
+double-applied; a crash mid-write leaves the previous table intact.
+State is read and written by the JVM CSV reader and writer
+(``_read_state``/``_write_state``); only that file commit is Python.
 
 MERGE compiles to: per-batch partial aggregate (map-side combinable),
 full-outer join against current state on the key, coalesce + add,
@@ -37,15 +39,19 @@ from __future__ import annotations
 
 import hashlib
 import os
+import shutil
 import tempfile
+import uuid
 
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import IntegralType
 
 from mini_sql_engine_spark import oracle_shared
 from mini_sql_engine_spark.functions.frames import jvm_empty, jvm_rows
 from mini_sql_engine_spark.functions.hashing import md5_long
+from mini_sql_engine_spark.plans.dialect import EngineError
 from mini_sql_engine_spark.sources import datasource
 
 STATE_COLS = ["user_id", "n_events", "total_cents"]
@@ -110,6 +116,45 @@ def _read_state(
         .option("table", table)
         .load()
     )
+
+
+def _write_state(df: DataFrame, data_dir: str, table: str) -> None:
+    """Overwrite a merge sink's state table with the JVM CSV writer.
+
+    The native format is a headerless integer CSV plus a ``metadata.txt``
+    entry — exactly what Spark's CSV writer emits for integral columns —
+    so the write needs no Python worker: one ``coalesce(1)`` task (the
+    format is one file; more tasks only mean more fragments to
+    concatenate) writes a private staging directory, and
+    ``datasource.commit_table`` moves its part file onto ``<table>.csv``
+    with the same schema check, atomic ``os.replace`` and catalog entry
+    as the ``format("minisql")`` writer. A failed job leaves the previous
+    table untouched. Non-integral columns are refused up front: the
+    format cannot hold them, and writing them would need a silent cast.
+    """
+    fields = df.schema.fields
+    bad = [
+        f"{f.name} {f.dataType.simpleString()}"
+        for f in fields
+        if not isinstance(f.dataType, IntegralType)
+    ]
+    if bad:
+        raise EngineError(
+            f"state table {table!r} is integer-only, got: {', '.join(bad)}"
+        )
+    staging = os.path.join(data_dir, f".{table}.staging-{uuid.uuid4().hex[:8]}")
+    try:
+        df.coalesce(1).write.csv(staging)
+        parts = sorted(f for f in os.listdir(staging) if f.startswith("part-"))
+        datasource.commit_table(
+            data_dir,
+            table,
+            [f.name for f in fields],
+            [os.path.join(staging, f) for f in parts],
+            overwrite=True,
+        )
+    finally:
+        shutil.rmtree(staging, ignore_errors=True)
 
 
 def _state_and_guard(
@@ -189,12 +234,12 @@ def merge_batch(
     native-format state table, idempotently.
 
     The state read happens in the write job's tasks, which all finish
-    before the writer's driver-side commit swaps the file — so reading
-    and overwriting the same table in one MERGE is safe (and a crash at
-    any point leaves the previous version readable). The replay guard
-    runs IN-PLAN (`_gate_delta`): a replayed batch rewrites state
-    unchanged — idempotent, and one Spark job per batch instead of the
-    old checkpoint-collect-write three.
+    before ``_write_state``'s driver-side commit swaps the file — so
+    reading and overwriting the same table in one MERGE is safe (and a
+    crash at any point leaves the previous version readable). The
+    replay guard runs IN-PLAN (`_gate_delta`): a replayed batch rewrites
+    state unchanged — idempotent, and one write job per batch instead
+    of the old checkpoint-collect-write three.
     """
     spark = batch_df.sparkSession
     cur, last1 = _state_and_guard(
@@ -227,21 +272,7 @@ def merge_batch(
         _next_version(batch_id).alias("n_events"),
         F.lit(0).cast("long").alias("total_cents"),
     )
-    datasource.register(spark)
-    (
-        # coalesce(1): the single-CSV format merges every task
-        # fragment into ONE file at driver commit, so parallel write
-        # tasks buy nothing for the bounded state table — they cost a
-        # Python worker spin-up each, per commit (the format is the
-        # compatibility export; a real table format is the scale sink)
-        merged.unionByName(sentinel)
-        .coalesce(1)
-        .write.format("minisql")
-        .option("path", data_dir)
-        .option("table", table)
-        .mode("overwrite")
-        .save()
-    )
+    _write_state(merged.unionByName(sentinel), data_dir, table)
 
 
 def _multi_file_events(
@@ -571,16 +602,7 @@ def merge_bitmap_batch(
         _next_version(batch_id).alias("chunk"),
         F.lit(0).cast("long").alias("mask"),
     )
-    datasource.register(spark)
-    (
-        merged.unionByName(sentinel)
-        .coalesce(1)  # single-file format — see merge_batch
-        .write.format("minisql")
-        .option("path", data_dir)
-        .option("table", table)
-        .mode("overwrite")
-        .save()
-    )
+    _write_state(merged.unionByName(sentinel), data_dir, table)
 
 
 def stream_bitmap_distinct_counts(
@@ -694,16 +716,7 @@ def merge_psi_batch(
         F.lit(_PSI_SENTINEL).cast("long").alias("bkey"),
         _next_version(batch_id).alias("n"),
     )
-    datasource.register(spark)
-    (
-        merged.unionByName(sentinel)
-        .coalesce(1)  # single-file format — see merge_batch
-        .write.format("minisql")
-        .option("path", data_dir)
-        .option("table", table)
-        .mode("overwrite")
-        .save()
-    )
+    _write_state(merged.unionByName(sentinel), data_dir, table)
 
 
 def stream_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -863,16 +876,7 @@ def merge_mg_batch(
         F.lit(_MG_SENTINEL).cast("long").alias("tid"),
         _next_version(batch_id).alias("cnt"),
     )
-    datasource.register(spark)
-    (
-        pruned.unionByName(sentinel)
-        .coalesce(1)  # single-file format — see merge_batch
-        .write.format("minisql")
-        .option("path", data_dir)
-        .option("table", table)
-        .mode("overwrite")
-        .save()
-    )
+    _write_state(pruned.unionByName(sentinel), data_dir, table)
 
 
 def stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1107,17 +1111,7 @@ def merge_qsketch_batch(
         F.lit(_QSK_SENTINEL).cast("long").alias("val"),
         _next_version(batch_id).alias("g"),
     )
-    datasource.register(spark)
-    (
-        cur.unionByName(delta)
-        .unionByName(sentinel)
-        .coalesce(1)  # single-file format — see merge_batch
-        .write.format("minisql")
-        .option("path", data_dir)
-        .option("table", table)
-        .mode("overwrite")
-        .save()
-    )
+    _write_state(cur.unionByName(delta).unionByName(sentinel), data_dir, table)
 
 
 def stream_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1302,16 +1296,7 @@ def merge_kmv_batch(
         F.lit(_KMV_SENTINEL).cast("long").alias("h"),
         _next_version(batch_id).alias("meta"),
     )
-    datasource.register(spark)
-    (
-        merged.unionByName(sentinel)
-        .coalesce(1)  # single-file format — see merge_batch
-        .write.format("minisql")
-        .option("path", data_dir)
-        .option("table", table)
-        .mode("overwrite")
-        .save()
-    )
+    _write_state(merged.unionByName(sentinel), data_dir, table)
 
 
 def stream_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1564,16 +1549,7 @@ def merge_merkle_batch(
         _next_version(batch_id).alias("b"),
         F.lit(0).cast("long").alias("h"),
     )
-    datasource.register(spark)
-    (
-        state.unionByName(sentinel)
-        .coalesce(1)  # single-file format — see merge_batch
-        .write.format("minisql")
-        .option("path", data_dir)
-        .option("table", table)
-        .mode("overwrite")
-        .save()
-    )
+    _write_state(state.unionByName(sentinel), data_dir, table)
 
 
 def stream_merkle_root(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1802,16 +1778,7 @@ def merge_band_batch(
         F.lit(_BND_SENTINEL).cast("long").alias("band"),
         _next_version(batch_id).alias("mn"),
     )
-    datasource.register(spark)
-    (
-        merged.unionByName(sentinel)
-        .coalesce(1)  # single-file format — see merge_batch
-        .write.format("minisql")
-        .option("path", data_dir)
-        .option("table", table)
-        .mode("overwrite")
-        .save()
-    )
+    _write_state(merged.unionByName(sentinel), data_dir, table)
 
 
 def stream_band_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:

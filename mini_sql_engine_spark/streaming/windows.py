@@ -44,11 +44,12 @@ from mini_sql_engine_spark import oracle_shared
 from mini_sql_engine_spark.catalog import load_table, normalize_event_ts
 
 
-# (session id, table, content token) -> raw parquet schema. The footer
-# schema read costs ~0.1 s of driver time per call (same fixed cost the
-# batch catalog memoizes in _SCAN_MEMO); every stream entry re-derives
-# the identical schema, so memoize it keyed exactly like the scan memo.
-_STREAM_SCHEMA_MEMO: dict[tuple[int, str, str], object] = {}
+# (table, content token) -> raw parquet schema. The footer schema read
+# costs ~0.1 s of driver time per call (same fixed cost the batch
+# catalog memoizes in _SCAN_MEMO); every stream entry re-derives the
+# identical schema. The schema is a property of the file, not of the
+# session, so the key holds no session id that could alias.
+_STREAM_SCHEMA_MEMO: dict[tuple[str, str], object] = {}
 
 
 def table_stream(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
@@ -62,7 +63,7 @@ def table_stream(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     from mini_sql_engine_spark.catalog import content_token
 
     src = os.path.join(sf_dir, f"{table}.parquet")
-    skey = (id(spark), table, content_token(sf_dir, table))
+    skey = (table, content_token(sf_dir, table))
     raw_schema = _STREAM_SCHEMA_MEMO.get(skey)
     if raw_schema is None:
         raw_schema = spark.read.parquet(src).schema

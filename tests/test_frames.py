@@ -149,3 +149,22 @@ def test_dfmemo_holds_one_directory(spark, tmp_path):
     (tmp_path / "b" / "documents.parquet").write_bytes(b"v2 longer")
     assert memo.get(spark, b) is None
     assert not df_b.is_cached and not df_b.storageLevel.useMemory
+
+
+def test_memos_ignore_entries_of_another_session(spark, sf_dir):
+    """A stopped session's ``id()`` can be reused by a new session: an
+    entry built under another session, planted under this session's
+    key, is a miss and is replaced."""
+    from mini_sql_engine_spark import catalog
+    from mini_sql_engine_spark.operators import parity
+
+    other = spark.newSession()
+    key = (id(spark), "region", catalog.content_token(sf_dir, "region"))
+    catalog._SCAN_MEMO[key] = other.range(1)
+    df = catalog.load_table(spark, sf_dir, "region")
+    assert df.sparkSession is spark
+    assert catalog._SCAN_MEMO[key] is df
+    assert catalog.load_table(spark, sf_dir, "region") is df
+
+    parity._ENGINE_CACHE[(id(spark), sf_dir)] = parity.Engine(other, {})
+    assert parity.engine_for(spark, sf_dir).spark is spark

@@ -487,3 +487,101 @@ def test_qsketch_merge_replay_and_bound(spark, tmp_path):
     n_lt = sum(1 for v in vals if v < est)
     assert n_le >= t
     assert n_lt < t + slack
+
+
+def _minisql_write_state(df, data_dir, table):
+    """The Python-connector state write that ``_write_state`` replaced."""
+    from mini_sql_engine_spark.sources import datasource
+
+    datasource.register(df.sparkSession)
+    (
+        df.coalesce(1).write.format("minisql")
+        .option("path", data_dir).option("table", table)
+        .mode("overwrite").save()
+    )
+
+
+def _feed(spark, k):
+    return spark.createDataFrame(
+        [Row(user_id=(i * 7 + k) % 11, value=i * 0.37 + k) for i in range(40)]
+    )
+
+
+def test_merge_batch_state_matches_python_writer(spark, tmp_path, monkeypatch):
+    """The JVM-written state table holds the same lines (as a set) and
+    the same ``metadata.txt`` as the ``format("minisql")`` writer
+    produces for the same frames, batch after batch."""
+    from mini_sql_engine_spark.streaming import upsert as U
+
+    jvm, py = str(tmp_path / "jvm"), str(tmp_path / "py")
+    for b in range(3):
+        U.merge_batch(_feed(spark, b), b, jvm, "t")
+    monkeypatch.setattr(U, "_write_state", _minisql_write_state)
+    for b in range(3):
+        U.merge_batch(_feed(spark, b), b, py, "t")
+
+    def lines(d):
+        with open(os.path.join(d, "t.csv")) as fh:
+            return fh.read().splitlines()
+
+    assert len(lines(jvm)) == len(set(lines(jvm))) > 3
+    assert set(lines(jvm)) == set(lines(py))
+    with open(os.path.join(jvm, "metadata.txt")) as a, \
+            open(os.path.join(py, "metadata.txt")) as b:
+        assert a.read() == b.read()
+    assert sorted(os.listdir(jvm)) == ["metadata.txt", "t.csv"]
+
+
+def _state_snapshot(d):
+    from pathlib import Path
+
+    return {p.name: p.read_bytes() for p in sorted(Path(d).iterdir())}
+
+
+def test_write_state_failed_job_keeps_previous_table(spark, tmp_path):
+    """A write job that fails in its task leaves the committed table
+    byte-identical and no staging or merge file behind."""
+    from mini_sql_engine_spark.streaming import upsert as U
+
+    d = str(tmp_path)
+    U.merge_batch(_feed(spark, 0), 0, d, "t")
+    before = _state_snapshot(d)
+    boom = spark.range(5).select(
+        F.col("id").alias("user_id"),
+        F.when(F.col("id") == 3, F.raise_error(F.lit("boom")))
+        .otherwise(F.col("id")).cast("long").alias("n_events"),
+        F.col("id").alias("total_cents"),
+    )
+    with pytest.raises(Exception, match="boom"):
+        U._write_state(boom, d, "t")
+    assert _state_snapshot(d) == before
+
+
+def test_write_state_refuses_non_integral_columns(spark, tmp_path):
+    """The native format is integer-only: a ``double`` column is refused
+    before anything is written (the Python writer's ``int(v)`` used to
+    truncate it silently)."""
+    from mini_sql_engine_spark.plans.dialect import EngineError
+    from mini_sql_engine_spark.streaming import upsert as U
+
+    d = str(tmp_path / "state")
+    df = spark.range(3).selectExpr("id AS user_id", "CAST(id AS double) / 2 AS share")
+    with pytest.raises(EngineError, match="integer-only.*share double"):
+        U._write_state(df, d, "t")
+    assert not os.path.exists(d)
+
+
+def test_write_state_schema_mismatch_leaves_table_and_catalog(spark, tmp_path):
+    """A column list that differs from the table's ``metadata.txt``
+    entry raises; the table, the catalog and the directory are as
+    before."""
+    from mini_sql_engine_spark.plans.dialect import EngineError
+    from mini_sql_engine_spark.streaming import upsert as U
+
+    d = str(tmp_path)
+    U.merge_batch(_feed(spark, 0), 0, d, "t")
+    before = _state_snapshot(d)
+    drifted = spark.range(3).selectExpr("id AS user_id", "id AS n_events")
+    with pytest.raises(EngineError, match="schema mismatch"):
+        U._write_state(drifted, d, "t")
+    assert _state_snapshot(d) == before
