@@ -5,7 +5,7 @@ Mirrors the reference's scattered validation checks (reference
 ambiguous bare column across the FROM tables, qualified column whose
 table is not in FROM. Catalyst would catch most of these too
 (``AnalysisException``), but resolving here (a) produces reference-style
-messages and (b) lets the builder emit fully-qualified plans so Spark
+messages and (b) lets the builder emit fully-qualified SQL so Spark
 never sees an ambiguous name.
 """
 

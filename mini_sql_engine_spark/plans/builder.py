@@ -1,101 +1,83 @@
-"""Lower a ResolvedQuery onto the Spark DataFrame API.
+"""Lower a ResolvedQuery to one Spark SQL text.
 
 The reference executes FROM as a k-fold nested-loop cartesian product and
 evaluates WHERE per row afterwards (reference ``main.py`` join loop —
-SURVEY.md §3.1). We declare exactly those semantics — crossJoin then
-filter — and let Catalyst do what the reference cannot (SURVEY.md §4.1):
-``PushDownPredicates`` recognizes equality conditions across the product
-and rewrites cross+filter into a real equi-join, then picks
+SURVEY.md §3.1). We declare exactly those semantics — ``CROSS JOIN`` then
+``WHERE`` — and let Catalyst do what the reference cannot (SURVEY.md
+§4.1): ``PushDownPredicates`` recognizes equality conditions across the
+product and rewrites cross+filter into a real equi-join, then picks
 broadcast-hash / shuffled-hash / sort-merge by size. The *semantics*
 stay the reference's (both join columns appear in ``*`` output), the
 *plan* is a proper join — verified in tests by asserting no
 CartesianProduct node survives for equi-join queries.
+
+The dialect's comparison operators and aggregate names are already Spark
+SQL, so lowering is string assembly and a query costs one ``spark.sql``
+call, analysed once. The product is written ``CROSS JOIN``, not
+``FROM a, b``: Spark plans the comma form as an inner join and the
+explicit form as the cross join the dialect defines. Integer literals
+are SQL literals, so one beyond ``BIGINT`` types as ``DECIMAL`` instead
+of failing.
 
 Scale note: nothing here collects to the driver; output is a DataFrame.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 from mini_sql_engine_spark.plans.analyzer import ResolvedQuery
-from mini_sql_engine_spark.plans.dialect import ColumnRef, Condition, SelectItem
-
-_AGG_FN = {
-    "MAX": F.max,
-    "MIN": F.min,
-    "SUM": F.sum,
-    "AVG": F.avg,
-    "COUNT": F.count,
-}
+from mini_sql_engine_spark.plans.dialect import ColumnRef, SelectItem
 
 
-def _col(ref: ColumnRef) -> Column:
-    # refs are fully qualified after analysis; the per-table DataFrame
-    # aliases make `t.c` resolvable even when column names collide
-    return F.col(f"{ref.table}.{ref.column}")
+def _quote(name: str) -> str:
+    # back-quoted identifier; the braces are doubled because the text is
+    # a template for spark.sql's ``{t0}`` table placeholders
+    name = name.replace("`", "``").replace("{", "{{").replace("}", "}}")
+    return f"`{name}`"
 
 
-def _condition_expr(cond: Condition) -> Column:
-    lhs = _col(cond.lhs)
-    rhs = _col(cond.rhs) if isinstance(cond.rhs, ColumnRef) else F.lit(cond.rhs)
-    op = cond.op
-    if op == "=":
-        return lhs == rhs
-    if op == "!=":
-        return lhs != rhs
-    if op == "<":
-        return lhs < rhs
-    if op == ">":
-        return lhs > rhs
-    if op == "<=":
-        return lhs <= rhs
-    return lhs >= rhs
+def _ref(ref: ColumnRef) -> str:
+    # refs are fully qualified after analysis; the per-table aliases make
+    # `t`.`c` resolvable even when column names collide
+    return f"{_quote(ref.table)}.{_quote(ref.column)}"
 
 
-def _item_header(item: SelectItem) -> str:
-    """Reference-style output header (qualified names — SURVEY.md §2.1 O16)."""
-    name = f"{item.column.table}.{item.column.column}"
+def _item(item: SelectItem, col: str) -> str:
+    """``col`` wrapped in the item's aggregate. With the qualified name
+    as ``col`` this is the reference's output header (SURVEY.md §2.1
+    O16), with the quoted reference it is the SQL expression."""
     if item.agg:
-        inner = f"DISTINCT {name}" if item.agg_distinct else name
-        return f"{item.agg}({inner})"
-    return name
+        return f"{item.agg}({'DISTINCT ' if item.agg_distinct else ''}{col})"
+    return col
+
+
+def to_sql(r: ResolvedQuery) -> str:
+    """ResolvedQuery → Spark SQL text whose FROM tables are the
+    placeholders ``{t0}``, ``{t1}``, … in FROM order, for
+    ``spark.sql(text, t0=df0, t1=df1, …)``."""
+    q = r.parsed
+    items = [SelectItem(c) for c in r.star_columns] if q.select_star else r.items
+    sql = "SELECT " + ("DISTINCT " if q.distinct else "") + ", ".join(
+        f"{_item(i, _ref(i.column))} AS {_quote(_item(i, str(i.column)))}" for i in items
+    )
+    sql += " FROM " + " CROSS JOIN ".join(
+        f"{{t{i}}} AS {_quote(t)}" for i, t in enumerate(q.tables)
+    )
+    if r.conditions:
+        sql += " WHERE " + f" {q.connective} ".join(
+            f"({_ref(c.lhs)} {c.op} {_ref(c.rhs) if isinstance(c.rhs, ColumnRef) else c.rhs})"
+            for c in r.conditions
+        )
+    return sql
 
 
 def build_dataframe(r: ResolvedQuery, tables: dict[str, DataFrame]) -> DataFrame:
-    """ResolvedQuery + (name → DataFrame) → result DataFrame."""
-    q = r.parsed
-
-    df: DataFrame | None = None
-    for t in q.tables:
-        aliased = tables[t].alias(t)
-        df = aliased if df is None else df.crossJoin(aliased)
-    assert df is not None
-
-    if r.conditions:
-        exprs = [_condition_expr(c) for c in r.conditions]
-        pred = exprs[0]
-        if len(exprs) == 2:
-            pred = (pred & exprs[1]) if q.connective == "AND" else (pred | exprs[1])
-        df = df.filter(pred)
-
-    if q.select_star:
-        df = df.select([_col(c).alias(f"{c.table}.{c.column}") for c in r.star_columns])
-    elif q.is_aggregate:
-        aggs = []
-        for item in r.items:
-            fn = _AGG_FN[item.agg]
-            col = _col(item.column)
-            expr = (
-                F.count_distinct(col)
-                if (item.agg == "COUNT" and item.agg_distinct)
-                else fn(col)
-            )
-            aggs.append(expr.alias(_item_header(item)))
-        df = df.agg(*aggs)
-    else:
-        df = df.select([_col(i.column).alias(_item_header(i)) for i in r.items])
-
-    if q.distinct:
-        df = df.distinct()
-    return df
+    """ResolvedQuery + (name → DataFrame) → result DataFrame, through one
+    ``spark.sql`` call. PySpark binds each frame to a temp view of its
+    own for the analysis and drops it afterwards, so the engine keeps no
+    view state. The placeholders are ``t0``, ``t1``, … rather than the
+    table names, which could collide with ``spark.sql``'s own
+    parameters (``sqlQuery``, ``args``)."""
+    frames = {f"t{i}": tables[t] for i, t in enumerate(r.parsed.tables)}
+    return frames["t0"].sparkSession.sql(to_sql(r), **frames)

@@ -58,21 +58,6 @@ STATE_COLS = ["user_id", "n_events", "total_cents"]
 SENTINEL_KEY = -1  # user_id for the version row (real keys are >= 0)
 
 
-def _enable_native_pushdown(spark: SparkSession) -> None:
-    """Belt-and-braces for caller-owned sessions (e.g. the correctness
-    driver's): enable Python-source filter pushdown BEFORE the stream
-    starts so the foreachBatch sink's ``format("minisql")`` state reads
-    can never trip Spark 4.1's ``DATA_SOURCE_PUSHDOWN_DISABLED`` —
-    round 5's only failure class. The conf-gated reader in
-    ``sources/datasource.py`` already makes this unnecessary, but the
-    conf is a one-line runtime set and the microbatch session clone
-    inherits it, so the defense costs nothing."""
-    try:
-        spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    except Exception:
-        pass
-
-
 def _cents(col: str) -> F.Column:
     # floor(x*100 + 0.5): identical IEEE double ops on Spark and DuckDB,
     # unlike ROUND whose half-way tie rule differs across engines
@@ -359,7 +344,6 @@ def stream_upsert_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     once micro-batch commits of the foreachBatch MERGE sink, then read the final native-format
     table back. Equals the one-shot batch aggregate (the DuckDB
     oracle) because integer-cent deltas accumulate associatively."""
-    _enable_native_pushdown(spark)
     data_dir = tempfile.mkdtemp(prefix="minisql_upsert_")
     run_upsert_stream(spark, sf_dir, data_dir)
     state = _read_state(spark, data_dir, "user_totals",
@@ -449,7 +433,6 @@ def stream_native_sink_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from mini_sql_engine_spark.catalog import load_table
 
-    _enable_native_pushdown(spark)
     data_dir = tempfile.mkdtemp(prefix="minisql_sink_")
     chk = tempfile.mkdtemp(prefix="chk_sink_")
     datasource.register(spark)
@@ -621,7 +604,6 @@ def stream_bitmap_distinct_counts(
     table and are joined back from the (tiny) type dictionary at
     read time.
     """
-    _enable_native_pushdown(spark)
     data_dir = tempfile.mkdtemp(prefix="minisql_bitmap_")
     chk = tempfile.mkdtemp(prefix="chk_bitmap_")
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
@@ -737,7 +719,6 @@ def stream_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from mini_sql_engine_spark.operators.analytics import psi_readout
 
-    _enable_native_pushdown(spark)
     data_dir = tempfile.mkdtemp(prefix="minisql_psi_")
     chk = tempfile.mkdtemp(prefix="chk_psi_")
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
@@ -899,7 +880,6 @@ def stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashes. This is THE frequent-items pattern when the stream cannot
     hold a per-token state table.
     """
-    _enable_native_pushdown(spark)
     data_dir = tempfile.mkdtemp(prefix="minisql_mg_")
     chk = tempfile.mkdtemp(prefix="chk_mg_")
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
@@ -1126,7 +1106,6 @@ def stream_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         QSK_TARGETS,
     )
 
-    _enable_native_pushdown(spark)
     data_dir = tempfile.mkdtemp(prefix="minisql_qsk_")
     chk = tempfile.mkdtemp(prefix="chk_qsk_")
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
@@ -1312,7 +1291,6 @@ def stream_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct-count twin of the MG heavy-hitter design: both keep a
     provably-sufficient constant-size candidate set, and merge = union
     keeps replays free."""
-    _enable_native_pushdown(spark)
     data_dir = tempfile.mkdtemp(prefix="minisql_kmv_")
     chk = tempfile.mkdtemp(prefix="chk_kmv_")
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
@@ -1571,7 +1549,6 @@ def stream_merkle_root(spark: SparkSession, sf_dir: str) -> DataFrame:
     store; the
     single-file demo format caps it (the real target is a keyed table
     format, the operator shape is unchanged)."""
-    _enable_native_pushdown(spark)
     data_dir = tempfile.mkdtemp(prefix="minisql_mks_")
     chk = tempfile.mkdtemp(prefix="chk_mks_")
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
@@ -1797,7 +1774,6 @@ def stream_band_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     |distinct bands| rows ~ 4·n_docs longs+hashes — registry-sized by
     necessity (it IS the index); a real deployment keys it by band
     prefix in a keyed table format, the merge shape is unchanged."""
-    _enable_native_pushdown(spark)
     data_dir = tempfile.mkdtemp(prefix="minisql_bnd_")
     chk = tempfile.mkdtemp(prefix="chk_bnd_")
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")

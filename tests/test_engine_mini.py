@@ -54,6 +54,27 @@ def test_where_col_vs_col(eng):
     assert rows(df) == [(1,), (4,), (7,), (10,)]
 
 
+def test_where_literal_beyond_bigint(eng):
+    """An integer literal past BIGINT is a SQL DECIMAL literal, compared
+    exactly — not an error."""
+    df = eng.sql("SELECT A FROM table1 WHERE A < 99999999999999999999;")
+    assert rows(df) == [(1,), (4,), (7,), (10,)]
+    assert rows(eng.sql("SELECT A FROM table1 WHERE A > 99999999999999999999;")) == []
+
+
+def test_unusual_table_and_column_names(spark):
+    """``*`` expands from schema names, which parquet lets hold
+    back-quotes and braces, and table names may be those of
+    ``spark.sql``'s own parameters; all survive the SQL text."""
+    e = Engine(spark, {
+        "args": spark.sql("SELECT 1 AS `a``b`, 2 AS `{c}`"),
+        "sqlQuery": spark.sql("SELECT 3 AS d"),
+    })
+    df = e.sql("SELECT * FROM args, sqlQuery WHERE d = 3;")
+    assert df.columns == ["args.a`b", "args.{c}", "sqlQuery.d"]
+    assert rows(df) == [(1, 2, 3)]
+
+
 def test_distinct(eng):
     df = eng.sql("SELECT DISTINCT B, C FROM table1;")
     assert rows(df) == [(2, 3), (5, 6), (8, 9)]
