@@ -14,10 +14,9 @@ subprocess timing every query min-of-2; the output records each leg's
 total plus the 1-minute load average around it, so a load spike can't
 masquerade as a code regression (round 5's phantom TPC-H 2x). The
 default is ONE leg (the caller's timeout is unknown); set
-SPARK_GRAFT_BENCH_LEGS=2 for the min-over-two-fresh-JVMs variant —
-the round-close BENCH_LOCAL artifacts committed to the repo are
-produced that way. A leg slower than SPARK_GRAFT_BENCH_LEG_BUDGET
-seconds (default 420) suppresses any remaining legs.
+SPARK_GRAFT_BENCH_LEGS=2 for the min-over-two-fresh-JVMs variant. A
+leg slower than SPARK_GRAFT_BENCH_LEG_BUDGET seconds (default 420)
+suppresses any remaining legs.
 """
 
 from __future__ import annotations

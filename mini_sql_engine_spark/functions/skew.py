@@ -17,7 +17,7 @@ reproducible and tests can diff salted vs unsalted output exactly.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 # aggregate name → (partial expr builder, final expr builder)
 _ALGEBRAIC = {
@@ -75,15 +75,3 @@ def salted_join(
     )
     return big_s.join(small_r, [key, "_salt"], how).drop("_salt")
 
-
-def top_keys(df: DataFrame, key: str, k: int = 10) -> DataFrame:
-    """Diagnostic: the k heaviest keys and their row share — run this
-    before deciding a key needs salting."""
-    total = df.count()
-    return (
-        df.groupBy(key)
-        .agg(F.count(F.lit(1)).alias("n_rows"))
-        .withColumn("share", F.round(F.col("n_rows") / F.lit(total), 6))
-        .orderBy(F.col("n_rows").desc())
-        .limit(k)
-    )

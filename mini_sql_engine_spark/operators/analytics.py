@@ -41,7 +41,7 @@ from mini_sql_engine_spark.functions.hashing import md5_long
 from mini_sql_engine_spark import oracle_shared
 from mini_sql_engine_spark.functions.numeric import NANO as _NANO
 from mini_sql_engine_spark.functions.numeric import qsum as _qsum
-from mini_sql_engine_spark.functions.ranking import ntile_expr, range_prefix
+from mini_sql_engine_spark.functions.ranking import range_prefix
 
 ALL = "(all)"  # marker for super-aggregate rows (testdata is NOT NULL,
 # so coalescing grouped NULLs to a marker is unambiguous)
@@ -314,39 +314,6 @@ def percentiles_by_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.expr("percentile(c_acctbal, 0.25)"), 6).alias("p25"),
         F.round(F.expr("percentile(c_acctbal, 0.5)"), 6).alias("p50"),
         F.round(F.expr("percentile(c_acctbal, 0.9)"), 6).alias("p90"),
-    )
-
-
-def anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Robust anomaly detection per event type: modified z-score
-    0.6745·(x − median)/MAD with the Iglewicz–Hoaglin cutoff 3.5.
-    Mean/stddev outlier rules break exactly when you need them (the
-    outliers inflate the stddev that defines them); median/MAD have a
-    50% breakdown point, so this is the detector a metrics pipeline
-    should run on raw event values.
-
-    Two grouped exact-percentile passes (median, then median of
-    absolute deviations) with the tiny per-type stats broadcast back
-    onto the event stream — at 100 TB swap `percentile` for the
-    mergeable t-digest sketch (`percentile_approx`) and both passes
-    become single-shuffle map-side-combine aggs. Stats are rounded to
-    6 decimals before the z-score so 1-ulp interpolation differences
-    between engines cannot flip a threshold-boundary row."""
-    e = load_table(spark, sf_dir, "events").select("event_id", "event_type", "value")
-    med = e.groupBy("event_type").agg(
-        F.round(F.expr("percentile(value, 0.5)"), 6).alias("med")
-    )
-    dev = e.join(F.broadcast(med), "event_type")
-    mad = dev.groupBy("event_type").agg(
-        F.round(F.expr("percentile(abs(value - med), 0.5)"), 6).alias("mad")
-    )
-    z = F.round(0.6745 * (F.col("value") - F.col("med")) / F.col("mad"), 6)
-    return (
-        dev.join(F.broadcast(mad), "event_type")
-        .filter(F.col("mad") > 0)
-        .withColumn("robust_z", z)
-        .filter(F.abs(F.col("robust_z")) > 3.5)
-        .select("event_id", "event_type", F.round("value", 6).alias("value"), "robust_z")
     )
 
 
@@ -636,210 +603,6 @@ def quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Day-level cohort retention triangle: users grouped by their
-    first-activity day, counted distinct on each later activity day.
-
-    Two thin shuffles at any scale: the per-user min-day aggregate
-    (map-side partial), then the (cohort, offset) distinct-count — the
-    raw event stream is never self-joined, only joined against the
-    ~|users| first-day table (broadcast-able when users ≪ events)."""
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id", F.to_date(F.date_trunc("day", "ts")).alias("day")
-    )
-    first = ev.groupBy("user_id").agg(F.min("day").alias("cohort_day"))
-    return (
-        ev.join(first, "user_id")
-        .groupBy(
-            F.date_format("cohort_day", "yyyy-MM-dd").alias("cohort"),
-            F.datediff("day", "cohort_day").cast("long").alias("day_offset"),
-        )
-        .agg(F.count_distinct("user_id").alias("n_users"))
-    )
-
-
-SESSION_GAP_US = 30 * 60 * 1_000_000  # 30-minute inactivity gap
-PATH_TOP_K = 20
-
-
-def session_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top user-journey paths: sessionize each user's event stream by a
-    30-minute inactivity gap (gaps-and-islands: lag + boundary flag +
-    running sum — the window form of `ext_session_window`'s
-    session_window), then reduce each session to its ordered
-    event-type path and count path frequencies. Output: the PATH_TOP_K
-    most common (path, n_sessions).
-
-    Order inside a session is pinned by (unix_micros(ts), event_id) —
-    collect_list alone is shuffle-order-nondeterministic, so the path
-    string is built by sorting an array of (ts_us, event_id, type)
-    structs, which is deterministic in both engines. Both windows and
-    the session rollup shuffle once on user_id; the path count is a
-    thin (path, 1) aggregate.
-    """
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id",
-        F.unix_micros("ts").alias("ts_us"),
-        "event_id",
-        "event_type",
-    )
-    from pyspark.sql import Window
-
-    wo = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
-    flagged = ev.withColumn(
-        "new_sess",
-        F.when(
-            F.col("ts_us") - F.lag("ts_us").over(wo) > SESSION_GAP_US, 1
-        ).otherwise(0)
-        + F.when(F.lag("ts_us").over(wo).isNull(), 1).otherwise(0),
-    ).withColumn(
-        "sess",
-        F.sum("new_sess").over(
-            wo.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        ),
-    )
-    paths = flagged.groupBy("user_id", "sess").agg(
-        F.concat_ws(
-            ">",
-            F.transform(
-                F.array_sort(
-                    F.collect_list(F.struct("ts_us", "event_id", "event_type"))
-                ),
-                lambda s: s.getField("event_type"),
-            ),
-        ).alias("path")
-    )
-    return (
-        paths.groupBy("path")
-        .agg(F.count(F.lit(1)).alias("n_sessions"))
-        .orderBy(F.col("n_sessions").desc(), "path")
-        .limit(PATH_TOP_K)
-    )
-
-
-def event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """First-order Markov transition matrix over event types: for each
-    user's (ts, event_id)-ordered stream, count (prev_type → type)
-    transitions and row-normalize into probabilities — the base table
-    for next-event prediction and anomaly scoring. Output:
-    (prev_type, event_type, n, prob).
-
-    One user-keyed window (lag) then a transition-keyed count agg;
-    row normalization is a window sum over the tiny type×type table —
-    nothing wide touches the raw stream twice.
-    """
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id",
-        F.unix_micros("ts").alias("ts_us"),
-        "event_id",
-        "event_type",
-    )
-    from pyspark.sql import Window
-
-    wo = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
-    trans = (
-        ev.withColumn("prev_type", F.lag("event_type").over(wo))
-        .filter(F.col("prev_type").isNotNull())
-        .groupBy("prev_type", "event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    wnorm = Window.partitionBy("prev_type")
-    return trans.select(
-        "prev_type",
-        "event_type",
-        "n",
-        F.round(F.col("n") / F.sum("n").over(wnorm), 4).alias("prob"),
-    )
-
-
-def running_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cumulative distinct users per event type by day — the DAU-style
-    "users reached so far" curve. A cumulative COUNT(DISTINCT)
-    decomposes EXACTLY: a user contributes to every prefix from their
-    FIRST day on, so min-day per (type, user) → new-user histogram →
-    running sum gives the same numbers as a distinct-set window while
-    carrying one counter of state instead of a growing set. (Spark
-    windows reject COUNT(DISTINCT); the common `size(collect_set())`
-    workaround is what this replaces — 100 TB state is O(1) per
-    partition here, vs O(users) for the set.) Output: (event_type,
-    day, n_users_cum).
-    """
-    from pyspark.sql import Window
-
-    # day as a string: Spark date and DuckDB DATE surface as different
-    # pandas dtypes in the driver compare (same trick as cohort_retention)
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_type", F.date_format("ts", "yyyy-MM-dd").alias("day"), "user_id"
-    )
-    first = ev.groupBy("event_type", "user_id").agg(
-        F.min("day").alias("day")
-    )
-    hist = first.groupBy("event_type", "day").agg(
-        F.count(F.lit(1)).alias("n_new")
-    )
-    days = ev.select("event_type", "day").distinct()
-    w = (
-        Window.partitionBy("event_type")
-        .orderBy("day")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return (
-        days.join(hist, ["event_type", "day"], "left")
-        .withColumn(
-            "n_users_cum",
-            F.sum(F.coalesce("n_new", F.lit(0))).over(w),
-        )
-        .select("event_type", "day", "n_users_cum")
-    )
-
-
-def concurrency_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sweep-line concurrency: treat each event as a session of
-    SESSION_GAP_US/2 duration, explode into +1 (start) / −1 (end)
-    deltas, and take the running sum in time order — the "how many
-    sessions are open right now" gauge, entirely relational. Output:
-    per event_type, the peak concurrency and when it first occurred.
-
-    One shuffle on event_type; the window orders the 2n thin delta
-    rows within each type. Ties order by (ts_us, delta DESC, event_id)
-    — starts before ends at the same instant, deterministically.
-    """
-    from pyspark.sql import Window
-
-    half = SESSION_GAP_US // 2
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_type", F.unix_micros("ts").alias("ts_us"), "event_id"
-    )
-    deltas = ev.select(
-        "event_type", "ts_us", "event_id", F.lit(1).alias("delta")
-    ).unionByName(
-        ev.select(
-            "event_type",
-            (F.col("ts_us") + half).alias("ts_us"),
-            "event_id",
-            F.lit(-1).alias("delta"),
-        )
-    )
-    w = (
-        Window.partitionBy("event_type")
-        .orderBy("ts_us", F.col("delta").desc(), "event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    running = deltas.withColumn("open", F.sum("delta").over(w))
-    wp = Window.partitionBy("event_type").orderBy(
-        F.col("open").desc(), "ts_us", "event_id"
-    )
-    return (
-        running.withColumn("rn", F.row_number().over(wp))
-        .filter(F.col("rn") == 1)
-        .select(
-            "event_type",
-            F.col("open").alias("peak_concurrency"),
-            F.col("ts_us").alias("peak_at_us"),
-        )
-    )
-
-
 MAP_SHARE_MIN = 0.04  # drop days below this share of the type's events
 
 
@@ -879,54 +642,6 @@ def map_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     return shares.select(
         "event_type", F.explode("m2").alias("day", "share")
     )
-
-
-WM_CANDIDATES_MIN = (10, 30, 60)  # candidate watermark delays, minutes
-
-
-def watermark_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Out-of-orderness audit — the input to choosing a watermark
-    delay: treating event_id as arrival order (the documented proxy in
-    this fixture), each event's lateness is how far the stream's
-    event-time high-water mark had already advanced past it when it
-    arrived. Reports, per event type: max and p99 lateness (seconds)
-    and how many events each candidate watermark delay would drop as
-    late — read the row where n_dropped hits 0 and that is the delay
-    the streaming pack's `withWatermark` needs. One window over the
-    arrival order per type + a thin rollup.
-    """
-    from pyspark.sql import Window
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_type", F.unix_micros("ts").alias("ts_us"), "event_id"
-    )
-    w = (
-        Window.partitionBy("event_type")
-        .orderBy("event_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    late = ev.withColumn(
-        "late_us",
-        F.greatest(
-            F.coalesce(F.max("ts_us").over(w), F.col("ts_us"))
-            - F.col("ts_us"),
-            F.lit(0),
-        ),
-    )
-    aggs = [
-        F.count(F.lit(1)).alias("n_events"),
-        F.round(F.max("late_us") / 1e6, 1).alias("max_late_s"),
-        F.round(F.expr("percentile(late_us, 0.99)") / 1e6, 1).alias(
-            "p99_late_s"
-        ),
-    ]
-    for m in WM_CANDIDATES_MIN:
-        aggs.append(
-            F.sum(
-                (F.col("late_us") > m * 60 * 1_000_000).cast("long")
-            ).alias(f"dropped_{m}m")
-        )
-    return late.groupBy("event_type").agg(*aggs)
 
 
 ATTR_WINDOW_US = 7 * 24 * 3600 * 1_000_000  # last-touch lookback: 7 days
@@ -1037,8 +752,8 @@ PR_D_NUM, PR_D_DEN = 85, 100  # damping 0.85 as a ratio
 def pagerank_event_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank over the event-type transition graph, integer-exact.
 
-    Edges are consecutive-event transitions per user (the Markov graph
-    `ext_event_transitions` normalizes); PR_ITERS power iterations run
+    Edges are consecutive-event transitions per user (the event-type
+    Markov graph); PR_ITERS power iterations run
     with all mass in integer ppm — floor(d·pr·cnt / out) per edge, so
     every sum is exactly associative and the result is deterministic
     under any partitioning (the kmeans_refine determinism pattern
@@ -1106,363 +821,6 @@ def pagerank_event_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pr.select(F.col("node").alias("event_type"), F.col("pr").alias("pr_ppm"))
 
 
-AB_CONV_VALUE = 180.0  # high-value-purchase conversion threshold
-
-
-def ab_test_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A/B experiment readout: deterministic hash split, per-variant
-    conversion, two-proportion pooled z-score.
-
-    Users split by salted hash (the assignment every experiment
-    platform uses — stable, uniform, no assignment table); conversion
-    is 'did the user ever purchase'. The z-score formula uses only
-    +,-,*,/ and sqrt — all IEEE correctly-rounded, so the value is
-    bit-identical in both engines when written as the same expression
-    tree (ln/exp would NOT be; that is why the lift CI stops at z).
-    One grouped agg over users; the variant rollup is 2 rows."""
-    ev = load_table(spark, sf_dir, "events")
-    # conversion = a HIGH-VALUE purchase (> AB_CONV_VALUE): plain
-    # 'ever purchased' saturates to 100% on this fixture (pooled
-    # variance 0, z undefined); the threshold keeps both arms strictly
-    # inside (0, 1) at every sf
-    users = ev.groupBy("user_id").agg(
-        F.max(
-            (
-                (F.col("event_type") == "purchase")
-                & (F.col("value") > AB_CONV_VALUE)
-            ).cast("int")
-        ).alias("conv")
-    )
-    per = (
-        users.select(
-            (md5_long(F.col("user_id").cast("string"), salt="ab") % 2).alias(
-                "variant"
-            ),
-            "conv",
-        )
-        .groupBy("variant")
-        .agg(
-            F.count(F.lit(1)).alias("n_users"),
-            F.sum("conv").cast("long").alias("n_conv"),
-        )
-    )
-    a = per.filter(F.col("variant") == 0).select(
-        F.col("n_users").alias("n_a"), F.col("n_conv").alias("conv_a")
-    )
-    b = per.filter(F.col("variant") == 1).select(
-        F.col("n_users").alias("n_b"), F.col("n_conv").alias("conv_b")
-    )
-    j = a.crossJoin(b)
-    rate_a = F.col("conv_a") / F.col("n_a")
-    rate_b = F.col("conv_b") / F.col("n_b")
-    pool = (F.col("conv_a") + F.col("conv_b")) / (F.col("n_a") + F.col("n_b"))
-    se = F.sqrt(
-        pool * (1 - pool) * (1 / F.col("n_a") + 1 / F.col("n_b"))
-    )
-    return j.select(
-        "n_a",
-        "conv_a",
-        "n_b",
-        "conv_b",
-        F.round(rate_a, 6).alias("rate_a"),
-        F.round(rate_b, 6).alias("rate_b"),
-        F.round((rate_a - rate_b) / se, 4).alias("z_score"),
-    )
-
-
-DRIFT_BUCKET_W = 50.0  # fixed-width value buckets (domain 0..~500)
-DRIFT_BUCKETS = 10
-DRIFT_SCALE = 1_000_000  # chi-square reported as floor(1e6 * term) sum
-
-
-def drift_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distribution-drift monitor: two-sample chi-square over fixed
-    value buckets, for two deterministic sample pairs.
-
-    Pair "even_odd" splits events by event_id parity (a null
-    comparison — the statistic should be small) and "half_month" by
-    day-of-month halves (where real temporal drift would show). The
-    chi-square sum uses per-term floor(1e6 · (O−E)²/E) so the output
-    is an exactly-reproducible integer — the drift DASHBOARD number,
-    comparable across runs and engines (a float chi2 would be
-    reduction-order-dependent). One conditional aggregate per pair
-    over fixed-width buckets: map-side combinable, no shuffle beyond
-    the bucket rollup; the bucket table is constant-width at any
-    scale."""
-    ev = load_table(spark, sf_dir, "events")
-    bucket = F.least(
-        F.floor(F.col("value") / DRIFT_BUCKET_W).cast("long"),
-        F.lit(DRIFT_BUCKETS - 1),
-    )
-
-    def one_pair(name: str, ref_cond, cur_cond) -> DataFrame:
-        per = ev.groupBy(bucket.alias("bucket")).agg(
-            F.sum(ref_cond.cast("long")).alias("a"),
-            F.sum(cur_cond.cast("long")).alias("b"),
-        )
-        tot = per.agg(
-            F.sum("a").alias("na"), F.sum("b").alias("nb")
-        )
-        j = per.crossJoin(F.broadcast(tot)).filter(F.col("a") + F.col("b") > 0)
-        ea = (
-            (F.col("a") + F.col("b"))
-            * F.col("na")
-            / (F.col("na") + F.col("nb"))
-        )
-        eb = (
-            (F.col("a") + F.col("b"))
-            * F.col("nb")
-            / (F.col("na") + F.col("nb"))
-        )
-        term = F.floor(
-            F.lit(DRIFT_SCALE) * (F.col("a") - ea) * (F.col("a") - ea) / ea
-        ) + F.floor(
-            F.lit(DRIFT_SCALE) * (F.col("b") - eb) * (F.col("b") - eb) / eb
-        )
-        return j.agg(
-            F.lit(name).alias("pair"),
-            F.max("na").alias("n_ref"),
-            F.max("nb").alias("n_cur"),
-            F.count(F.lit(1)).alias("n_buckets"),
-            F.sum(term).cast("long").alias("chi2_scaled"),
-        )
-
-    even = one_pair(
-        "even_odd",
-        F.col("event_id") % 2 == 0,
-        F.col("event_id") % 2 == 1,
-    )
-    halves = one_pair(
-        "half_month",
-        F.dayofmonth("ts") <= 15,
-        F.dayofmonth("ts") > 15,
-    )
-    return even.unionByName(halves)
-
-
-SLO_PPM = 50_000  # error budget: 5% of events may be errors
-SLO_WINDOW_D = 7  # trailing burn window (days)
-
-
-def slo_burn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SRE error-budget burn: daily error rate + trailing 7-day burn
-    vs the SLO, with breach flags.
-
-    Rates are integer ppm (floor(1e6·errors/events)) so the report is
-    exactly reproducible; the trailing window runs over the
-    days-cardinality rollup (tiny at any scale — the raw-event pass
-    is one map-side-combinable conditional aggregate). The burn window
-    requires a FULL window (n_days = 7) before flagging, mirroring
-    the breakout screen's warm-up rule."""
-    from pyspark.sql import Window
-
-    ev = load_table(spark, sf_dir, "events")
-    daily = ev.groupBy(F.date_format("ts", "yyyy-MM-dd").alias("day")).agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.sum((F.col("event_type") == "error").cast("long")).alias("n_errors"),
-    )
-    # bounded global window: calendar-days ladder (~thousands of rows)
-    w = Window.orderBy("day").rowsBetween(-(SLO_WINDOW_D - 1), 0)
-    burn = F.floor(
-        F.lit(1_000_000) * F.sum("n_errors").over(w) / F.sum("n_events").over(w)
-    ).cast("long")
-    return daily.select(
-        "day",
-        "n_events",
-        "n_errors",
-        F.floor(F.lit(1_000_000) * F.col("n_errors") / F.col("n_events"))
-        .cast("long")
-        .alias("err_ppm"),
-        burn.alias("burn7_ppm"),
-        F.count(F.lit(1)).over(w).alias("n_days"),
-    ).select(
-        "day",
-        "n_events",
-        "n_errors",
-        "err_ppm",
-        "burn7_ppm",
-        (
-            (F.col("n_days") == SLO_WINDOW_D)
-            & (F.col("burn7_ppm") > SLO_PPM)
-        )
-        .cast("int")
-        .alias("breach"),
-    )
-
-
-RFM_BUCKETS = 4  # quartile scores per dimension
-
-
-def rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RFM customer segmentation over purchase events.
-
-    Per user: Recency (days from last purchase to the corpus horizon),
-    Frequency (purchase count), Monetary (integer cents); each scored
-    into quartiles with deterministic (metric, user_id) tie-breaks,
-    then labeled champion / loyal / at_risk / other by the standard
-    score rules. The horizon is max(ts) over the corpus — a 1-row
-    broadcast scalar, not a driver-side collect. The three quartile
-    scores are exact ntile replays (ntile_expr) on range-partitioned
-    global ranks (range_prefix) — the users ladder never funnels
-    through a single-partition window sort; segments are a
-    projection."""
-    ev = load_table(spark, sf_dir, "events")
-    purchases = ev.filter(F.col("event_type") == "purchase")
-    per_user = purchases.groupBy("user_id").agg(
-        F.max(F.unix_micros("ts")).alias("last_us"),
-        F.count(F.lit(1)).alias("frequency"),
-        F.sum(F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")).alias(
-            "monetary_cents"
-        ),
-    )
-    horizon = purchases.agg(F.max(F.unix_micros("ts")).alias("h_us"))
-    base = per_user.crossJoin(F.broadcast(horizon)).select(
-        "user_id",
-        F.floor((F.col("h_us") - F.col("last_us")) / 86_400_000_000)
-        .cast("long")
-        .alias("recency_days"),
-        "frequency",
-        "monetary_cents",
-    )
-    # three independent global ranks (low recency / high frequency /
-    # high monetary = best); desc orders ride as negated sort keys
-    ranked = range_prefix(
-        base, ["recency_days", "user_id"], rank_col="r_rnk",
-        total_rows_col="_n",
-    )
-    ranked = range_prefix(
-        ranked.withColumn("_negf", -F.col("frequency")),
-        ["_negf", "user_id"],
-        rank_col="f_rnk",
-    )
-    ranked = range_prefix(
-        ranked.withColumn("_negm", -F.col("monetary_cents")),
-        ["_negm", "user_id"],
-        rank_col="m_rnk",
-    )
-    scored = ranked.select(
-        "user_id",
-        "recency_days",
-        "frequency",
-        "monetary_cents",
-        ntile_expr("r_rnk", "_n", RFM_BUCKETS).cast("long").alias("r_score"),
-        ntile_expr("f_rnk", "_n", RFM_BUCKETS).cast("long").alias("f_score"),
-        ntile_expr("m_rnk", "_n", RFM_BUCKETS).cast("long").alias("m_score"),
-    )
-    return scored.withColumn(
-        "segment",
-        F.when(
-            (F.col("r_score") == 1)
-            & (F.col("f_score") == 1)
-            & (F.col("m_score") == 1),
-            "champion",
-        )
-        .when((F.col("r_score") <= 2) & (F.col("f_score") <= 2), "loyal")
-        .when(F.col("r_score") == RFM_BUCKETS, "at_risk")
-        .otherwise("other"),
-    )
-
-
-def repeat_purchase_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Repeat-purchase rate by acquisition month: of the customers whose
-    FIRST order fell in month M, what fraction ever ordered again —
-    the one-number growth metric behind every cohort chart. Two
-    map-side-combinable aggregations (per-customer first date + order
-    count, then per-month rollup); rate in integer ppm."""
-    orders = load_table(spark, sf_dir, "orders")
-    per_cust = orders.groupBy("o_custkey").agg(
-        F.date_format(F.min("o_orderdate"), "yyyy-MM").alias("cohort_month"),
-        F.count(F.lit(1)).alias("n_orders"),
-    )
-    return per_cust.groupBy("cohort_month").agg(
-        F.count(F.lit(1)).alias("n_customers"),
-        F.sum((F.col("n_orders") > 1).cast("long")).alias("n_repeaters"),
-        F.floor(
-            F.sum((F.col("n_orders") > 1).cast("long"))
-            * 1_000_000
-            / F.count(F.lit(1))
-        )
-        .cast("long")
-        .alias("repeat_ppm"),
-    )
-
-
-def inactivity_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Inter-event gap distribution in power-of-two microsecond buckets
-    — the evidence behind a sessionization gap choice (the 30-minute
-    constant in ext_session_paths should sit past the histogram's
-    elbow). Bucket = floor(log2(gap_us)) computed EXACTLY as
-    length(bin(gap)) - 1 — integer string arithmetic, no float log
-    whose last-ulp could flip a power-of-two boundary differently per
-    engine. One keyed window (lag per user), then a buckets-sized
-    rollup."""
-    from pyspark.sql import Window
-
-    ev = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gaps = (
-        ev.select(
-            "user_id",
-            "ts",
-            "event_id",
-            (
-                F.unix_micros("ts")
-                - F.unix_micros(F.lag("ts").over(w))
-            ).alias("gap_us"),
-        )
-        .filter(F.col("gap_us").isNotNull() & (F.col("gap_us") > 0))
-    )
-    bucket = (F.length(F.bin("gap_us")) - 1).cast("long")
-    return gaps.groupBy(bucket.alias("log2_gap_us")).agg(
-        F.count(F.lit(1)).alias("n_gaps"),
-        F.min("gap_us").alias("min_gap_us"),
-        F.max("gap_us").alias("max_gap_us"),
-    )
-
-
-def time_to_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Click→purchase latency distribution: for every purchase, the
-    time since the SAME user's most recent prior click, bucketed into
-    power-of-two microsecond classes (exact length(bin(gap))
-    arithmetic, like ext_inactivity_histogram). The funnel-latency
-    metric behind attribution-window choices: the 1-hour horizon in
-    the stream-stream join should cover the histogram's mass. Plan:
-    one keyed window over the (click|purchase) union carries the last
-    click time onto each purchase — the PIT construction again, no
-    interval join."""
-    from pyspark.sql import Window
-
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("event_type").isin("click", "purchase")
-    )
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    last_click = F.max(
-        F.when(F.col("event_type") == "click", F.unix_micros("ts"))
-    ).over(w)
-    gaps = (
-        ev.withColumn("last_click_us", last_click)
-        .filter(
-            (F.col("event_type") == "purchase")
-            & F.col("last_click_us").isNotNull()
-        )
-        .select(
-            (F.unix_micros("ts") - F.col("last_click_us")).alias("gap_us")
-        )
-        .filter(F.col("gap_us") > 0)
-    )
-    bucket = (F.length(F.bin("gap_us")) - 1).cast("long")
-    return gaps.groupBy(bucket.alias("log2_latency_us")).agg(
-        F.count(F.lit(1)).alias("n_conversions")
-    )
-
-
-HHI_REGION_TABLE = "supplier"
-
-
 def supplier_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Market-concentration (Herfindahl) index per supplier nation:
     HHI_ppm = floor(Σ rev_i² · 1e6 / (Σ rev_i)²) over each nation's
@@ -1519,8 +877,8 @@ def interval_union_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     running-max window and the island rollup; rows stay thin
     (user_id, start, end). Per-user state is a single running max —
     no island materializes more than its member rows, no driver
-    participation. The sweep-line cousin (`concurrency_sweep`) answers
-    "how many open now"; this answers "how long was anything open".
+    participation. A sweep line would answer "how many open now"; this
+    answers "how long was anything open".
     """
     from pyspark.sql import Window
 
@@ -1779,75 +1137,6 @@ def bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bitmap.join(F.broadcast(exact), "event_type")
 
 
-def ols_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-priority OLS trend of daily order revenue on the calendar
-    day index: slope (cents/day), intercept and R² from the normal-
-    equation closed form, with every moment an exact DECIMAL(38,0)
-    sum of integers (x = epoch day, y = cents) — the same
-    order-of-accumulation-proof construction as `ext_autocorr_daily`,
-    extended from correlation to regression. Both engines evaluate
-    the IDENTICAL expression tree over the exact moments, so the
-    doubles agree to the bit before rounding.
-
-    Scale notes (100 TB): the (priority, day) rollup is the only
-    fact-sized pass (map-side combined); the five moments per group
-    reduce to one row each, and the closed form is driver-free
-    arithmetic on those rows. This is how you regress on 100 TB
-    without MLlib: aggregate moments, not rows.
-    """
-    dec = "decimal(19,0)"
-    daily = (
-        load_table(spark, sf_dir, "orders")
-        .select(
-            "o_orderpriority",
-            F.datediff(
-                F.to_date("o_orderdate"), F.lit("1970-01-01")
-            ).alias("xd"),
-            F.floor(F.col("o_totalprice") * 100 + 0.5)
-            .cast("long")
-            .alias("cents"),
-        )
-        .groupBy("o_orderpriority", "xd")
-        .agg(F.sum("cents").alias("rev"))
-        .select(
-            "o_orderpriority",
-            F.col("xd").cast(dec).alias("x"),
-            F.col("rev").cast(dec).alias("y"),
-        )
-    )
-    m = daily.groupBy("o_orderpriority").agg(
-        F.count(F.lit(1)).cast("decimal(38,0)").alias("n"),
-        F.sum("x").alias("sx"),
-        F.sum("y").alias("sy"),
-        F.sum(F.col("x") * F.col("y")).alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).alias("sxx"),
-        F.sum(F.col("y") * F.col("y")).alias("syy"),
-    )
-    num = (F.col("n") * F.col("sxy")).cast("double") - (
-        F.col("sx") * F.col("sy")
-    ).cast("double")
-    den = (F.col("n") * F.col("sxx")).cast("double") - (
-        F.col("sx") * F.col("sx")
-    ).cast("double")
-    deny = (F.col("n") * F.col("syy")).cast("double") - (
-        F.col("sy") * F.col("sy")
-    ).cast("double")
-    return m.select(
-        "o_orderpriority",
-        F.col("n").cast("long").alias("n_days"),
-        F.round(num / den, 6).alias("slope_cents_per_day"),
-        F.round(
-            (
-                F.col("sy").cast("double")
-                - num / den * F.col("sx").cast("double")
-            )
-            / F.col("n").cast("double"),
-            2,
-        ).alias("intercept_cents"),
-        F.round(num * num / (den * deny), 6).alias("r2"),
-    )
-
-
 def weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Revenue-weighted median quantity per return flag: the smallest
     quantity q where the cumulative revenue of rows with quantity ≤ q
@@ -1976,9 +1265,9 @@ def audience_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     (type, key-hash) rows — the join key is the member, so the shuffle
     is set-sized, not event-sized, and each member contributes at most
     |types|² pair rows (types is small). Per-type sizes broadcast back
-    onto the tiny pair table. For hundreds of segments, switch to the
-    sketch route (`ext_kmv_intersection`) — same shape, constant-size
-    state per segment.
+    onto the tiny pair table. For hundreds of segments, switch to a
+    bottom-k sketch per segment (`ext_kmv_distinct`) — same shape,
+    constant-size state per segment.
     """
     keys = load_table(spark, sf_dir, "events").select(
         "event_type",
@@ -2029,103 +1318,6 @@ def audience_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def kmv_intersection(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Theta-sketch-style set intersection from KMV bottom-K sketches:
-    for each event-type pair, intersect the two sketches, keep common
-    hashes below θ = min(θ_a, θ_b) (θ of a saturated sketch is its
-    K-th value; of an unsaturated one, 1.0 — it holds the whole set),
-    and estimate |A∩B| ≈ |common < θ| / θ. The exact intersection
-    (from `ext_audience_overlap`'s construction) rides along, so the
-    artifact shows the estimator error the sketch trades for its
-    constant size. Deterministic end-to-end — same salted hash, no
-    randomness.
-
-    Scale notes (100 TB): this is the whole point of the sketch — the
-    pairwise stage touches only K-row sketches (segments × K longs,
-    broadcastable for thousands of segments), never the member sets.
-    Building the sketches is the same mergeable bottom-K pass as
-    `ext_kmv_distinct`.
-    """
-    from pyspark.sql import Window
-
-    keys = load_table(spark, sf_dir, "events").select(
-        "event_type",
-        F.concat_ws(
-            ":",
-            F.col("user_id").cast("string"),
-            F.date_format("ts", "yyyy-MM-dd"),
-        ).alias("key"),
-    )
-    hashed = keys.select(
-        "event_type", md5_long(F.col("key"), salt="kmv").alias("h")
-    ).distinct()
-    w = Window.partitionBy("event_type").orderBy("h")
-    sk = hashed.withColumn("rn", F.row_number().over(w)).filter(
-        F.col("rn") <= KMV_K
-    )
-    theta = sk.groupBy("event_type").agg(
-        F.when(F.count(F.lit(1)) < KMV_K, F.lit(1 << 60))
-        .otherwise(F.max("h"))
-        .alias("theta")
-    )
-    a, b = sk.alias("a"), sk.alias("b")
-    ta = theta.select(
-        F.col("event_type").alias("type_a"),
-        F.col("theta").alias("theta_a"),
-    )
-    tb = theta.select(
-        F.col("event_type").alias("type_b"),
-        F.col("theta").alias("theta_b"),
-    )
-    common = (
-        a.join(b, F.col("a.h") == F.col("b.h"))
-        .filter(F.col("a.event_type") < F.col("b.event_type"))
-        .select(
-            F.col("a.event_type").alias("type_a"),
-            F.col("b.event_type").alias("type_b"),
-            F.col("a.h").alias("h"),
-        )
-        .join(F.broadcast(ta), "type_a")
-        .join(F.broadcast(tb), "type_b")
-        .filter(F.col("h") < F.least("theta_a", "theta_b"))
-        .groupBy("type_a", "type_b")
-        .agg(
-            F.count(F.lit(1)).alias("n_below"),
-            F.max(F.least("theta_a", "theta_b")).alias("theta"),
-        )
-    )
-    exact_full = (
-        hashed.alias("x")
-        .join(
-            hashed.alias("y"), F.col("x.h") == F.col("y.h")
-        )
-        .filter(F.col("x.event_type") < F.col("y.event_type"))
-        .groupBy(
-            F.col("x.event_type").alias("type_a"),
-            F.col("y.event_type").alias("type_b"),
-        )
-        .agg(F.count(F.lit(1)).alias("n_inter_exact"))
-    )
-    est = F.col("n_below") / (
-        F.col("theta").cast("double") / F.lit(_MAX60)
-    )
-    return (
-        exact_full.join(F.broadcast(common), ["type_a", "type_b"])
-        .select(
-            "type_a",
-            "type_b",
-            "n_inter_exact",
-            F.round(est, 4).alias("kmv_est"),
-            F.round(
-                (est - F.col("n_inter_exact"))
-                * 100.0
-                / F.col("n_inter_exact"),
-                4,
-            ).alias("err_pct"),
-        )
-    )
-
-
 def sliding_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trailing-7-day distinct users per day, computed with mergeable
     chunk bitmaps instead of 7 overlapping COUNT(DISTINCT) passes:
@@ -2141,9 +1333,8 @@ def sliding_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     tiny (days × active-chunks) state by the window length, never the
     events. Window length W costs ×W state — for W=90 switch to a
     two-level day→week pyramid (OR of 13 weekly masks + edge days).
-    Compare `ext_running_distinct_users` (cumulative exact via min
-    first-seen day) — that trick cannot do sliding windows; bitmaps
-    can.
+    A cumulative count (min first-seen day per user) cannot do
+    sliding windows; bitmaps can.
     """
     ev = load_table(spark, sf_dir, "events").select(
         F.to_date("ts").alias("day"),
@@ -2173,50 +1364,6 @@ def sliding_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.date_format("day", "yyyy-MM-dd").alias("day"),
             "n_distinct_7d",
         )
-    )
-
-
-def burstiness_fano(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Burstiness screen per event type: the Fano factor
-    (variance/mean) of the DAILY event counts — ≈1 for a Poisson
-    (memoryless) stream, ≫1 for bursty traffic, ≪1 for throttled/
-    regular traffic. Sample variance comes from exact integer moments
-    ((n·Σx² − (Σx)²)/(n·(n−1))), so the statistic is accumulation-
-    order-proof like `ext_ols_trend`. The classifier column applies
-    the conventional 0.9/1.1 cutoffs.
-
-    Scale notes (100 TB): daily counts are a map-side-combined
-    rollup; the moments reduce dates-sized rows to one row per type.
-    Nothing here ever holds more than (types × days) thin rows.
-    """
-    daily = (
-        load_table(spark, sf_dir, "events")
-        .groupBy(
-            "event_type", F.date_format("ts", "yyyy-MM-dd").alias("day")
-        )
-        .agg(F.count(F.lit(1)).cast("decimal(19,0)").alias("c"))
-    )
-    m = daily.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("decimal(19,0)").alias("n"),
-        F.sum("c").alias("s"),
-        F.sum(F.col("c") * F.col("c")).alias("ss"),
-    )
-    var = (
-        (F.col("n") * F.col("ss")).cast("double")
-        - (F.col("s") * F.col("s")).cast("double")
-    ) / (F.col("n") * (F.col("n") - 1)).cast("double")
-    mean = F.col("s").cast("double") / F.col("n").cast("double")
-    fano = var / mean
-    return m.select(
-        "event_type",
-        F.col("n").cast("long").alias("n_days"),
-        F.round(mean, 4).alias("mean_daily"),
-        F.round(var, 4).alias("var_daily"),
-        F.round(fano, 4).alias("fano"),
-        F.when(fano > 1.1, F.lit("bursty"))
-        .when(fano < 0.9, F.lit("regular"))
-        .otherwise(F.lit("poisson-like"))
-        .alias("regime"),
     )
 
 
@@ -2334,84 +1481,6 @@ def equidepth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EQA_ACC = 100  # percentile_approx accuracy → rank error <= n/EQA_ACC
-
-
-def equidepth_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Equi-depth histogram with t-digest-style APPROXIMATE boundaries
-    — the documented 100-TB path of `ext_equidepth_histogram`, shipped
-    with a PROVEN depth-tolerance certificate (the
-    `ext_quantile_sketch` pattern): boundaries come from Spark's
-    mergeable `percentile_approx` sketch (one pass, constant memory
-    per executor, rank error <= n/accuracy guaranteed); assignment is
-    the identical broadcast-bounds scan expression; and one exact
-    counting pass certifies every bucket's realized depth against the
-    guarantee. The approximate boundary VALUES are sketch-internal
-    (they depend on merge order) and never emitted — the output
-    (bucket, n_rows, target_depth, tol, depth_ok) is fully
-    deterministic, so DuckDB hash-matches it by recomputing n, the
-    target spacing, the tolerance, and expecting TRUE.
-
-    Why the bound holds: boundary i's returned value has rank within
-    n/ACC of ceil(i·n/B), so bucket i's realized count — the gap
-    between two consecutive boundary ranks — deviates from its exact
-    spacing by at most 2·n/ACC (each edge contributes n/ACC), plus
-    <= 1 row per edge for ties sitting exactly on a boundary value:
-    tol = 2·floor(n/ACC) + 2.
-
-    Scale notes (100 TB): this REPLACES the exact operator's
-    distinct-value ladder with a constant-size mergeable sketch — no
-    per-value shuffle at all. The plan is: one map-side-combined
-    sketch aggregate (B−1 boundaries out), broadcast of B−1 longs,
-    one scan for assignment, one B-row agg. The certificate pass
-    exists to make the approximation falsifiable; production drops
-    it."""
-    li = (
-        ensure_min_partitions(load_table(spark, sf_dir, "lineitem"))
-        .select(
-            F.floor(F.col("l_extendedprice") * 100 + 0.5)
-            .cast("long")
-            .alias("pc")
-        )
-        .localCheckpoint()  # consumed by sketch AND assignment: decode once
-    )
-    qs = [i / EQD_BUCKETS for i in range(1, EQD_BUCKETS)]
-    bounds = li.agg(
-        F.percentile_approx("pc", qs, F.lit(EQA_ACC)).alias("bs"),
-        F.count(F.lit(1)).alias("n"),
-    ).select(
-        *[F.col("bs")[k].alias(f"b{k}") for k in range(EQD_BUCKETS - 1)],
-        "n",
-    )
-    bucket = sum(
-        (F.col("pc") > F.col(f"b{i}")).cast("long")
-        for i in range(EQD_BUCKETS - 1)
-    )
-    tol = 2 * F.floor(F.col("n") / EQA_ACC).cast("long") + 2
-    return (
-        li.crossJoin(F.broadcast(bounds))
-        .groupBy(bucket.alias("bucket"))
-        .agg(
-            F.count(F.lit(1)).alias("depth"),
-            F.max("n").alias("n"),
-        )
-        .select(
-            "bucket",
-            F.col("n").alias("n_rows"),
-            F.floor(F.col("n") / EQD_BUCKETS).cast("long")
-            .alias("target_depth"),
-            tol.alias("tol"),
-            (
-                F.abs(
-                    F.col("depth")
-                    - F.floor(F.col("n") / EQD_BUCKETS).cast("long")
-                )
-                <= tol + F.lit(1)  # +1: floor vs ceil spacing remainder
-            ).alias("depth_ok"),
-        )
-    )
-
-
 def fifo_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FIFO credit allocation per user: click values accrue a credit
     pool, purchase values consume it first-in-first-out — the classic
@@ -2496,165 +1565,6 @@ def fifo_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def peak_days(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Peak detection on daily order revenue: a day is a peak iff it
-    strictly beats both neighbors AND exceeds 1.5× its trailing
-    7-day mean — the neighbor test kills plateaus, the prominence
-    test kills noise ripples. The prominence comparison runs as
-    14·rev > 3·sum7 in exact cents (no float mean), so a boundary
-    day cannot flip between engines. Output: the peak days with
-    revenue and prominence ratio.
-
-    Scale notes (100 TB): all windows run on the dates-sized daily
-    rollup; the only fact-sized pass is the map-side-combined daily
-    sum. Same series-on-top-of-rollup shape as
-    `ext_cusum_changepoint`.
-    """
-    from pyspark.sql import Window
-
-    daily = (
-        load_table(spark, sf_dir, "orders")
-        .groupBy(F.date_format("o_orderdate", "yyyy-MM-dd").alias("day"))
-        .agg(
-            F.sum(
-                F.floor(F.col("o_totalprice") * 100 + 0.5).cast("long")
-            ).alias("rev")
-        )
-    )
-    # bounded global window: calendar-days ladder (~thousands of rows)
-    wo = Window.orderBy("day")
-    sum7 = F.sum("rev").over(wo.rowsBetween(-6, 0))
-    n7 = F.count(F.lit(1)).over(wo.rowsBetween(-6, 0))
-    scored = daily.select(
-        "day",
-        "rev",
-        F.lag("rev", 1).over(wo).alias("prev"),
-        F.lead("rev", 1).over(wo).alias("nxt"),
-        sum7.alias("s7"),
-        n7.alias("n7"),
-    ).filter(
-        (F.col("rev") > F.col("prev"))
-        & (F.col("rev") > F.col("nxt"))
-        & (F.col("n7") == 7)
-        & (F.col("rev") * 14 > F.col("s7") * 3)
-    )
-    return scored.select(
-        "day",
-        F.round(F.col("rev") / 100.0, 2).alias("rev_usd"),
-        F.round(F.col("rev") * 7.0 / F.col("s7"), 4).alias(
-            "prominence"
-        ),
-    )
-
-
-DID_CUT = "2024-01-16"  # pre/post boundary (events span Jan 2024)
-
-
-def diff_in_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Difference-in-differences on purchase value: treatment is a
-    deterministic hash split of users, periods split at DID_CUT, and
-    the estimator is (T_post − T_pre) − (C_post − C_pre) on mean
-    purchase value — the design that removes both the level gap
-    between arms and the common time trend, where a naive post-only
-    comparison confounds the two. All four cell means are exact-cent
-    sums over exact counts folded into ONE conditional-aggregate row,
-    so no float ever crosses a group boundary.
-
-    Scale notes (100 TB): one map-side-combined pass producing a
-    single 8-counter row; the estimator is row-local arithmetic.
-    Conditional aggregation (not 4 filtered subqueries) is what keeps
-    it one scan.
-    """
-    ev = (
-        load_table(spark, sf_dir, "events")
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            (
-                md5_long(F.col("user_id").cast("string"), salt="did") % 2
-                == 0
-            ).alias("treated"),
-            (F.date_format("ts", "yyyy-MM-dd") >= DID_CUT).alias("post"),
-            F.floor(F.col("value") * 100 + 0.5).cast("long").alias("cents"),
-        )
-    )
-
-    def cell(tr: bool, po: bool, what: str):
-        cond = (F.col("treated") == tr) & (F.col("post") == po)
-        if what == "s":
-            return F.sum(F.when(cond, F.col("cents")).otherwise(0))
-        return F.sum(F.when(cond, 1).otherwise(0))
-
-    m = ev.agg(
-        *[
-            cell(tr, po, w).alias(f"{w}_{int(tr)}{int(po)}")
-            for tr in (False, True)
-            for po in (False, True)
-            for w in ("s", "n")
-        ]
-    )
-    mean = {
-        (tr, po): F.col(f"s_{int(tr)}{int(po)}")
-        / 100.0
-        / F.col(f"n_{int(tr)}{int(po)}")
-        for tr in (False, True)
-        for po in (False, True)
-    }
-    return m.select(
-        F.round(mean[(True, False)], 4).alias("treat_pre"),
-        F.round(mean[(True, True)], 4).alias("treat_post"),
-        F.round(mean[(False, False)], 4).alias("ctrl_pre"),
-        F.round(mean[(False, True)], 4).alias("ctrl_post"),
-        F.round(
-            (mean[(True, True)] - mean[(True, False)])
-            - (mean[(False, True)] - mean[(False, False)]),
-            4,
-        ).alias("did_usd"),
-    )
-
-
-def ab_power_mde(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Experiment design: minimum detectable effect per event type at
-    80% power / 5% α for an equal-split test on event value —
-    MDE = 2.8·√(2σ²/n)/mean (the standard two-sample approximation),
-    with σ² and the mean from exact integer moments. This is the
-    query an experimentation platform runs BEFORE the test, and the
-    honest answer to "can we even measure a 1% lift here"; the
-    z-score query (`ext_ab_test_zscore`) is the after.
-
-    Scale notes (100 TB): one map-side-combined moments pass, one row
-    per type — same moments-not-rows shape as `ext_ols_trend`.
-    """
-    m = (
-        load_table(spark, sf_dir, "events")
-        .select(
-            "event_type",
-            F.floor(F.col("value") * 100 + 0.5)
-            .cast("decimal(19,0)")
-            .alias("c"),
-        )
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).cast("decimal(19,0)").alias("n"),
-            F.sum("c").alias("s"),
-            F.sum(F.col("c") * F.col("c")).alias("ss"),
-        )
-    )
-    var = (
-        (F.col("n") * F.col("ss")).cast("double")
-        - (F.col("s") * F.col("s")).cast("double")
-    ) / (F.col("n") * (F.col("n") - 1)).cast("double")
-    mean = F.col("s").cast("double") / F.col("n").cast("double")
-    n_arm = F.col("n").cast("double") / 2.0
-    mde = F.lit(2.8) * F.sqrt(2.0 * var / n_arm) / mean
-    return m.select(
-        "event_type",
-        F.col("n").cast("long").alias("n_events"),
-        F.round(mean / 100.0, 4).alias("mean_usd"),
-        F.round(F.sqrt(var) / 100.0, 4).alias("stddev_usd"),
-        F.round(mde * 100.0, 4).alias("mde_pct"),
-    )
-
-
 def ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-sample Kolmogorov–Smirnov test: D = max |F_click(v) −
     F_purchase(v)| over the merged value ladder — the distribution-
@@ -2722,60 +1632,6 @@ def ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
                 6,
             ).alias("d_crit_5pct"),
         )
-    )
-
-
-VSHAPE_NUM, VSHAPE_DEN = 11, 10  # ≥10% move: 10·outer ≥ 11·bottom
-
-
-def vshape_patterns(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MATCH_RECOGNIZE-style row-pattern detection, emulated with lag
-    windows: find V-shapes in daily revenue — a ≥10% drop into a
-    bottom day immediately followed by a ≥10% recovery. Both
-    threshold tests run as integer cross-multiplication
-    (10·neighbor ≥ 11·bottom), so no float ratio ever decides a
-    match. Output: each bottom day with its drop and recovery
-    percentages. The same lag-chain technique extends to any
-    fixed-length pattern (W-shapes, three-rising-peaks, …) — the
-    relational emulation of Flink/Trino MATCH_RECOGNIZE for patterns
-    of bounded length.
-
-    Scale notes (100 TB): lag windows on the dates-sized rollup; the
-    only fact-sized pass is the daily sum. Unbounded-length patterns
-    need real state machines (see the streaming pack); bounded ones
-    compile to lag chains like this.
-    """
-    from pyspark.sql import Window
-
-    daily = (
-        load_table(spark, sf_dir, "orders")
-        .groupBy(F.date_format("o_orderdate", "yyyy-MM-dd").alias("day"))
-        .agg(
-            F.sum(
-                F.floor(F.col("o_totalprice") * 100 + 0.5).cast("long")
-            ).alias("rev")
-        )
-    )
-    # bounded global window: calendar-days ladder (~thousands of rows)
-    wo = Window.orderBy("day")
-    lagged = daily.select(
-        "day",
-        "rev",
-        F.lag("rev", 1).over(wo).alias("prev"),
-        F.lead("rev", 1).over(wo).alias("nxt"),
-    ).filter(
-        (F.col("prev") * VSHAPE_DEN >= F.col("rev") * VSHAPE_NUM)
-        & (F.col("nxt") * VSHAPE_DEN >= F.col("rev") * VSHAPE_NUM)
-    )
-    return lagged.select(
-        "day",
-        F.round(F.col("rev") / 100.0, 2).alias("bottom_usd"),
-        F.round(
-            (F.col("prev") - F.col("rev")) * 100.0 / F.col("prev"), 4
-        ).alias("drop_pct"),
-        F.round(
-            (F.col("nxt") - F.col("rev")) * 100.0 / F.col("rev"), 4
-        ).alias("recovery_pct"),
     )
 
 
@@ -3028,252 +1884,6 @@ def poisson_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round("mean", 4).alias("mean_usd"),
             F.round("lo", 4).alias("ci_lo_usd"),
             F.round("hi", 4).alias("ci_hi_usd"),
-        )
-    )
-
-
-def cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUPED variance reduction: use each user's PRE-period purchase
-    total as the covariate for their post-period metric —
-    θ = cov(X,Y)/var(X), adjusted metric Y − θ(X − X̄) — the standard
-    trick that shrinks experiment variance by exactly ρ²·100% and
-    therefore the needed sample size by the same factor (pair with
-    `ext_ab_power_mde`: CUPED is how you BUY a smaller MDE without
-    more traffic). θ and ρ² come from exact DECIMAL moments over
-    per-user integer cents (users absent in a period contribute 0 —
-    the covariate must be defined for everyone).
-
-    Scale notes (100 TB): one conditional-aggregate pass to per-user
-    (pre, post) cents, one moments pass, row-local closed form —
-    moments-not-rows again.
-    """
-    cut = DID_CUT
-    per_user = (
-        load_table(spark, sf_dir, "events")
-        .filter(F.col("event_type") == "purchase")
-        .groupBy("user_id")
-        .agg(
-            F.sum(
-                F.when(
-                    F.date_format("ts", "yyyy-MM-dd") < cut,
-                    F.floor(F.col("value") * 100 + 0.5).cast("long"),
-                ).otherwise(0)
-            )
-            .cast("decimal(19,0)")
-            .alias("x"),
-            F.sum(
-                F.when(
-                    F.date_format("ts", "yyyy-MM-dd") >= cut,
-                    F.floor(F.col("value") * 100 + 0.5).cast("long"),
-                ).otherwise(0)
-            )
-            .cast("decimal(19,0)")
-            .alias("y"),
-        )
-    )
-    m = per_user.agg(
-        F.count(F.lit(1)).cast("decimal(19,0)").alias("n"),
-        F.sum("x").alias("sx"),
-        F.sum("y").alias("sy"),
-        F.sum(F.col("x") * F.col("y")).alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).alias("sxx"),
-        F.sum(F.col("y") * F.col("y")).alias("syy"),
-    )
-    num = (F.col("n") * F.col("sxy")).cast("double") - (
-        F.col("sx") * F.col("sy")
-    ).cast("double")
-    denx = (F.col("n") * F.col("sxx")).cast("double") - (
-        F.col("sx") * F.col("sx")
-    ).cast("double")
-    deny = (F.col("n") * F.col("syy")).cast("double") - (
-        F.col("sy") * F.col("sy")
-    ).cast("double")
-    return m.select(
-        F.col("n").cast("long").alias("n_users"),
-        F.round(
-            F.col("sy").cast("double")
-            / F.col("n").cast("double")
-            / 100.0,
-            4,
-        ).alias("mean_post_usd"),
-        F.round(num / denx, 6).alias("theta"),
-        F.round(num * num / (denx * deny) * 100.0, 4).alias(
-            "var_reduction_pct"
-        ),
-    )
-
-
-def mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mann–Whitney rank-sum test (click vs purchase values) with the
-    tie correction — the distribution-free location test that pairs
-    with `ext_ks_two_sample`'s shape test. All ranking runs on the
-    distinct-value ladder in integers: doubled average ranks
-    (2·rank = 2·cum_prev + t + 1) keep tied ranks exact, the tie
-    term Σ(t³−t) is an exact integer sum, and the z-score is the
-    only float — built once from exact moments.
-
-    Scale notes (100 TB): identical shape to the KS ladder — one
-    map-side-combined value rollup, cumulative counts via
-    range_prefix (range-partitioned prefix sums — a continuous
-    column's distinct-value ladder is ~rows, so never one task;
-    round-8 verdict), a 1-row closed form.
-    """
-    ev = (
-        load_table(spark, sf_dir, "events")
-        .filter(F.col("event_type").isin("click", "purchase"))
-        .select(
-            F.floor(F.col("value") * 100 + 0.5).cast("long").alias("v"),
-            (F.col("event_type") == "click").alias("is_a"),
-        )
-    )
-    cells = ev.groupBy("v").agg(
-        F.sum(F.col("is_a").cast("long")).alias("ca"),
-        F.sum((~F.col("is_a")).cast("long")).alias("cb"),
-    )
-    ladder = range_prefix(cells, ["v"], sum_cols=("ca", "cb")).select(
-        "v",
-        "ca",
-        "cb",
-        (F.col("ca") + F.col("cb")).alias("t"),
-        # exclusive prefix of t = inclusive prefix sums minus own cell
-        (
-            F.col("cum_ca") + F.col("cum_cb") - F.col("ca") - F.col("cb")
-        ).alias("cum_prev"),
-    )
-    sums = ladder.agg(
-        F.sum("ca").alias("na"),
-        F.sum("cb").alias("nb"),
-        F.sum(
-            F.col("ca") * (2 * F.col("cum_prev") + F.col("t") + 1)
-        ).alias("r2a"),
-        F.sum(
-            F.col("t") * F.col("t") * F.col("t") - F.col("t")
-        ).alias("ties"),
-    )
-    n = F.col("na") + F.col("nb")
-    u2 = F.col("r2a") - F.col("na") * (F.col("na") + 1)
-    mu2 = F.col("na") * F.col("nb")  # 2·E[U] = na·nb
-    var = (
-        F.col("na").cast("double")
-        * F.col("nb")
-        / 12.0
-        * (
-            (n + 1).cast("double")
-            - F.col("ties").cast("double")
-            / (n.cast("double") * (n - 1).cast("double"))
-        )
-    )
-    return sums.select(
-        F.col("na"),
-        F.col("nb"),
-        (u2 / F.lit(2.0)).alias("u_a"),
-        F.round(
-            (u2 - mu2).cast("double") / (2.0 * F.sqrt(var)), 6
-        ).alias("z"),
-    )
-
-
-BH_Q = 0.10  # false-discovery-rate target
-# Abramowitz–Stegun 26.2.17 constants for Φ(x), |err| < 7.5e-8 —
-# pure +,*,/,exp arithmetic, so both engines produce identical doubles
-_AS_B = (0.319381530, -0.356563782, 1.781477937, -1.821255978, 1.330274429)
-_AS_P = 0.2316419
-_SQRT_2PI = 2.5066282746310002
-
-
-def _phi_tail(z):
-    """Upper-tail 1−Φ(z) for z ≥ 0, A&S polynomial (column expr)."""
-    k = 1.0 / (1.0 + _AS_P * z)
-    poly = (
-        _AS_B[0] * k
-        + _AS_B[1] * k * k
-        + _AS_B[2] * k * k * k
-        + _AS_B[3] * k * k * k * k
-        + _AS_B[4] * k * k * k * k * k
-    )
-    return F.exp(-z * z / 2.0) / _SQRT_2PI * poly
-
-
-def bh_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Benjamini–Hochberg FDR correction across the per-type
-    mean-value z-tests — the multiple-testing step every metrics
-    sweep needs once it tests more than one hypothesis (5 tests at
-    α=0.05 ⇒ ~23% chance of a false alarm uncorrected). p-values come
-    from the A&S 26.2.17 normal-CDF polynomial (pure arithmetic —
-    deterministic across engines, unlike a library erf); BH rejects
-    every test ranked ≤ k* = max{i : p_i ≤ i·q/m}. Moments-based z,
-    ladder logic in windows, all on m rows.
-
-    Scale notes (100 TB): one moments pass per type; everything after
-    is m-row arithmetic. The z here is one-sample vs the global mean
-    — swap in any per-group test, the BH machinery is unchanged.
-    """
-    from pyspark.sql import Window
-
-    m = (
-        load_table(spark, sf_dir, "events")
-        .select(
-            "event_type",
-            F.floor(F.col("value") * 100 + 0.5)
-            .cast("decimal(19,0)")
-            .alias("c"),
-        )
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).cast("decimal(19,0)").alias("n"),
-            F.sum("c").alias("s"),
-            F.sum(F.col("c") * F.col("c")).alias("ss"),
-        )
-    )
-    g = m.agg(
-        F.sum("n").alias("gn"),
-        F.sum("s").alias("gs"),
-        F.sum("ss").alias("gss"),
-    )
-    j = m.crossJoin(F.broadcast(g))
-    gvar = (
-        (F.col("gn") * F.col("gss")).cast("double")
-        - (F.col("gs") * F.col("gs")).cast("double")
-    ) / (F.col("gn") * (F.col("gn") - 1)).cast("double")
-    gmean = F.col("gs").cast("double") / F.col("gn").cast("double")
-    tmean = F.col("s").cast("double") / F.col("n").cast("double")
-    z = (tmean - gmean) / F.sqrt(gvar / F.col("n").cast("double"))
-    scored = j.select(
-        "event_type",
-        F.col("n").cast("long").alias("n_events"),
-        z.alias("z"),
-        (2.0 * _phi_tail(F.abs(z))).alias("p"),
-    )
-    # bounded global window: one row per distinct event_type
-    wo = Window.orderBy("p", "event_type")
-    mtot = Window.partitionBy()
-    ranked = scored.select(
-        "event_type",
-        "n_events",
-        # + 0.0 canonicalizes IEEE -0.0 (a tiny negative z rounds to
-        # the signed zero on one engine and not the other)
-        (F.round("z", 4) + 0.0).alias("z"),
-        F.round("p", 8).alias("p"),
-        F.row_number().over(wo).cast("long").alias("rank"),
-        F.count(F.lit(1)).over(mtot).alias("m"),
-    ).withColumn(
-        "bh_cut", F.col("rank") * BH_Q / F.col("m")
-    )
-    kstar = ranked.filter(F.col("p") <= F.col("bh_cut")).agg(
-        F.max("rank").alias("kstar")
-    )
-    return (
-        ranked.crossJoin(F.broadcast(kstar))
-        .select(
-            "event_type",
-            "n_events",
-            "z",
-            "p",
-            "rank",
-            F.round("bh_cut", 8).alias("bh_cut"),
-            (
-                F.col("rank") <= F.coalesce("kstar", F.lit(0))
-            ).alias("reject"),
         )
     )
 
@@ -3765,381 +2375,17 @@ def snippet_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def logrank_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Log-rank test: do two user cohorts (deterministic hash split)
-    convert at the same rate, accounting for censoring? The
-    Kaplan–Meier curve (`ext_kaplan_meier`) describes ONE arm; the
-    log-rank statistic (Σ(d₁−E₁))²/ΣV with hypergeometric E and V at
-    each event day is the hypothesis test between two. Risk sets come
-    from dur ≥ t aggregation against the (tiny) event-day list; the
-    two float sums run through qsum. Output: one row with per-arm
-    sizes, observed vs expected events and the χ²(1) statistic.
-
-    Scale notes (100 TB): same shape as KM — one user-level pass,
-    then all machinery on the day-grid × 2 arms. The event-day join
-    is broadcast (days are few); nothing data-sized is ever
-    crossed.
-    """
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id", "event_type", F.to_date("ts").alias("day")
-    )
-    per_user = (
-        ev.groupBy("user_id")
-        .agg(
-            F.min(
-                F.when(F.col("event_type") == "click", F.col("day"))
-            ).alias("t0"),
-            F.max("day").alias("last_seen"),
-        )
-        .filter(F.col("t0").isNotNull())
-    )
-    first_buy = (
-        ev.filter(F.col("event_type") == "purchase")
-        .join(per_user.select("user_id", "t0"), "user_id")
-        .filter(F.col("day") >= F.col("t0"))
-        .groupBy("user_id")
-        .agg(F.min("day").alias("t_buy"))
-    )
-    durs = per_user.join(first_buy, "user_id", "left").select(
-        (
-            md5_long(F.col("user_id").cast("string"), salt="arm") % 2
-        ).alias("arm"),
-        F.datediff(F.coalesce("t_buy", "last_seen"), F.col("t0"))
-        .cast("long")
-        .alias("dur"),
-        F.col("t_buy").isNotNull().cast("long").alias("d"),
-    )
-    cells = durs.groupBy("arm", "dur").agg(
-        F.count(F.lit(1)).alias("n_at"),
-        F.sum("d").alias("d_at"),
-    )
-    ev_days = (
-        cells.filter(F.col("d_at") > 0)
-        .select(F.col("dur").alias("t"))
-        .distinct()
-    )
-    at_t = (
-        cells.join(F.broadcast(ev_days), F.col("dur") >= F.col("t"))
-        .groupBy("t", "arm")
-        .agg(
-            F.sum("n_at").alias("n_risk"),
-            F.sum(
-                F.when(F.col("dur") == F.col("t"), F.col("d_at")).otherwise(
-                    0
-                )
-            ).alias("d_t"),
-        )
-    )
-    a1 = at_t.filter(F.col("arm") == 1).select(
-        "t", F.col("n_risk").alias("n1"), F.col("d_t").alias("d1")
-    )
-    a0 = at_t.filter(F.col("arm") == 0).select(
-        "t", F.col("n_risk").alias("n0"), F.col("d_t").alias("d0")
-    )
-    terms = a1.join(a0, "t").select(
-        "t",
-        "d1",
-        (F.col("n1") + F.col("n0")).alias("n"),
-        (F.col("d1") + F.col("d0")).alias("d"),
-        "n1",
-        "n0",
-    )
-    e1 = F.col("d").cast("double") * F.col("n1") / F.col("n")
-    v = (
-        F.col("d").cast("double")
-        * F.col("n1")
-        * F.col("n0")
-        * (F.col("n") - F.col("d"))
-        / (
-            F.col("n").cast("double")
-            * F.col("n")
-            * (F.col("n") - 1)
-        )
-    )
-    agg = terms.filter(F.col("n") > 1).agg(
-        F.sum("d1").alias("o1"),
-        _qsum(e1).alias("e1_q"),
-        _qsum(v).alias("v_q"),
-    )
-    sizes = durs.groupBy("arm").agg(F.count(F.lit(1)).alias("nu"))
-    n1u = sizes.filter(F.col("arm") == 1).select(
-        F.col("nu").alias("n_arm1")
-    )
-    n0u = sizes.filter(F.col("arm") == 0).select(
-        F.col("nu").alias("n_arm0")
-    )
-    diff = F.col("o1") - F.col("e1_q") / _NANO
-    return (
-        agg.crossJoin(F.broadcast(n1u))
-        .crossJoin(F.broadcast(n0u))
-        .select(
-            "n_arm1",
-            "n_arm0",
-            F.col("o1").alias("observed1"),
-            F.round(F.col("e1_q") / _NANO, 4).alias("expected1"),
-            F.round(
-                diff * diff / (F.col("v_q") / _NANO), 4
-            ).alias("chi2"),
-        )
-    )
-
-
-def sliding_median(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Trailing-7-day EXACT median of daily revenue — the robust
-    moving-location smoother (a moving MEAN lets one flash-sale day
-    poison a week of the series; the median shrugs). `percentile`
-    runs as a WINDOW aggregate over the ROWS frame, interpolation
-    semantics matching DuckDB quantile_cont (the parity pinned by
-    `ext_percentiles`). Only full 7-day windows emit.
-
-    Scale notes (100 TB): the window runs on the dates-sized rollup —
-    order statistics in moving frames are O(W log W) per row on
-    thousands of rows, not a fact-table concern. For value-stream
-    sliding medians at scale, the scatter-to-windows + per-window
-    exact rank trick (`ext_equidepth_histogram`'s machinery) applies.
-    """
-    from pyspark.sql import Window
-
-    daily = (
-        load_table(spark, sf_dir, "orders")
-        .groupBy(F.date_format("o_orderdate", "yyyy-MM-dd").alias("day"))
-        .agg(
-            F.sum(
-                F.floor(F.col("o_totalprice") * 100 + 0.5).cast("long")
-            ).alias("rev")
-        )
-    )
-    # bounded global window: calendar-days ladder (~thousands of rows)
-    wo = Window.orderBy("day").rowsBetween(-6, 0)
-    rolled = daily.select(
-        "day",
-        F.round(F.col("rev") / 100.0, 2).alias("rev_usd"),
-        F.round(
-            F.expr("percentile(rev, 0.5)").over(wo) / 100.0, 4
-        ).alias("med7_usd"),
-        F.count(F.lit(1)).over(wo).alias("n7"),
-    )
-    return rolled.filter(F.col("n7") == 7).drop("n7")
-
-
-def max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Maximum drawdown of the cumulative-revenue curve: the largest
-    peak-to-trough fall of the running total — the running-extremum
-    pattern (cummax of cumsum) every risk report runs, entirely in
-    exact integer cents. Output: the CUSUM_TOP deepest drawdown days
-    with the peak value and depth in basis points of the peak.
-
-    Scale notes (100 TB): two stacked unbounded-preceding windows on
-    the dates-sized series, TakeOrdered for the report — same shape
-    as `ext_cusum_changepoint`.
-    """
-    from pyspark.sql import Window
-
-    daily = (
-        load_table(spark, sf_dir, "orders")
-        .groupBy(F.date_format("o_orderdate", "yyyy-MM-dd").alias("day"))
-        .agg(
-            F.sum(
-                F.floor(F.col("o_totalprice") * 100 + 0.5).cast("long")
-            ).alias("rev")
-        )
-    )
-    # bounded global window: calendar-days ladder
-    wo = Window.orderBy("day").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    curve = daily.select(
-        "day",
-        F.sum("rev").over(wo).alias("cum"),
-    ).select(
-        "day",
-        "cum",
-        F.max("cum").over(wo).alias("peak"),
-    )
-    dd = curve.select(
-        "day",
-        F.round(F.col("cum") / 100.0, 2).alias("cum_usd"),
-        F.round(F.col("peak") / 100.0, 2).alias("peak_usd"),
-        (F.col("peak") - F.col("cum")).alias("dd_cents"),
-        F.floor(
-            (F.col("peak") - F.col("cum")).cast("double")
-            * 10000
-            / F.col("peak")
-        )
-        .cast("long")
-        .alias("dd_bps"),
-    )
-    return (
-        dd.orderBy(F.col("dd_cents").desc(), "day")
-        .limit(CUSUM_TOP)
-        .drop("dd_cents")
-    )
-
-
-def ratio_metric_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Delta-method z-test on a RATIO metric — revenue-per-click
-    between two hash-split arms. Ratio metrics (the majority of real
-    experiment metrics) violate the i.i.d. assumption a plain t-test
-    needs, because numerator and denominator share the user; the
-    delta method var(R) ≈ (σx² + R²σy² − 2Rσxy)/(n·μy²) from
-    USER-level moments is the standard correction. All moments are
-    exact DECIMAL sums of integer cents/counts; the z is one
-    mirrored expression tree.
-
-    Scale notes (100 TB): one conditional-aggregate pass to user
-    rows, one 6-moment rollup per arm, row-local closed form —
-    moments-not-rows, like OLS/CUPED.
-    """
-    per_user = (
-        load_table(spark, sf_dir, "events")
-        .filter(F.col("event_type").isin("click", "purchase"))
-        .groupBy("user_id")
-        .agg(
-            F.sum(
-                F.when(
-                    F.col("event_type") == "purchase",
-                    F.floor(F.col("value") * 100 + 0.5).cast("long"),
-                ).otherwise(0)
-            )
-            .cast("decimal(19,0)")
-            .alias("x"),
-            F.sum(
-                F.when(F.col("event_type") == "click", 1).otherwise(0)
-            )
-            .cast("decimal(19,0)")
-            .alias("y"),
-        )
-        .select(
-            (
-                md5_long(F.col("user_id").cast("string"), salt="arm") % 2
-            ).alias("arm"),
-            "x",
-            "y",
-        )
-    )
-    m = per_user.groupBy("arm").agg(
-        F.count(F.lit(1)).cast("decimal(19,0)").alias("n"),
-        F.sum("x").alias("sx"),
-        F.sum("y").alias("sy"),
-        F.sum(F.col("x") * F.col("x")).alias("sxx"),
-        F.sum(F.col("y") * F.col("y")).alias("syy"),
-        F.sum(F.col("x") * F.col("y")).alias("sxy"),
-    )
-    r = F.col("sx").cast("double") / F.col("sy").cast("double")
-    nd = F.col("n").cast("double")
-    varx = (
-        (F.col("n") * F.col("sxx")).cast("double")
-        - (F.col("sx") * F.col("sx")).cast("double")
-    ) / (F.col("n") * (F.col("n") - 1)).cast("double")
-    vary = (
-        (F.col("n") * F.col("syy")).cast("double")
-        - (F.col("sy") * F.col("sy")).cast("double")
-    ) / (F.col("n") * (F.col("n") - 1)).cast("double")
-    covxy = (
-        (F.col("n") * F.col("sxy")).cast("double")
-        - (F.col("sx") * F.col("sy")).cast("double")
-    ) / (F.col("n") * (F.col("n") - 1)).cast("double")
-    muy = F.col("sy").cast("double") / nd
-    var_r = (varx + r * r * vary - 2.0 * r * covxy) / (
-        nd * muy * muy
-    )
-    arms = m.select(
-        "arm",
-        F.col("n").cast("long").alias("n_users"),
-        r.alias("r"),
-        var_r.alias("vr"),
-    )
-    a1 = arms.filter(F.col("arm") == 1).select(
-        F.col("n_users").alias("n1"),
-        F.col("r").alias("r1"),
-        F.col("vr").alias("v1"),
-    )
-    a0 = arms.filter(F.col("arm") == 0).select(
-        F.col("n_users").alias("n0"),
-        F.col("r").alias("r0"),
-        F.col("vr").alias("v0"),
-    )
-    return a1.crossJoin(F.broadcast(a0)).select(
-        "n1",
-        "n0",
-        F.round(F.col("r1") / 100.0, 6).alias("rpc1_usd"),
-        F.round(F.col("r0") / 100.0, 6).alias("rpc0_usd"),
-        F.round(
-            (F.col("r1") - F.col("r0"))
-            / F.sqrt(F.col("v1") + F.col("v0")),
-            4,
-        ).alias("z"),
-    )
-
-
-def ltv_triangle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cohort LTV triangle: users grouped by first-seen week, each
-    cohort's CUMULATIVE purchase revenue per user tracked by age
-    week — the money companion to `ext_cohort_retention`'s count
-    matrix, and the table LTV forecasting reads its diagonals from.
-    Exact cents all the way; the per-user division happens once at
-    the end.
-
-    Scale notes (100 TB): first-seen per user is one
-    map-side-combined pass; the triangle itself is
-    (cohorts × ages)-sized, cumulated with a per-cohort window.
-    """
-    from pyspark.sql import Window
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id",
-        "event_type",
-        F.to_date("ts").alias("day"),
-        F.floor(F.col("value") * 100 + 0.5).cast("long").alias("cents"),
-    )
-    first_seen = ev.groupBy("user_id").agg(
-        F.date_trunc("week", F.min("day")).cast("date").alias("cohort")
-    )
-    sizes = first_seen.groupBy("cohort").agg(
-        F.count(F.lit(1)).alias("n_users")
-    )
-    rev = (
-        ev.filter(F.col("event_type") == "purchase")
-        .join(first_seen, "user_id")
-        .groupBy(
-            "cohort",
-            F.floor(
-                F.datediff(F.col("day"), F.col("cohort")) / 7
-            )
-            .cast("long")
-            .alias("age_week"),
-        )
-        .agg(F.sum("cents").alias("rev"))
-    )
-    wo = Window.partitionBy("cohort").orderBy("age_week").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    return (
-        rev.withColumn("cum", F.sum("rev").over(wo))
-        .join(F.broadcast(sizes), "cohort")
-        .select(
-            F.date_format("cohort", "yyyy-MM-dd").alias("cohort"),
-            "age_week",
-            "n_users",
-            F.round(
-                F.col("cum").cast("double") / 100.0 / F.col("n_users"),
-                4,
-            ).alias("cum_ltv_usd"),
-        )
-    )
-
-
 TS_MAX_OFFSET = 60  # banded Theil-Sen: pair days at most this far apart
 
 
 def mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mann–Kendall monotonic-trend test on daily revenue — the
     distribution-free significance companion to the trend ESTIMATORS
-    (`ext_ols_trend` fits a line, `ext_theil_sen_slope` fits it
-    robustly; this answers "is there a trend AT ALL" without assuming
-    linearity or normality). S = Σ_{i<j} sign(rev_j − rev_i) over day
-    pairs, tie-corrected variance Var = [n(n−1)(2n+5) −
-    Σ_g t_g(t_g−1)(2t_g+5)]/18, continuity-corrected z.
+    (`ext_theil_sen_slope` fits a line robustly; this answers "is there
+    a trend AT ALL" without assuming linearity or normality).
+    S = Σ_{i<j} sign(rev_j − rev_i) over day pairs, tie-corrected
+    variance Var = [n(n−1)(2n+5) − Σ_g t_g(t_g−1)(2t_g+5)]/18,
+    continuity-corrected z.
 
     Exactness: S and the ×18 variance numerator are pure BIGINT
     arithmetic; z is the identical three-op IEEE sequence
@@ -4218,8 +2464,8 @@ def theil_sen_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Banded Theil–Sen robust trend: the MEDIAN of pairwise revenue
     slopes across day pairs at most TS_MAX_OFFSET apart — the
     windowed variant of the 29.3%-breakdown estimator that shrugs
-    off the outlier days dragging `ext_ols_trend`'s least-squares
-    line (the OLS slope rides along for contrast). Banding is not
+    off the outlier days dragging a least-squares line (the OLS
+    slope rides along for contrast). Banding is not
     just an optimization: short-offset slopes weight local trend
     over level shifts, and it turns the O(days²) pair set into
     O(days·W) — this IS the estimator long series run. Slopes are
@@ -4392,7 +2638,7 @@ def shapley_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 def journey_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Journey predictability: the conditional entropy of the NEXT
     event given the current one, per state — the information-theoretic
-    summary of `ext_event_transitions`' matrix (H ≈ 0: railroad
+    summary of the event-type transition matrix (H ≈ 0: railroad
     journeys, a next-step cache would hit; H ≈ ln k: anything can
     happen). Per-state H = −Σ_j (c_ij/c_i)·ln(c_ij/c_i) reduces
     through qsum; h_norm divides by ln(branches) into [0,1].
@@ -4439,467 +2685,6 @@ def journey_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
             6,
         ).alias("h_norm"),
     )
-
-
-PERM_B = 200  # permutation replicates
-
-
-def permutation_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Permutation test on per-user purchase totals between the two
-    hash arms — exact-inference sibling of the z/t machinery: the
-    null distribution is built by RELABELING users (hash-derived
-    labels per replicate, so deterministic), and the p-value is the
-    add-one-smoothed fraction of replicates at least as extreme as
-    the observed mean difference. No normality assumption anywhere —
-    the test the small-n / skewed-metric case needs.
-
-    Scale notes (100 TB): users × PERM_B thin explode feeding one
-    conditional-aggregate pass (map-side combined); every replicate
-    statistic is a 4-sum closed form. Same ×B economics as the
-    Poisson bootstrap.
-    """
-    per_user = (
-        load_table(spark, sf_dir, "events")
-        .filter(F.col("event_type") == "purchase")
-        .groupBy("user_id")
-        .agg(
-            F.sum(
-                F.floor(F.col("value") * 100 + 0.5).cast("long")
-            ).alias("x")
-        )
-    )
-    obs = per_user.select(
-        (
-            md5_long(F.col("user_id").cast("string"), salt="arm") % 2
-        ).alias("arm"),
-        "x",
-    ).agg(
-        F.count(F.lit(1)).alias("n_users"),
-        (
-            F.sum(F.when(F.col("arm") == 1, F.col("x")).otherwise(0))
-            / F.sum(F.when(F.col("arm") == 1, 1).otherwise(0))
-            - F.sum(F.when(F.col("arm") == 0, F.col("x")).otherwise(0))
-            / F.sum(F.when(F.col("arm") == 0, 1).otherwise(0))
-        ).alias("obs"),
-    )
-    reps = per_user.select(
-        "user_id",
-        "x",
-        F.explode(F.sequence(F.lit(1), F.lit(PERM_B))).alias("b"),
-    ).select(
-        "b",
-        "x",
-        (
-            md5_long(
-                F.concat_ws("#", F.col("user_id"), F.col("b")),
-                salt="perm",
-            )
-            % 2
-        ).alias("arm"),
-    )
-    stats = reps.groupBy("b").agg(
-        (
-            F.sum(F.when(F.col("arm") == 1, F.col("x")).otherwise(0))
-            / F.sum(F.when(F.col("arm") == 1, 1).otherwise(0))
-            - F.sum(F.when(F.col("arm") == 0, F.col("x")).otherwise(0))
-            / F.sum(F.when(F.col("arm") == 0, 1).otherwise(0))
-        ).alias("stat")
-    )
-    extreme = stats.crossJoin(F.broadcast(obs)).agg(
-        F.sum(
-            (F.abs(F.col("stat")) >= F.abs(F.col("obs")))
-            .cast("long")
-        ).alias("n_extreme")
-    )
-    return (
-        obs.crossJoin(F.broadcast(extreme))
-        .select(
-            "n_users",
-            F.round(F.col("obs") / 100.0, 4).alias("obs_diff_usd"),
-            F.lit(PERM_B).cast("long").alias("n_perms"),
-            F.round(
-                (F.col("n_extreme") + 1.0) / (PERM_B + 1.0), 4
-            ).alias("p_value"),
-        )
-    )
-
-
-DECAY_HALF_LIFE_D = 7.0  # engagement half-life in days
-DECAY_TOPK = 25
-
-
-def decayed_engagement(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Time-decayed engagement scoring: each event contributes
-    2^(−age/half-life) — the recency weighting every recommender /
-    churn feature store runs, where a raw count says a user who
-    binged last year equals one active yesterday. Decayed event mass
-    and decayed purchase revenue accumulate through qsum (exp terms
-    are floats; quantized longs make the sums order-proof). Output:
-    the DECAY_TOPK most-engaged users, scored as of the corpus' last
-    day.
-
-    Scale notes (100 TB): pure projection + one map-side-combined
-    user rollup + TakeOrdered; the as-of anchor is a broadcast
-    1-row max. Incremental refresh multiplies yesterday's scores by
-    the day factor and adds the new day — the same associativity the
-    quantization relies on.
-    """
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id",
-        "event_type",
-        F.to_date("ts").alias("day"),
-        F.floor(F.col("value") * 100 + 0.5).cast("long").alias("cents"),
-    )
-    anchor = ev.agg(F.max("day").alias("d0"))
-    aged = ev.crossJoin(F.broadcast(anchor)).withColumn(
-        "w",
-        F.pow(
-            F.lit(2.0),
-            -F.datediff(F.col("d0"), F.col("day"))
-            / F.lit(DECAY_HALF_LIFE_D),
-        ),
-    )
-    scored = aged.groupBy("user_id").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        _qsum(F.col("w")).alias("eng_q"),
-        _qsum(
-            F.when(
-                F.col("event_type") == "purchase",
-                F.col("w") * F.col("cents") / 100.0,
-            ).otherwise(0.0)
-        ).alias("rev_q"),
-    )
-    return (
-        scored.select(
-            "user_id",
-            "n_events",
-            F.round(F.col("eng_q") / _NANO, 4).alias("decayed_events"),
-            F.round(F.col("rev_q") / _NANO, 4).alias("decayed_rev_usd"),
-        )
-        .orderBy(F.col("decayed_events").desc(), "user_id")
-        .limit(DECAY_TOPK)
-    )
-
-
-def simpson_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Simpson's-paradox screen: per market segment, compare the two
-    hash arms' purchase-conversion rates AND the pooled rates — a
-    segment whose effect sign disagrees with the pooled sign is
-    flagged, the classic aggregation reversal that makes a pooled-only
-    readout lie. All rates are exact integer ratios; the flag is a
-    sign comparison of identically-computed doubles.
-
-    Scale notes (100 TB): two conditional-aggregate rollups
-    (per-segment and pooled, the latter broadcast back) — one user
-    pass feeds both.
-    """
-    users = (
-        load_table(spark, sf_dir, "events")
-        .groupBy("user_id")
-        .agg(
-            F.max(
-                (F.col("event_type") == "purchase").cast("long")
-            ).alias("converted")
-        )
-        .select(
-            "user_id",
-            "converted",
-            (
-                md5_long(F.col("user_id").cast("string"), salt="arm") % 2
-            ).alias("arm"),
-        )
-    )
-    seg = load_table(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("user_id"), "c_mktsegment"
-    )
-    joined = users.join(F.broadcast(seg), "user_id")
-
-    def rates(df, keys):
-        return df.groupBy(*keys).agg(
-            F.sum(F.when(F.col("arm") == 1, 1).otherwise(0)).alias("n1"),
-            F.sum(
-                F.when(F.col("arm") == 1, F.col("converted")).otherwise(0)
-            ).alias("c1"),
-            F.sum(F.when(F.col("arm") == 0, 1).otherwise(0)).alias("n0"),
-            F.sum(
-                F.when(F.col("arm") == 0, F.col("converted")).otherwise(0)
-            ).alias("c0"),
-        )
-
-    per_seg = rates(joined, ["c_mktsegment"]).filter(
-        (F.col("n1") > 0) & (F.col("n0") > 0)
-    )  # degenerate segments (an empty arm) have no defined diff
-    pooled = rates(joined, []).select(
-        (
-            F.col("c1") / F.col("n1") - F.col("c0") / F.col("n0")
-        ).alias("pooled_diff")
-    )
-    seg_diff = F.col("c1") / F.col("n1") - F.col("c0") / F.col("n0")
-    return per_seg.crossJoin(F.broadcast(pooled)).select(
-        "c_mktsegment",
-        "n1",
-        "n0",
-        F.round(F.col("c1") / F.col("n1"), 6).alias("rate1"),
-        F.round(F.col("c0") / F.col("n0"), 6).alias("rate0"),
-        F.round(seg_diff, 6).alias("seg_diff"),
-        F.round("pooled_diff", 6).alias("pooled_diff"),
-        (
-            F.signum(seg_diff) != F.signum(F.col("pooled_diff"))
-        ).alias("reversed"),
-    )
-
-
-CHURN_CUT = "2024-01-24"  # feature/label boundary (events span Jan)
-
-
-def churn_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Leakage-safe churn dataset builder: features computed ONLY
-    from events before CHURN_CUT (counts, spend, recency, active
-    days), label = "no activity on or after the cut" — the
-    point-in-time discipline that keeps target information out of
-    the features, which a naive full-range feature join silently
-    violates. One conditional-aggregate pass builds both sides;
-    anything in the feature columns after the cut would be a bug the
-    oracle catches.
-
-    Scale notes (100 TB): single map-side-combined user rollup; the
-    cut is a pushdown-friendly literal predicate inside conditional
-    aggregates, so no second scan and no join.
-    """
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id",
-        "event_type",
-        F.date_format("ts", "yyyy-MM-dd").alias("day"),
-        F.floor(F.col("value") * 100 + 0.5).cast("long").alias("cents"),
-    )
-    pre = F.col("day") < CHURN_CUT
-
-    return (
-        ev.groupBy("user_id")
-        .agg(
-            F.sum(pre.cast("long")).alias("n_events_pre"),
-            F.sum(
-                F.when(
-                    pre & (F.col("event_type") == "purchase"),
-                    F.col("cents"),
-                ).otherwise(0)
-            ).alias("spend_pre_cents"),
-            F.countDistinct(F.when(pre, F.col("day"))).alias(
-                "active_days_pre"
-            ),
-            F.max(F.when(pre, F.col("day"))).alias("last_seen_pre"),
-            F.max((~pre).cast("long")).alias("active_post"),
-        )
-        .filter(F.col("n_events_pre") > 0)
-        .select(
-            "user_id",
-            "n_events_pre",
-            "spend_pre_cents",
-            "active_days_pre",
-            F.datediff(F.lit(CHURN_CUT), F.col("last_seen_pre"))
-            .cast("long")
-            .alias("recency_days"),
-            (1 - F.col("active_post")).alias("churned"),
-        )
-    )
-
-
-TE_SMOOTH_M = 20.0  # m-estimate pseudo-count
-
-
-def target_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Smoothed (m-estimate) target encoding of market segment
-    against purchase conversion: enc = (S + m·μ)/(n + m) — the
-    Bayesian shrinkage that keeps rare categories from memorizing
-    their few labels (raw category means are the classic overfit).
-    Both the raw and smoothed encodings emit, so the shrinkage is
-    visible per category. Exact counts everywhere; two divisions at
-    the end.
-
-    Scale notes (100 TB): one user pass, one category rollup, the
-    global prior broadcast — the encoding table is |categories| rows
-    and broadcasts back onto training joins downstream.
-    """
-    users = (
-        load_table(spark, sf_dir, "events")
-        .groupBy("user_id")
-        .agg(
-            F.max(
-                (F.col("event_type") == "purchase").cast("long")
-            ).alias("y")
-        )
-    )
-    seg = load_table(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("user_id"), "c_mktsegment"
-    )
-    joined = users.join(F.broadcast(seg), "user_id")
-    cat = joined.groupBy("c_mktsegment").agg(
-        F.count(F.lit(1)).alias("n"), F.sum("y").alias("s")
-    )
-    prior = joined.agg(
-        (F.sum("y") / F.count(F.lit(1))).alias("mu")
-    )
-    return cat.crossJoin(F.broadcast(prior)).select(
-        "c_mktsegment",
-        "n",
-        F.round(F.col("s") / F.col("n"), 6).alias("raw_rate"),
-        F.round(
-            (F.col("s") + TE_SMOOTH_M * F.col("mu"))
-            / (F.col("n") + TE_SMOOTH_M),
-            6,
-        ).alias("encoded"),
-        F.round("mu", 6).alias("prior"),
-    )
-
-
-def stratified_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stratified (blocked) treatment-effect estimate: the per-market-
-    segment arm differences averaged with segment-size weights — the
-    adjustment that removes confounding carried by the blocking
-    variable, where the pooled difference (`ext_simpson_screen`'s
-    flag) can even flip sign. Per-segment means are exact ratios;
-    the weighted combine runs through qsum. Output: the stratified
-    ATE next to the naive pooled difference.
-
-    Scale notes (100 TB): one user pass, one per-segment rollup,
-    |segments| weighted terms — the classic "stratify then average"
-    at aggregation cost, no matching pairs materialized.
-    """
-    users = (
-        load_table(spark, sf_dir, "events")
-        .groupBy("user_id")
-        .agg(
-            F.sum(
-                F.when(
-                    F.col("event_type") == "purchase",
-                    F.floor(F.col("value") * 100 + 0.5).cast("long"),
-                ).otherwise(0)
-            ).alias("x")
-        )
-        .select(
-            "user_id",
-            "x",
-            (
-                md5_long(F.col("user_id").cast("string"), salt="arm") % 2
-            ).alias("arm"),
-        )
-    )
-    seg = load_table(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("user_id"), "c_mktsegment"
-    )
-    joined = users.join(F.broadcast(seg), "user_id")
-    per_seg = (
-        joined.groupBy("c_mktsegment")
-        .agg(
-            F.count(F.lit(1)).alias("n_seg"),
-            F.sum(F.when(F.col("arm") == 1, 1).otherwise(0)).alias("n1"),
-            F.sum(
-                F.when(F.col("arm") == 1, F.col("x")).otherwise(0)
-            ).alias("s1"),
-            F.sum(F.when(F.col("arm") == 0, 1).otherwise(0)).alias("n0"),
-            F.sum(
-                F.when(F.col("arm") == 0, F.col("x")).otherwise(0)
-            ).alias("s0"),
-        )
-        .filter((F.col("n1") > 0) & (F.col("n0") > 0))
-    )
-    ntot = per_seg.agg(F.sum("n_seg").alias("nt"))
-    term = (
-        F.col("n_seg")
-        / F.col("nt")
-        * (
-            F.col("s1") / F.col("n1") - F.col("s0") / F.col("n0")
-        )
-    )
-    strat = per_seg.crossJoin(F.broadcast(ntot)).agg(
-        _qsum(term).alias("ate_q"),
-        F.sum("n_seg").alias("n_used"),
-    )
-    pooled = joined.agg(
-        (
-            F.sum(F.when(F.col("arm") == 1, F.col("x")).otherwise(0))
-            / F.sum(F.when(F.col("arm") == 1, 1).otherwise(0))
-            - F.sum(F.when(F.col("arm") == 0, F.col("x")).otherwise(0))
-            / F.sum(F.when(F.col("arm") == 0, 1).otherwise(0))
-        ).alias("pooled")
-    )
-    return strat.crossJoin(F.broadcast(pooled)).select(
-        F.col("n_used").alias("n_users"),
-        F.round(F.col("ate_q") / _NANO / 100.0, 4).alias(
-            "stratified_ate_usd"
-        ),
-        F.round(F.col("pooled") / 100.0, 4).alias("pooled_diff_usd"),
-    )
-
-
-QTE_PS = (0.25, 0.5, 0.75)
-
-
-def quantile_treatment_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quantile treatment effects: the arm difference at the 25th,
-    50th and 75th percentiles of purchase value — the distributional
-    readout a mean-only test hides (an effect that lifts the tail
-    but not the median is invisible to `ext_ab_test_zscore`). Exact
-    interpolated percentiles per arm on integer cents, one row per
-    quantile.
-
-    Scale notes (100 TB): grouped exact percentiles — swap in the
-    mergeable t-digest at real scale, as ext_percentiles documents;
-    the QTE arithmetic is per-row on 3×2 numbers.
-    """
-    ev = (
-        load_table(spark, sf_dir, "events")
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            (
-                md5_long(F.col("user_id").cast("string"), salt="arm") % 2
-            ).alias("arm"),
-            F.floor(F.col("value") * 100 + 0.5).cast("long").alias("c"),
-        )
-    )
-    m = ev.groupBy("arm").agg(
-        F.count(F.lit(1)).alias("n"),
-        *[
-            F.round(F.expr(f"percentile(c, {p!r})"), 6).alias(
-                f"q_{int(p * 100)}"
-            )
-            for p in QTE_PS
-        ],
-    )
-    a1 = m.filter(F.col("arm") == 1).select(
-        F.col("n").alias("n1"),
-        *[
-            F.col(f"q_{int(p * 100)}").alias(f"t_{int(p * 100)}")
-            for p in QTE_PS
-        ],
-    )
-    a0 = m.filter(F.col("arm") == 0).select(
-        F.col("n").alias("n0"),
-        *[
-            F.col(f"q_{int(p * 100)}").alias(f"c_{int(p * 100)}")
-            for p in QTE_PS
-        ],
-    )
-    wide = a1.crossJoin(F.broadcast(a0))
-    rows = []
-    for p in QTE_PS:
-        k = int(p * 100)
-        rows.append(
-            wide.select(
-                F.lit(k).cast("long").alias("pct"),
-                "n1",
-                "n0",
-                F.round(F.col(f"t_{k}") / 100.0, 4).alias("treat_usd"),
-                F.round(F.col(f"c_{k}") / 100.0, 4).alias("ctrl_usd"),
-                F.round(
-                    (F.col(f"t_{k}") - F.col(f"c_{k}")) / 100.0, 4
-                ).alias("qte_usd"),
-            )
-        )
-    out = rows[0]
-    for r in rows[1:]:
-        out = out.unionByName(r)
-    return out
 
 
 HILL_K = 50  # tail order statistics used by the Hill estimator
@@ -4950,107 +2735,6 @@ def hill_tail_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(
             F.col("k_used") / (F.col("lq") / _NANO), 4
         ).alias("hill_alpha"),
-    )
-
-
-def price_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Log-log price elasticity of demand per brand: the OLS slope of
-    ln(quantity) on ln(unit price) over that brand's line items —
-    the econometric constant-elasticity model, fit from MOMENTS like
-    `ext_ols_trend`, except the moments themselves are float
-    (logs), so each of the five sums reduces through qsum before the
-    closed form. Elasticity < −1 means demand is elastic: a price
-    cut grows revenue.
-
-    Scale notes (100 TB): part dimension broadcasts onto the fact
-    scan, one brand rollup of five quantized sums, row-local closed
-    form.
-    """
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_partkey",
-        F.col("l_quantity").cast("double").alias("q"),
-        (F.col("l_extendedprice") / F.col("l_quantity")).alias("p"),
-    )
-    parts = load_table(spark, sf_dir, "part").select(
-        F.col("p_partkey").alias("l_partkey"), "p_brand"
-    )
-    lx = li.join(F.broadcast(parts), "l_partkey").select(
-        "p_brand",
-        F.log("p").alias("x"),
-        F.log("q").alias("y"),
-    )
-    m = lx.groupBy("p_brand").agg(
-        F.count(F.lit(1)).alias("n"),
-        _qsum(F.col("x")).alias("sx"),
-        _qsum(F.col("y")).alias("sy"),
-        _qsum(F.col("x") * F.col("y")).alias("sxy"),
-        _qsum(F.col("x") * F.col("x")).alias("sxx"),
-    )
-    nd = F.col("n").cast("double")
-    sx = F.col("sx") / _NANO
-    sy = F.col("sy") / _NANO
-    sxy = F.col("sxy") / _NANO
-    sxx = F.col("sxx") / _NANO
-    slope = (nd * sxy - sx * sy) / (nd * sxx - sx * sx)
-    return m.select(
-        "p_brand",
-        F.col("n").alias("n_lines"),
-        F.round(slope, 4).alias("elasticity"),
-        (F.round(slope, 4) < -1.0).alias("elastic"),
-    )
-
-
-def experiment_health(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pre-readout experiment health report: sample-ratio-mismatch
-    chi² ((n₁−n₀)²/n against the 50/50 design — the single most
-    common way experiments silently rot), plus daily assignment
-    imbalance (worst |share₁ − ½| day) — trend-shaped SRM that a
-    single end-of-test total hides. A failed SRM check invalidates
-    every downstream readout in this pack, which is why the platform
-    runs THIS query first. All integer counts; two divisions.
-
-    Scale notes (100 TB): one user-day rollup (map-side combined),
-    one dates-sized max — health checks must stay cheap enough to
-    run on every sync.
-    """
-    ud = (
-        load_table(spark, sf_dir, "events")
-        .select(
-            "user_id", F.date_format("ts", "yyyy-MM-dd").alias("day")
-        )
-        .distinct()
-        .select(
-            "day",
-            (
-                md5_long(F.col("user_id").cast("string"), salt="arm") % 2
-            ).alias("arm"),
-        )
-    )
-    users = ud.select("arm").groupBy("arm").count()
-    n1 = F.max(F.when(F.col("arm") == 1, F.col("count")))
-    n0 = F.max(F.when(F.col("arm") == 0, F.col("count")))
-    tot = users.agg(n1.alias("n1"), n0.alias("n0"))
-    daily = ud.groupBy("day").agg(
-        F.sum(F.when(F.col("arm") == 1, 1).otherwise(0)).alias("d1"),
-        F.count(F.lit(1)).alias("dn"),
-    )
-    worst = daily.agg(
-        F.max(
-            F.abs(F.col("d1") / F.col("dn") - 0.5)
-        ).alias("worst_daily_imbalance")
-    )
-    chi2 = (
-        (F.col("n1") - F.col("n0"))
-        * (F.col("n1") - F.col("n0"))
-    ).cast("double") / (F.col("n1") + F.col("n0"))
-    return tot.crossJoin(F.broadcast(worst)).select(
-        F.col("n1").alias("n_arm1_user_days"),
-        F.col("n0").alias("n_arm0_user_days"),
-        F.round(chi2, 4).alias("srm_chi2"),
-        (chi2 > 3.841).alias("srm_fail"),
-        F.round("worst_daily_imbalance", 4).alias(
-            "worst_daily_imbalance"
-        ),
     )
 
 
@@ -5162,83 +2846,10 @@ ECE_SMOOTH = 2  # p̂ = clicks / (clicks + ECE_SMOOTH): a monotone
 # engines compute bit-identical doubles
 
 
-def calibration_ece(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Reliability diagram + expected calibration error (ECE) for a
-    deterministic conversion predictor: per user-day, score
-    p̂ = clicks/(clicks+2) against the did-purchase label, bin p̂ into
-    ECE_BINS equal-width bins, and report per-bin confidence (mean p̂)
-    vs accuracy (positive rate) plus the n-weighted |acc − conf| sum —
-    the standard post-hoc calibration audit every model-driven
-    curation gate needs before its scores can be thresholded.
-
-    Numeric discipline: p̂ is an exact ratio of small ints; per-bin
-    mean p̂ accumulates through qsum (order-proof integer sum); ECE's
-    weighted combine is a second qsum over the ECE_BINS bin rows.
-
-    Scale notes (100 TB): one user-day rollup (map-side partial agg),
-    one ECE_BINS-row regroup — aggregation-only, no joins wider than
-    the final bins×1 cross of two broadcast scalars.
-    """
-    ev = load_table(spark, sf_dir, "events")
-    ud = (
-        ev.groupBy("user_id", F.to_date("ts").alias("day"))
-        .agg(
-            F.sum(F.when(F.col("event_type") == "click", 1).otherwise(0)).alias(
-                "clicks"
-            ),
-            F.max(
-                F.when(F.col("event_type") == "purchase", 1).otherwise(0)
-            ).alias("y"),
-        )
-        .select(
-            (F.col("clicks") / (F.col("clicks") + F.lit(float(ECE_SMOOTH)))).alias(
-                "p"
-            ),
-            "y",
-        )
-    )
-    binned = ud.select(
-        F.least(F.floor(F.col("p") * ECE_BINS), F.lit(ECE_BINS - 1))
-        .cast("long")
-        .alias("bin"),
-        "p",
-        "y",
-    )
-    # checkpoint the ECE_BINS-row rollup — its four consumers would
-    # otherwise each re-run the user-day scan (no common-subplan dedup)
-    per_bin = binned.groupBy("bin").agg(
-        F.count(F.lit(1)).alias("n_days"),
-        _qsum(F.col("p")).alias("conf_q"),
-        F.sum("y").alias("n_pos"),
-    ).localCheckpoint(eager=False)
-    tot = per_bin.agg(F.sum("n_days").alias("n_total"))
-    rows = per_bin.crossJoin(F.broadcast(tot)).select(
-        "bin",
-        "n_days",
-        (F.col("conf_q") / _NANO / F.col("n_days")).alias("conf"),
-        (F.col("n_pos") / F.col("n_days")).alias("acc"),
-        "n_total",
-    ).localCheckpoint(eager=False)
-    ece = rows.agg(
-        _qsum(
-            F.col("n_days")
-            / F.col("n_total")
-            * F.abs(F.col("acc") - F.col("conf"))
-        ).alias("ece_q")
-    )
-    return rows.crossJoin(F.broadcast(ece)).select(
-        "bin",
-        "n_days",
-        F.round(F.col("conf"), 6).alias("conf"),
-        F.round(F.col("acc"), 6).alias("acc"),
-        F.round(F.col("ece_q") / _NANO, 6).alias("ece"),
-    )
-
-
 def isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT isotonic regression (the pool-adjacent-violators fit) of
     the conversion label on the click-count score ladder — the
-    calibration FIX that pairs with `ext_calibration_ece`'s audit:
+    calibration FIX for a miscalibrated score:
     the fitted values are the unique monotone sequence minimizing
     squared error, i.e. the calibrated probabilities a thresholding
     gate should use instead of the raw scores.
@@ -5463,7 +3074,7 @@ def psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     the month (calendar split, day-of-month ≤ 15) over binned purchase
     values — the industry-standard "has my feature distribution
     shifted" monitor (PSI < 0.1 stable, > 0.25 action), complementing
-    the χ² (`ext_drift_chi2`) and JS (`ext_js_divergence`) monitors
+    the JS (`ext_js_divergence`) monitor
     with the metric ops teams actually threshold on. Add-one smoothing
     keeps empty-on-one-side bins finite; PSI = Σ (p−q)·ln(p/q) runs
     through qsum (ln on identical exact-ratio operands is
@@ -5672,7 +3283,7 @@ def iv_wald(spark: SparkSession, sf_dir: str) -> DataFrame:
     a weak instrument is visible (|first_stage| small).
 
     Scale notes (100 TB): one user rollup, one 1-row conditional
-    aggregate — the same shape as `ext_diff_in_diff`. No joins.
+    aggregate. No joins.
     """
     users = (
         load_table(spark, sf_dir, "events")
@@ -5742,8 +3353,8 @@ def sprt_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     conversion stream: cumulative log-likelihood ratio of H1 (p=0.22)
     vs H0 (p=0.18) with the 5%/5% decision boundaries — the monitor
     that lets an experiment STOP the day evidence suffices instead of
-    waiting out a fixed horizon (the fixed-N z-test is
-    `ext_ab_test_zscore`). Per user-day: converted = any purchase.
+    waiting out a fixed horizon (a fixed-N z-test). Per user-day:
+    converted = any purchase.
     LLR increments are integer counts times two LITERAL constants
     (ln ratios precomputed driver-side), so the cumulative sum is
     exact integer arithmetic after quantization; the boundary
@@ -5796,119 +3407,6 @@ def sprt_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-DML_Q = 10_000  # residual-product quantization (keeps qsums < 2^53)
-
-
-def double_ml_plm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Double/debiased ML, partially-linear model (Chernozhukov et al.
-    2018) with 2-fold cross-fitting: the effect of clicks on spend
-    after partialling the activity confounder (views) out of BOTH —
-    θ = Σ ỹ·d̃ / Σ d̃², residuals ỹ, d̃ taken against nuisance fits
-    trained on the OPPOSITE hash fold (cross-fitting is what kills
-    the own-fit overfitting bias; the naive pooled OLS slope rides
-    along for contrast). Nuisance fits are closed-form OLS from
-    exact integer moment sums; the driver collects one moment row
-    per fold (control values), derives each fold's out-of-fold
-    coefficients with the same float(int)/float(int) divisions the
-    oracle's CTEs write, and a second aggregate reduces the residual
-    products through the fixed-point sum at 1e-4 quanta (products
-    are ~1e6-scale; 1e-9 quanta would push the long sum past 2^53,
-    where BIGINT-vs-Python division semantics diverge).
-
-    Scale notes (100 TB): one user rollup (checkpointed), two
-    map-side-combinable aggregates over it — moments, then residual
-    products. No joins; the per-row residual arithmetic uses literal
-    coefficients.
-    """
-    users = (
-        load_table(spark, sf_dir, "events")
-        .groupBy("user_id")
-        .agg(
-            F.sum(
-                F.when(
-                    F.col("event_type") == "purchase",
-                    F.floor(F.col("value") * 100 + 0.5).cast("long"),
-                ).otherwise(0)
-            ).alias("y"),
-            F.sum(
-                F.when(F.col("event_type") == "click", 1).otherwise(0)
-            ).alias("d"),
-            F.sum(
-                F.when(F.col("event_type") == "view", 1).otherwise(0)
-            ).alias("x"),
-        )
-        .select(
-            "y",
-            "d",
-            "x",
-            (md5_long(F.col("user_id").cast("string"), salt="dml") % 2).alias(
-                "fold"
-            ),
-        )
-        .localCheckpoint(eager=False)
-    )
-    mom = (
-        users.groupBy("fold")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("x").alias("sx"),
-            F.sum("y").alias("sy"),
-            F.sum("d").alias("sd"),
-            F.sum(F.col("x") * F.col("x")).alias("sxx"),
-            F.sum(F.col("x") * F.col("y")).alias("sxy"),
-            F.sum(F.col("x") * F.col("d")).alias("sxd"),
-        )
-        .collect()
-    )
-    m = {r["fold"]: r for r in mom}
-
-    def _fit(r) -> tuple[float, float, float, float]:
-        """Out-of-fold OLS coefficients (a_y, b_y, a_d, b_d) — the
-        float(int)/float(int) forms the oracle mirrors exactly."""
-        by = float(r["n"] * r["sxy"] - r["sx"] * r["sy"]) / float(
-            r["n"] * r["sxx"] - r["sx"] * r["sx"]
-        )
-        ay = (float(r["sy"]) - by * float(r["sx"])) / float(r["n"])
-        bd = float(r["n"] * r["sxd"] - r["sx"] * r["sd"]) / float(
-            r["n"] * r["sxx"] - r["sx"] * r["sx"]
-        )
-        ad = (float(r["sd"]) - bd * float(r["sx"])) / float(r["n"])
-        return ay, by, ad, bd
-
-    # fold f's residuals use coefficients fit on fold 1-f
-    co = {f: _fit(m[1 - f]) for f in (0, 1)}
-    ay = F.when(F.col("fold") == 0, F.lit(co[0][0])).otherwise(F.lit(co[1][0]))
-    by = F.when(F.col("fold") == 0, F.lit(co[0][1])).otherwise(F.lit(co[1][1]))
-    ad = F.when(F.col("fold") == 0, F.lit(co[0][2])).otherwise(F.lit(co[1][2]))
-    bd = F.when(F.col("fold") == 0, F.lit(co[0][3])).otherwise(F.lit(co[1][3]))
-    ry = F.col("y") - (ay + by * F.col("x"))
-    rd = F.col("d") - (ad + bd * F.col("x"))
-    red = users.agg(
-        F.count(F.lit(1)).alias("n_users"),
-        F.sum(F.floor(ry * rd * DML_Q + 0.5).cast("long")).alias("syd_q"),
-        F.sum(F.floor(rd * rd * DML_Q + 0.5).cast("long")).alias("sdd_q"),
-    )
-    # naive pooled OLS slope of y on d (no partialling) for contrast
-    pooled = users.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("y").alias("sy"),
-        F.sum("d").alias("sd"),
-        F.sum(F.col("d") * F.col("d")).alias("sdd"),
-        F.sum(F.col("d") * F.col("y")).alias("sdy"),
-    )
-    naive = (
-        (F.col("n") * F.col("sdy") - F.col("sd") * F.col("sy"))
-        / (F.col("n") * F.col("sdd") - F.col("sd") * F.col("sd"))
-    )
-    return red.crossJoin(F.broadcast(pooled)).select(
-        "n_users",
-        F.round(F.col("syd_q") / F.col("sdd_q") / 100.0, 6).alias(
-            "theta_usd_per_click"
-        ),
-        F.round(naive / 100.0, 6).alias("naive_usd_per_click"),
-    )
-
-
 AIPW_Q = 10_000  # fixed-point quanta for the influence-function sum
 AIPW_CUT = 12  # treated = more than this many clicks (both arms and
 # within-arm x variance populate on the overlap set at every sf)
@@ -5925,8 +3423,7 @@ def aipw_doubly_robust(spark: SparkSession, sf_dir: str) -> DataFrame:
     view count) while the propensity is saturated-exact (per-level
     treated fraction), so the augmentation term is doing real work —
     the configuration that shows why AIPW beats either plug-in alone
-    (`ext_propensity_match` trusts only e, `ext_double_ml_plm`
-    partials linearly).
+    (`ext_propensity_match` trusts only e).
 
     Estimation restricts to OVERLAP levels (both arms present —
     e ∈ (0,1); positivity is an assumption, not a hope) and reports
@@ -6039,246 +3536,9 @@ def aipw_doubly_robust(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-RDD_CUT = 66  # activity cutoff — the corpus mean events/user (~66 at
-# every sf: events and users scale together), so both sides populate
-RDD_BW = 20  # local-linear bandwidth in activity units
-
-
-def regression_discontinuity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sharp regression discontinuity at an activity cutoff: fit a
-    local linear regression of spend on centered activity separately
-    on each side of RDD_CUT (within bandwidth RDD_BW) and report the
-    jump between the two intercepts at the cutoff — the design for
-    threshold-assigned treatments (feature unlocks, tier upgrades)
-    where units just above and just below the line are comparable.
-    Both fits are closed-form OLS from exact integer moment sums
-    folded into ONE conditional-aggregate row (the DiD pattern with
-    slopes); all divisions are BIGINT-derived doubles mirrored
-    operation-for-operation by the oracle.
-
-    Scale notes (100 TB): one user rollup, one 1-row conditional
-    aggregate, row-local arithmetic — joinless, collect-free.
-    """
-    users = (
-        load_table(spark, sf_dir, "events")
-        .groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("a"),
-            F.sum(
-                F.when(
-                    F.col("event_type") == "purchase",
-                    F.floor(F.col("value") * 100 + 0.5).cast("long"),
-                ).otherwise(0)
-            ).alias("y"),
-        )
-        .select((F.col("a") - RDD_CUT).alias("t"), "y")
-        .filter(
-            (F.col("t") >= -RDD_BW) & (F.col("t") <= RDD_BW)
-        )
-    )
-    right = F.col("t") >= 0
-
-    def side_moms(cond, tag: str) -> list:
-        z = F.lit(0)
-        return [
-            F.sum(F.when(cond, 1).otherwise(z)).alias(f"n_{tag}"),
-            F.sum(F.when(cond, F.col("t")).otherwise(z)).alias(f"st_{tag}"),
-            F.sum(F.when(cond, F.col("y")).otherwise(z)).alias(f"sy_{tag}"),
-            F.sum(
-                F.when(cond, F.col("t") * F.col("t")).otherwise(z)
-            ).alias(f"stt_{tag}"),
-            F.sum(
-                F.when(cond, F.col("t") * F.col("y")).otherwise(z)
-            ).alias(f"sty_{tag}"),
-        ]
-
-    row = users.agg(*side_moms(~right, "l"), *side_moms(right, "r"))
-
-    def fit(tag: str):
-        n, st, sy = F.col(f"n_{tag}"), F.col(f"st_{tag}"), F.col(f"sy_{tag}")
-        stt, sty = F.col(f"stt_{tag}"), F.col(f"sty_{tag}")
-        b = (n * sty - st * sy) / (n * stt - st * st)
-        alpha = (sy - b * st) / n
-        return alpha, b
-
-    al, bl = fit("l")
-    ar, br = fit("r")
-    # a side with < 2 distinct running values cannot support a linear
-    # fit — NULL, not a divide-by-zero (small-sf samples can be lopsided)
-    den = lambda tag: (  # noqa: E731 — local formula alias
-        F.col(f"n_{tag}") * F.col(f"stt_{tag}")
-        - F.col(f"st_{tag}") * F.col(f"st_{tag}")
-    )
-    valid = (den("l") != 0) & (den("r") != 0)
-    return row.select(
-        F.col("n_l").alias("n_left"),
-        F.col("n_r").alias("n_right"),
-        F.when(valid, F.round((ar - al) / 100.0, 4)).alias("rd_effect_usd"),
-        F.when(valid, F.round(bl / 100.0, 6)).alias("slope_left_usd"),
-        F.when(valid, F.round(br / 100.0, 6)).alias("slope_right_usd"),
-    )
-
-
-# target policy over event types (sums to 1) — the counterfactual
-# whose value IPS estimates from logs collected under the empirical
-# logging distribution
-OPE_TARGET = {
-    "click": 0.3,
-    "purchase": 0.4,
-    "view": 0.1,
-    "signup": 0.1,
-    "error": 0.1,
-}
-
-
-def offpolicy_ips(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Off-policy evaluation via inverse propensity scoring: estimate
-    what the TARGET action distribution would earn per event from
-    logs collected under the logging policy — V_IPS = mean(r·w),
-    V_SNIPS = Σr·w / Σw with w = π_target(a)/π_log(a) — the
-    counterfactual-evaluation workhorse for rankers/policies that
-    cannot be A/B-tested before deployment, plus Kish's effective
-    sample size of the weights (the diagnostic that says whether the
-    estimate is resting on a handful of high-weight rows). The
-    logging propensities are the exact empirical action frequencies;
-    target propensities are literals; every float reduction runs
-    through qsum.
-
-    Scale notes (100 TB): one |actions|-row rollup (broadcast back),
-    one weighted-aggregate pass — two map-side-combinable shuffles,
-    no joins wider than the 5-row propensity table.
-    """
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_type",
-        F.floor(F.col("value") * 100 + 0.5).cast("long").alias("r"),
-    )
-    freq = ev.groupBy("event_type").agg(F.count(F.lit(1)).alias("n_a"))
-    tot = ev.agg(F.count(F.lit(1)).alias("n"))
-    tgt = F.lit(None).cast("double")
-    for a, pi in OPE_TARGET.items():
-        tgt = F.when(F.col("event_type") == a, F.lit(pi)).otherwise(tgt)
-    w = tgt / (F.col("n_a") / F.col("n"))
-    joined = ev.join(F.broadcast(freq), "event_type").crossJoin(
-        F.broadcast(tot)
-    )
-    out = joined.agg(
-        F.max("n").alias("n_events"),
-        _qsum(F.col("r") / 100.0).alias("vlog_q"),
-        _qsum(F.col("r") / 100.0 * w).alias("vips_q"),
-        _qsum(w).alias("w_q"),
-        _qsum(w * w).alias("ww_q"),
-    )
-    return out.select(
-        "n_events",
-        F.round(F.col("vlog_q") / _NANO / F.col("n_events"), 6).alias(
-            "v_logged_usd"
-        ),
-        F.round(F.col("vips_q") / _NANO / F.col("n_events"), 6).alias(
-            "v_ips_usd"
-        ),
-        # ratio of same-scale fixed-point sums — the quantization factor
-        # cancels exactly
-        F.round(F.col("vips_q") / F.col("w_q"), 6).alias("v_snips_usd"),
-        F.round(
-            F.col("w_q") / _NANO * (F.col("w_q") / _NANO) / (
-                F.col("ww_q") / _NANO
-            ),
-            4,
-        ).alias("ess_weights"),
-    )
-
-
-AUC_POS_MIN = 7  # second-half purchases defining a positive label
-
-
-def segment_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-segment ROC-AUC of a leakage-safe conversion score: first-
-    half-of-month activity predicting second-half purchase, sliced by
-    market segment — the per-slice discrimination audit that catches a
-    model working globally but failing a segment (the fairness/
-    robustness readout a single pooled AUC hides). AUC computes
-    exactly as the tie-corrected rank statistic on each segment's
-    integer score ladder (doubled average ranks, the `ext_mann_whitney`
-    construction), so the only float per segment is one final
-    division. Segments with an empty class emit NULL.
-
-    Scale notes (100 TB): one user rollup + broadcast segment attach,
-    one (segment, score) rollup, one cumulative window per segment
-    ladder (distinct scores ≪ users), one |segments|-row readout.
-    """
-    from pyspark.sql import Window
-
-    users = (
-        load_table(spark, sf_dir, "events")
-        .groupBy("user_id")
-        .agg(
-            F.sum(
-                F.when(F.dayofmonth("ts") <= 15, 1).otherwise(0)
-            ).alias("s"),
-            # label: HEAVY second-half purchaser (≥ AUC_POS_MIN) — a
-            # simple any-purchase label saturates to 1 for every user
-            # at this event density, leaving no negative class
-            (
-                F.sum(
-                    F.when(
-                        (F.col("event_type") == "purchase")
-                        & (F.dayofmonth("ts") > 15),
-                        1,
-                    ).otherwise(0)
-                )
-                >= AUC_POS_MIN
-            )
-            .cast("long")
-            .alias("y"),
-        )
-    )
-    seg = load_table(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("user_id"), F.col("c_mktsegment").alias("segment")
-    )
-    su = users.join(F.broadcast(seg), "user_id")
-    cells = su.groupBy("segment", "s").agg(
-        F.sum("y").alias("pos"),
-        F.sum(F.lit(1) - F.col("y")).alias("neg"),
-    )
-    wseg = Window.partitionBy("segment").orderBy("s")
-    wcum = wseg.rowsBetween(Window.unboundedPreceding, -1)
-    ladder = (
-        cells.withColumn(
-            "cum_prev",
-            F.coalesce(
-                F.sum(F.col("pos") + F.col("neg")).over(wcum), F.lit(0)
-            ),
-        )
-        .withColumn("t", F.col("pos") + F.col("neg"))
-        # doubled average rank of every member of this score cell:
-        # 2·rank = 2·cum_prev + t + 1 (exact under ties)
-        .withColumn(
-            "r1_2",
-            F.col("pos") * (2 * F.col("cum_prev") + F.col("t") + 1),
-        )
-    )
-    agg = ladder.groupBy("segment").agg(
-        F.sum("pos").alias("n_pos"),
-        F.sum("neg").alias("n_neg"),
-        F.sum("r1_2").alias("sr1_2"),
-    )
-    auc = (
-        F.col("sr1_2") - F.col("n_pos") * (F.col("n_pos") + 1)
-    ) / (2 * F.col("n_pos") * F.col("n_neg"))
-    return agg.select(
-        "segment",
-        "n_pos",
-        "n_neg",
-        F.when(
-            (F.col("n_pos") > 0) & (F.col("n_neg") > 0), F.round(auc, 6)
-        ).alias("auc"),
-    )
-
-
 def _ud_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     """User-day (clicks-based score, purchase label) — the shared
-    predictor of the calibration/PR/Brier evaluation suite (same
-    construction as `ext_calibration_ece`)."""
+    predictor of the calibration/PR/Brier evaluation suite."""
     ev = load_table(spark, sf_dir, "events")
     return (
         ev.groupBy("user_id", F.to_date("ts").alias("day"))
@@ -6299,9 +3559,9 @@ def pr_curve_ap(spark: SparkSession, sf_dir: str) -> DataFrame:
     calibration suite's conversion score: one row per distinct score
     threshold (predict positive when clicks ≥ threshold) with exact
     precision/recall, plus AP = Σ ΔR·P — the class-imbalance-robust
-    ranking metric ROC-AUC overstates (`ext_segment_auc`'s
-    complement). Everything is integer cumulative counts over the
-    DISTINCT-score ladder; AP accumulates ΔTP·P through qsum.
+    ranking metric ROC-AUC overstates. Everything is integer
+    cumulative counts over the DISTINCT-score ladder; AP accumulates
+    ΔTP·P through qsum.
 
     Scale notes (100 TB): one user-day rollup, one |distinct scores|-
     row ladder with a descending cumulative window — identical shape
@@ -6343,69 +3603,13 @@ def pr_curve_ap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def f1_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Operating-point picker: the score threshold maximizing F1 for
-    the calibration suite's conversion score — the decision every
-    deployed gate needs after the ranking metrics are settled. F1 per
-    threshold is exact integer arithmetic on the cumulative ladder
-    (F1 = 2TP/(2TP+FP+FN)); the argmax breaks ties toward the HIGHER
-    threshold (stricter gate). Output: the chosen row plus the
-    extremes for context.
-
-    Scale notes (100 TB): the same descending ladder as the PR curve;
-    the argmax is a 1-row window pick over |distinct scores| rows.
-    """
-    from pyspark.sql import Window
-
-    ud = _ud_scored(spark, sf_dir)
-    cells = ud.groupBy("clicks").agg(
-        F.sum("y").alias("pos"),
-        F.sum(F.lit(1) - F.col("y")).alias("neg"),
-    )
-    tot = cells.agg(F.sum("pos").alias("n_pos"))
-    # bounded global window: click-count cells, not rows
-    wdesc = Window.orderBy(F.col("clicks").desc()).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    ladder = (
-        cells.withColumn("tp", F.sum("pos").over(wdesc))
-        .withColumn("fp", F.sum("neg").over(wdesc))
-        .crossJoin(F.broadcast(tot))
-        .withColumn("fn", F.col("n_pos") - F.col("tp"))
-        # exact rational compare via cross-multiplication is overkill
-        # here: F1's one division is identical IEEE on both engines
-        .withColumn(
-            "f1",
-            2 * F.col("tp")
-            / (2 * F.col("tp") + F.col("fp") + F.col("fn")),
-        )
-    )
-    pick = (
-        ladder.withColumn(
-            "rn",
-            F.row_number().over(
-                # bounded global window: distinct daily-click-count ladder (small value domain)
-                Window.orderBy(F.col("f1").desc(), F.col("clicks").desc())
-            ),
-        )
-        .filter(F.col("rn") == 1)
-    )
-    return pick.select(
-        F.col("clicks").alias("best_threshold"),
-        "tp",
-        "fp",
-        "fn",
-        F.round("f1", 6).alias("f1"),
-    )
-
-
 def brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Murphy decomposition of the Brier score over the calibration
     bins: BS = reliability − resolution + uncertainty — the exact
     accounting that says WHETHER a bad Brier score comes from
     miscalibration (reliability) or from the score simply not
     separating outcomes (low resolution), which ECE alone cannot
-    distinguish. Computed on `ext_calibration_ece`'s bins: per-bin
+    distinguish. Computed on ECE_BINS score bins: per-bin
     confidence/accuracy from exact sums, the three components as
     n-weighted qsum reductions, and the identity BS = REL − RES + UNC
     holds to quantization precision (pinned by pytest).
@@ -6488,240 +3692,47 @@ def brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QINI_Y_MIN = 14  # purchases defining a converter (~median at all sf)
-
-
-def qini_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Qini curve for uplift targeting: rank users by a targeting
-    score (activity), and at each score threshold report the
-    INCREMENTAL conversions the treated targeted users deliver over
-    the control-rate expectation — Q(k) = Y_t(k) − Y_c(k)·N_t(k)/N_c(k)
-    — against the random-targeting diagonal, plus the rectangle-rule
-    Qini coefficient (area between curve and diagonal). This is the
-    standard evaluation for "whom should we treat" models, closing
-    the causal suite's loop from estimating effects to TARGETING
-    them. Cumulative counts are exact integers on the score ladder;
-    the only floats are the control-scaling ratios and the qsum'd
-    area terms; ladder prefixes with no control users yet emit NULL
-    (mirrored CASE in the oracle).
-
-    Scale notes (100 TB): one user rollup, one (score, arm) rollup,
-    cumulative windows over the DISTINCT-score ladder — the PR-curve
-    shape with a treatment dimension.
-    """
-    from pyspark.sql import Window
-
-    users = (
-        load_table(spark, sf_dir, "events")
-        .groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("s"),
-            (
-                F.sum(
-                    F.when(F.col("event_type") == "purchase", 1).otherwise(0)
-                )
-                >= QINI_Y_MIN
-            )
-            .cast("long")
-            .alias("y"),
-        )
-        .select(
-            "s",
-            "y",
-            (md5_long(F.col("user_id").cast("string"), salt="arm") % 2).alias(
-                "z"
-            ),
-        )
-    )
-    cells = users.groupBy("s").agg(
-        F.sum(F.when(F.col("z") == 1, 1).otherwise(0)).alias("nt"),
-        F.sum(F.when(F.col("z") == 0, 1).otherwise(0)).alias("nc"),
-        F.sum(F.when(F.col("z") == 1, F.col("y")).otherwise(0)).alias("yt"),
-        F.sum(F.when(F.col("z") == 0, F.col("y")).otherwise(0)).alias("yc"),
-    )
-    # bounded global window: propensity-strata cells, not rows
-    wdesc = Window.orderBy(F.col("s").desc()).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    ladder = (
-        cells.withColumn("cnt", F.sum("nt").over(wdesc))
-        .withColumn("cnc", F.sum("nc").over(wdesc))
-        .withColumn("cyt", F.sum("yt").over(wdesc))
-        .withColumn("cyc", F.sum("yc").over(wdesc))
-        .localCheckpoint(eager=False)
-    )
-    tot = ladder.agg(
-        F.max("cnt").alias("tnt"),
-        F.max("cnc").alias("tnc"),
-        F.max("cyt").alias("tyt"),
-        F.max("cyc").alias("tyc"),
-    )
-    q = F.col("cyt") - F.col("cyc") * (F.col("cnt") / F.col("cnc"))
-    overall = F.col("tyt") - F.col("tyc") * (F.col("tnt") / F.col("tnc"))
-    frac = (F.col("cnt") + F.col("cnc")) / (F.col("tnt") + F.col("tnc"))
-    rows = ladder.crossJoin(F.broadcast(tot)).localCheckpoint(eager=False)
-    dn = F.col("nt") + F.col("nc")
-    coef = rows.agg(
-        _qsum(
-            F.when(
-                F.col("cnc") > 0,
-                (q - overall * frac)
-                * (dn / (F.col("tnt") + F.col("tnc"))),
-            ).otherwise(F.lit(0.0))
-        ).alias("coef_q")
-    )
-    return rows.crossJoin(F.broadcast(coef)).select(
-        F.col("s").alias("score_threshold"),
-        (F.col("cnt") + F.col("cnc")).alias("n_targeted"),
-        F.when(F.col("cnc") > 0, F.round(q, 4)).alias("qini_inc"),
-        F.when(F.col("cnc") > 0, F.round(overall * frac, 4)).alias(
-            "random_inc"
-        ),
-        F.round(F.col("coef_q") / _NANO, 6).alias("qini_coef"),
-    )
-
-
-GAP_SWEEP_MIN = [1, 5, 15, 30, 60, 120, 360, 1440]  # candidate gaps (minutes)
-
-
-def session_gap_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sessionization-threshold sweep: for each candidate inactivity
-    gap, the session count and mean events/session the corpus would
-    produce — the actual elbow curve behind choosing a session gap
-    (the inactivity histogram shows the gap distribution; this shows
-    the CONSEQUENCE of each cut). n_sessions(T) = n_users +
-    #{gaps > T}, all exact integer arithmetic over one per-user lag
-    pass; the sweep itself is |grid| conditional sums in ONE
-    aggregate row, unpivoted to a row per threshold.
-
-    Scale notes (100 TB): one shuffle on user_id for the lag window,
-    then a single map-side-combinable aggregate — the whole sweep
-    costs one pass regardless of grid size.
-    """
-    from pyspark.sql import Window
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id",
-        F.unix_micros(F.col("ts")).alias("us"),
-        "event_id",
-    )
-    w = Window.partitionBy("user_id").orderBy("us", "event_id")
-    gaps = ev.withColumn("prev", F.lag("us").over(w)).select(
-        "user_id", (F.col("us") - F.col("prev")).alias("gap_us")
-    )
-    aggs = [
-        F.count(F.lit(1)).alias("n_events"),
-        F.count_distinct("user_id").alias("n_users"),
-    ]
-    for m in GAP_SWEEP_MIN:
-        aggs.append(
-            F.sum(
-                F.when(F.col("gap_us") > m * 60_000_000, 1).otherwise(0)
-            ).alias(f"brk_{m}")
-        )
-    row = gaps.agg(*aggs).localCheckpoint(eager=False)
-    out: DataFrame | None = None
-    for m in GAP_SWEEP_MIN:
-        n_sessions = F.col("n_users") + F.col(f"brk_{m}")
-        r = row.select(
-            F.lit(m).cast("long").alias("gap_minutes"),
-            n_sessions.alias("n_sessions"),
-            F.round(F.col("n_events") / n_sessions, 4).alias(
-                "avg_events_per_session"
-            ),
-        )
-        out = r if out is None else out.unionAll(r)
-    assert out is not None
-    return out
-
-
 QUERIES: dict[str, Callable] = {
-    "ext_session_gap_sweep": session_gap_sweep,
-    "ext_qini_curve": qini_curve,
     "ext_pr_curve": pr_curve_ap,
-    "ext_f1_threshold": f1_threshold,
     "ext_brier_decomposition": brier_decomposition,
-    "ext_segment_auc": segment_auc,
-    "ext_offpolicy_ips": offpolicy_ips,
-    "ext_rdd_cutoff": regression_discontinuity,
-    "ext_double_ml_plm": double_ml_plm,
     "ext_iv_wald": iv_wald,
     "ext_sprt_monitor": sprt_monitor,
     "ext_psi_drift": psi_drift,
     "ext_wasserstein_distance": wasserstein_distance,
     "ext_quantile_normalize": quantile_normalize,
-    "ext_calibration_ece": calibration_ece,
     "ext_isotonic_calibration": isotonic_calibration,
     "ext_aipw_ate": aipw_doubly_robust,
     "ext_propensity_match": propensity_match,
     "ext_conformal_interval": conformal_interval,
-    "ext_experiment_health": experiment_health,
     "ext_hill_tail_index": hill_tail_index,
-    "ext_price_elasticity": price_elasticity,
-    "ext_stratified_effect": stratified_effect,
-    "ext_quantile_treatment_effect": quantile_treatment_effect,
-    "ext_churn_features": churn_features,
-    "ext_target_encoding": target_encoding,
-    "ext_decayed_engagement": decayed_engagement,
-    "ext_simpson_screen": simpson_screen,
-    "ext_permutation_test": permutation_test,
     "ext_journey_entropy": journey_entropy,
     "ext_shapley_attribution": shapley_attribution,
     "ext_theil_sen_slope": theil_sen_slope,
     "ext_mann_kendall_trend": mann_kendall_trend,
-    "ext_ratio_metric_delta": ratio_metric_delta,
-    "ext_ltv_triangle": ltv_triangle,
-    "ext_sliding_median": sliding_median,
-    "ext_max_drawdown": max_drawdown,
-    "ext_logrank_test": logrank_test,
     "ext_rrf_fusion": rrf_fusion,
     "ext_snippet_extraction": snippet_extraction,
     "ext_bm25_search": bm25_search,
-    "ext_bh_fdr": bh_fdr,
     "ext_tfidf_cosine_pairs": tfidf_cosine_pairs,
-    "ext_cuped_adjustment": cuped_adjustment,
-    "ext_mann_whitney": mann_whitney,
     "ext_poisson_bootstrap": poisson_bootstrap,
     "ext_kaplan_meier": kaplan_meier,
     "ext_nelson_aalen": nelson_aalen,
     "ext_ks_two_sample": ks_two_sample,
-    "ext_vshape_patterns": vshape_patterns,
-    "ext_diff_in_diff": diff_in_diff,
-    "ext_ab_power_mde": ab_power_mde,
     "ext_fifo_allocation": fifo_allocation,
-    "ext_peak_days": peak_days,
-    "ext_burstiness_fano": burstiness_fano,
     "ext_equidepth_histogram": equidepth_histogram,
-    "ext_equidepth_approx": equidepth_approx,
     "ext_sliding_bitmap_distinct": sliding_bitmap_distinct,
     "ext_audience_overlap": audience_overlap,
-    "ext_kmv_intersection": kmv_intersection,
     "ext_weighted_median": weighted_median,
     "ext_cusum_changepoint": cusum_changepoint,
     "ext_bitmap_distinct": bitmap_distinct,
-    "ext_ols_trend": ols_trend,
     "ext_autocorr_daily": autocorr_daily,
     "ext_kmv_distinct": kmv_distinct,
     "ext_winsorized_stats": winsorized_stats,
     "ext_interval_union": interval_union_coverage,
-    "ext_time_to_convert": time_to_convert,
     "ext_supplier_hhi": supplier_hhi,
-    "ext_inactivity_histogram": inactivity_histogram,
-    "ext_repeat_purchase_rate": repeat_purchase_rate,
-    "ext_rfm_segments": rfm_segments,
-    "ext_slo_burn": slo_burn,
-    "ext_drift_chi2": drift_chi2,
-    "ext_ab_test_zscore": ab_test_zscore,
     "ext_pagerank_types": pagerank_event_types,
     "ext_gap_fill_daily": gap_fill_daily,
     "ext_attribution_last_touch": attribution_last_touch,
-    "ext_watermark_audit": watermark_audit,
     "ext_map_funcs": map_functions,
-    "ext_running_distinct_users": running_distinct_users,
-    "ext_concurrency_sweep": concurrency_sweep,
-    "ext_session_paths": session_paths,
-    "ext_event_transitions": event_transitions,
-    "ext_cohort_retention": cohort_retention,
     "ext_rollup": rollup_priority_status,
     "ext_cube": cube_returnflag_linestatus,
     "ext_grouping_sets": grouping_sets_events,
@@ -6735,7 +3746,6 @@ QUERIES: dict[str, Callable] = {
     "ext_correlated_subquery": correlated_subquery,
     "ext_lateral_topk": lateral_topk,
     "ext_percentiles": percentiles_by_segment,
-    "ext_anomaly_mad": anomaly_mad,
     "ext_unpivot": unpivot_part_metrics,
     "ext_conditional_agg": conditional_aggregates,
     "ext_string_agg": string_agg_nations,
@@ -6770,37 +3780,6 @@ def _pr_iter_sql(r: int) -> str:
             FROM nodes n LEFT JOIN c{r} c ON n.node = c.dst)"""
 
 
-def _drift_pair_sql(name: str, ref: str, cur: str) -> str:
-    return f"""
-        SELECT '{name}' AS pair, MAX(na) AS n_ref, MAX(nb) AS n_cur,
-               COUNT(*) AS n_buckets,
-               CAST(SUM(
-                   CAST(FLOOR({DRIFT_SCALE} * (a - ea) * (a - ea) / ea)
-                        AS BIGINT)
-                 + CAST(FLOOR({DRIFT_SCALE} * (b - eb) * (b - eb) / eb)
-                        AS BIGINT)) AS BIGINT) AS chi2_scaled
-        FROM (
-            SELECT *,
-                   (a + b) * na / (na + nb) AS ea,
-                   (a + b) * nb / (na + nb) AS eb
-            FROM (
-                SELECT bucket,
-                       CAST(SUM(r) AS BIGINT) AS a,
-                       CAST(SUM(c) AS BIGINT) AS b,
-                       CAST(SUM(SUM(r)) OVER () AS BIGINT) AS na,
-                       CAST(SUM(SUM(c)) OVER () AS BIGINT) AS nb
-                FROM (
-                    SELECT LEAST(CAST(FLOOR(value / {DRIFT_BUCKET_W!r})
-                                      AS BIGINT), {DRIFT_BUCKETS - 1})
-                               AS bucket,
-                           CASE WHEN {ref} THEN 1 ELSE 0 END AS r,
-                           CASE WHEN {cur} THEN 1 ELSE 0 END AS c
-                    FROM events) x
-                GROUP BY bucket) g
-            WHERE a + b > 0) t
-    """
-
-
 def _autocorr_lag_sql(lag: int) -> str:
     # exact int128 sums, double conversion in the SAME op order as the
     # Spark decimal path — both sides convert each closed-form term
@@ -6831,39 +3810,6 @@ _KMV_HASHED = """
         FROM events
 """
 
-def _rdd_side_sql(cond: str, tag: str) -> str:
-    return ", ".join(
-        [
-            f"CAST(SUM(CASE WHEN {cond} THEN 1 ELSE 0 END) AS BIGINT)"
-            f" AS n_{tag}",
-            f"CAST(SUM(CASE WHEN {cond} THEN t ELSE 0 END) AS BIGINT)"
-            f" AS st_{tag}",
-            f"CAST(SUM(CASE WHEN {cond} THEN y ELSE 0 END) AS BIGINT)"
-            f" AS sy_{tag}",
-            f"CAST(SUM(CASE WHEN {cond} THEN t * t ELSE 0 END) AS BIGINT)"
-            f" AS stt_{tag}",
-            f"CAST(SUM(CASE WHEN {cond} THEN t * y ELSE 0 END) AS BIGINT)"
-            f" AS sty_{tag}",
-        ]
-    )
-
-
-def _rdd_fit_sql(tag: str) -> tuple[str, str]:
-    n, st, sy = f"n_{tag}", f"st_{tag}", f"sy_{tag}"
-    stt, sty = f"stt_{tag}", f"sty_{tag}"
-    b = f"(({n} * {sty} - {st} * {sy}) / ({n} * {stt} - {st} * {st}))"
-    alpha = f"(({sy} - {b} * {st}) / {n})"
-    return alpha, b
-
-
-_RDD_AL, _RDD_BL = _rdd_fit_sql("l")
-_RDD_AR, _RDD_BR = _rdd_fit_sql("r")
-
-
-_OPE_TGT_SQL = "CASE " + " ".join(
-    f"WHEN event_type = '{a}' THEN CAST({pi} AS DOUBLE)"
-    for a, pi in OPE_TARGET.items()
-) + " END"
 
 _UD_SQL = """
             SELECT CAST(SUM(CASE WHEN event_type = 'click'
@@ -6890,19 +3836,6 @@ _PR_LADDER_SQL = f"""
                    n_pos
             FROM cells CROSS JOIN tot)"""
 
-_GAP_SWEEP_BRKS = ",\n                   ".join(
-    f"CAST(SUM(CASE WHEN gap_us > {m * 60_000_000} THEN 1 ELSE 0 END)"
-    f" AS BIGINT) AS brk_{m}"
-    for m in GAP_SWEEP_MIN
-)
-_GAP_SWEEP_ROWS = "\n        UNION ALL ".join(
-    f"""SELECT CAST({m} AS BIGINT) AS gap_minutes,
-               n_users + brk_{m} AS n_sessions,
-               ROUND(n_events / (n_users + brk_{m}), 4)
-                   AS avg_events_per_session
-        FROM agg"""
-    for m in GAP_SWEEP_MIN
-)
 
 # shared right-censored survival day-grid (mirrors _surv_event_rows)
 _SURV_CTES = """
@@ -6961,76 +3894,6 @@ ORACLES: dict[str, str] = {
                CAST(cum_vq AS DOUBLE) / {_KM_NANO} AS hazard_var
         FROM curve
     """,
-    "ext_session_gap_sweep": f"""
-        WITH ev AS (
-            SELECT user_id, epoch_us(ts) AS us, event_id
-            FROM events),
-        gaps AS (
-            SELECT user_id,
-                   us - LAG(us) OVER (PARTITION BY user_id
-                       ORDER BY us, event_id) AS gap_us
-            FROM ev),
-        agg AS (
-            SELECT CAST(COUNT(*) AS BIGINT) AS n_events,
-                   CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users,
-                   {_GAP_SWEEP_BRKS}
-            FROM gaps)
-        {_GAP_SWEEP_ROWS}
-    """,
-    "ext_qini_curve": f"""
-        WITH users AS (
-            SELECT COUNT(*) AS s,
-                   CAST(SUM(CASE WHEN event_type = 'purchase'
-                       THEN 1 ELSE 0 END) >= {QINI_Y_MIN} AS BIGINT)
-                       AS y,
-                   CAST('0x' || substr(md5('arm:'
-                       || CAST(user_id AS VARCHAR)), 1, 15)
-                       AS BIGINT) % 2 AS z
-            FROM events GROUP BY user_id),
-        cells AS (
-            SELECT s,
-                   CAST(SUM(CASE WHEN z = 1 THEN 1 ELSE 0 END) AS BIGINT)
-                       AS nt,
-                   CAST(SUM(CASE WHEN z = 0 THEN 1 ELSE 0 END) AS BIGINT)
-                       AS nc,
-                   CAST(SUM(CASE WHEN z = 1 THEN y ELSE 0 END) AS BIGINT)
-                       AS yt,
-                   CAST(SUM(CASE WHEN z = 0 THEN y ELSE 0 END) AS BIGINT)
-                       AS yc
-            FROM users GROUP BY s),
-        ladder AS (
-            SELECT s, nt, nc,
-                   SUM(nt) OVER w AS cnt, SUM(nc) OVER w AS cnc,
-                   SUM(yt) OVER w AS cyt, SUM(yc) OVER w AS cyc
-            FROM cells
-            WINDOW w AS (ORDER BY s DESC ROWS BETWEEN UNBOUNDED
-                         PRECEDING AND CURRENT ROW)),
-        tot AS (
-            SELECT CAST(MAX(cnt) AS BIGINT) AS tnt,
-                   CAST(MAX(cnc) AS BIGINT) AS tnc,
-                   CAST(MAX(cyt) AS BIGINT) AS tyt,
-                   CAST(MAX(cyc) AS BIGINT) AS tyc
-            FROM ladder),
-        rws AS (
-            SELECT l.*, t.tnt, t.tnc, t.tyt, t.tyc,
-                   cyt - cyc * (cnt / cnc) AS q,
-                   (tyt - tyc * (tnt / tnc))
-                       * ((cnt + cnc) / (tnt + tnc)) AS rinc
-            FROM ladder l CROSS JOIN tot t),
-        coef AS (
-            SELECT CAST(SUM(CASE WHEN cnc > 0
-                       THEN CAST(FLOOR((q - rinc)
-                            * ((nt + nc) / (tnt + tnc))
-                            * {_NANO} + 0.5) AS BIGINT)
-                       ELSE 0 END) AS BIGINT) AS coef_q
-            FROM rws)
-        SELECT s AS score_threshold,
-               CAST(cnt + cnc AS BIGINT) AS n_targeted,
-               CASE WHEN cnc > 0 THEN ROUND(q, 4) END AS qini_inc,
-               CASE WHEN cnc > 0 THEN ROUND(rinc, 4) END AS random_inc,
-               ROUND(coef_q / {_NANO} * 1.0, 6) AS qini_coef
-        FROM rws CROSS JOIN coef
-    """,
     "ext_pr_curve": f"""
         WITH {_PR_LADDER_SQL},
         l2 AS (
@@ -7048,20 +3911,6 @@ ORACLES: dict[str, str] = {
                ROUND(rec, 6) AS recall,
                ROUND(ap_q / {_NANO} * 1.0, 6) AS average_precision
         FROM l2 CROSS JOIN ap
-    """,
-    "ext_f1_threshold": f"""
-        WITH {_PR_LADDER_SQL},
-        l2 AS (
-            SELECT clicks, tp, fp, n_pos - tp AS fn,
-                   2 * tp / (2 * tp + fp + (n_pos - tp)) AS f1
-            FROM ladder)
-        SELECT clicks AS best_threshold,
-               CAST(tp AS BIGINT) AS tp, CAST(fp AS BIGINT) AS fp,
-               CAST(fn AS BIGINT) AS fn,
-               ROUND(f1, 6) AS f1
-        FROM (SELECT *, ROW_NUMBER() OVER (ORDER BY f1 DESC,
-                          clicks DESC) AS rn
-              FROM l2) WHERE rn = 1
     """,
     "ext_brier_decomposition": f"""
         WITH ud0 AS ({_UD_SQL}),
@@ -7106,165 +3955,6 @@ ORACLES: dict[str, str] = {
                ROUND(res_q / {_NANO} * 1.0, 6) AS resolution,
                ROUND(base_rate * (1.0 - base_rate), 6) AS uncertainty
         FROM comp CROSS JOIN bs
-    """,
-    "ext_segment_auc": """
-        WITH users AS (
-            SELECT user_id,
-                   CAST(SUM(CASE WHEN EXTRACT(day FROM ts) <= 15
-                       THEN 1 ELSE 0 END) AS BIGINT) AS s,
-                   CAST(SUM(CASE WHEN event_type = 'purchase'
-                            AND EXTRACT(day FROM ts) > 15
-                            THEN 1 ELSE 0 END) >= 7 AS BIGINT) AS y
-            FROM events GROUP BY user_id),
-        su AS (
-            SELECT u.*, c.c_mktsegment AS segment
-            FROM users u JOIN customer c ON c.c_custkey = u.user_id),
-        cells AS (
-            SELECT segment, s,
-                   CAST(SUM(y) AS BIGINT) AS pos,
-                   CAST(SUM(1 - y) AS BIGINT) AS neg
-            FROM su GROUP BY segment, s),
-        ladder AS (
-            SELECT segment, pos, neg,
-                   COALESCE(SUM(pos + neg) OVER (PARTITION BY segment
-                       ORDER BY s ROWS BETWEEN UNBOUNDED PRECEDING
-                       AND 1 PRECEDING), 0) AS cum_prev,
-                   pos + neg AS t
-            FROM cells),
-        agg AS (
-            SELECT segment,
-                   CAST(SUM(pos) AS BIGINT) AS n_pos,
-                   CAST(SUM(neg) AS BIGINT) AS n_neg,
-                   CAST(SUM(pos * (2 * cum_prev + t + 1)) AS BIGINT)
-                       AS sr1_2
-            FROM ladder GROUP BY segment)
-        SELECT segment, n_pos, n_neg,
-               CASE WHEN n_pos > 0 AND n_neg > 0
-                    THEN ROUND((sr1_2 - n_pos * (n_pos + 1))
-                               / (2 * n_pos * n_neg), 6)
-               END AS auc
-        FROM agg
-    """,
-    "ext_offpolicy_ips": f"""
-        WITH ev AS (
-            SELECT event_type,
-                   CAST(FLOOR(value * 100 + 0.5) AS BIGINT) AS r
-            FROM events),
-        freq AS (SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_a
-                 FROM ev GROUP BY event_type),
-        tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM ev),
-        wtd AS (
-            SELECT e.r,
-                   ({_OPE_TGT_SQL}) / (f.n_a / t.n) AS w,
-                   t.n
-            FROM ev e JOIN freq f USING (event_type) CROSS JOIN tot t),
-        agg AS (
-            SELECT CAST(MAX(n) AS BIGINT) AS n_events,
-                   CAST(SUM(CAST(FLOOR(r / CAST(100.0 AS DOUBLE) * {_NANO} + 0.5)
-                       AS BIGINT)) AS BIGINT) AS vlog_q,
-                   CAST(SUM(CAST(FLOOR(r / CAST(100.0 AS DOUBLE) * w * {_NANO} + 0.5)
-                       AS BIGINT)) AS BIGINT) AS vips_q,
-                   CAST(SUM(CAST(FLOOR(w * {_NANO} + 0.5) AS BIGINT))
-                       AS BIGINT) AS w_q,
-                   CAST(SUM(CAST(FLOOR(w * w * {_NANO} + 0.5) AS BIGINT))
-                       AS BIGINT) AS ww_q
-            FROM wtd)
-        SELECT n_events,
-               ROUND(vlog_q / {_NANO} / n_events, 6) AS v_logged_usd,
-               ROUND(vips_q / {_NANO} / n_events, 6) AS v_ips_usd,
-               ROUND(vips_q / w_q * 1.0, 6) AS v_snips_usd,
-               ROUND(w_q / {_NANO} * (w_q / {_NANO}) / (ww_q / {_NANO}),
-                     4) AS ess_weights
-        FROM agg
-    """,
-    "ext_rdd_cutoff": f"""
-        WITH users AS (
-            SELECT COUNT(*) - {RDD_CUT} AS t,
-                   CAST(SUM(CASE WHEN event_type = 'purchase'
-                       THEN CAST(FLOOR(value * 100 + 0.5) AS BIGINT)
-                       ELSE 0 END) AS BIGINT) AS y
-            FROM events GROUP BY user_id),
-        band AS (
-            SELECT * FROM users
-            WHERE t >= -{RDD_BW} AND t <= {RDD_BW}),
-        moms AS (
-            SELECT {_rdd_side_sql("t < 0", "l")},
-                   {_rdd_side_sql("t >= 0", "r")}
-            FROM band)
-        SELECT n_l AS n_left, n_r AS n_right,
-               CASE WHEN (n_l * stt_l - st_l * st_l) != 0
-                     AND (n_r * stt_r - st_r * st_r) != 0
-                    THEN ROUND(({_RDD_AR} - {_RDD_AL}) / 100.0, 4)
-               END AS rd_effect_usd,
-               CASE WHEN (n_l * stt_l - st_l * st_l) != 0
-                     AND (n_r * stt_r - st_r * st_r) != 0
-                    THEN ROUND({_RDD_BL} / 100.0, 6)
-               END AS slope_left_usd,
-               CASE WHEN (n_l * stt_l - st_l * st_l) != 0
-                     AND (n_r * stt_r - st_r * st_r) != 0
-                    THEN ROUND({_RDD_BR} / 100.0, 6)
-               END AS slope_right_usd
-        FROM moms
-    """,
-    "ext_double_ml_plm": f"""
-        WITH users AS (
-            SELECT CAST(SUM(CASE WHEN event_type = 'purchase'
-                       THEN CAST(FLOOR(value * 100 + 0.5) AS BIGINT)
-                       ELSE 0 END) AS BIGINT) AS y,
-                   CAST(SUM(CASE WHEN event_type = 'click'
-                       THEN 1 ELSE 0 END) AS BIGINT) AS d,
-                   CAST(SUM(CASE WHEN event_type = 'view'
-                       THEN 1 ELSE 0 END) AS BIGINT) AS x,
-                   CAST('0x' || substr(md5('dml:'
-                       || CAST(user_id AS VARCHAR)), 1, 15)
-                       AS BIGINT) % 2 AS fold
-            FROM events GROUP BY user_id),
-        mom AS (
-            SELECT fold, CAST(COUNT(*) AS BIGINT) AS n,
-                   CAST(SUM(x) AS BIGINT) AS sx,
-                   CAST(SUM(y) AS BIGINT) AS sy,
-                   CAST(SUM(d) AS BIGINT) AS sd,
-                   CAST(SUM(x * x) AS BIGINT) AS sxx,
-                   CAST(SUM(x * y) AS BIGINT) AS sxy,
-                   CAST(SUM(x * d) AS BIGINT) AS sxd
-            FROM users GROUP BY fold),
-        slopes AS (
-            SELECT (1 - fold) AS fold, n, sx, sy, sd,
-                   CAST(n * sxy - sx * sy AS DOUBLE)
-                       / CAST(n * sxx - sx * sx AS DOUBLE) AS by,
-                   CAST(n * sxd - sx * sd AS DOUBLE)
-                       / CAST(n * sxx - sx * sx AS DOUBLE) AS bd
-            FROM mom),
-        co AS (
-            SELECT fold, by, bd,
-                   (CAST(sy AS DOUBLE) - by * CAST(sx AS DOUBLE))
-                       / CAST(n AS DOUBLE) AS ay,
-                   (CAST(sd AS DOUBLE) - bd * CAST(sx AS DOUBLE))
-                       / CAST(n AS DOUBLE) AS ad
-            FROM slopes),
-        red AS (
-            SELECT (u.y - (c.ay + c.by * u.x)) AS ry,
-                   (u.d - (c.ad + c.bd * u.x)) AS rd
-            FROM users u JOIN co c ON c.fold = u.fold),
-        sums AS (
-            SELECT CAST(COUNT(*) AS BIGINT) AS n_users,
-                   CAST(SUM(CAST(FLOOR(ry * rd * {DML_Q} + 0.5)
-                       AS BIGINT)) AS BIGINT) AS syd_q,
-                   CAST(SUM(CAST(FLOOR(rd * rd * {DML_Q} + 0.5)
-                       AS BIGINT)) AS BIGINT) AS sdd_q
-            FROM red),
-        pooled AS (
-            SELECT CAST(COUNT(*) AS BIGINT) AS n,
-                   CAST(SUM(y) AS BIGINT) AS sy,
-                   CAST(SUM(d) AS BIGINT) AS sd,
-                   CAST(SUM(d * d) AS BIGINT) AS sdd,
-                   CAST(SUM(d * y) AS BIGINT) AS sdy
-            FROM users)
-        SELECT n_users,
-               ROUND(syd_q / sdd_q / 100.0, 6) AS theta_usd_per_click,
-               ROUND((n * sdy - sd * sy) / (n * sdd - sd * sd)
-                     / 100.0, 6) AS naive_usd_per_click
-        FROM sums CROSS JOIN pooled
     """,
     "ext_iv_wald": f"""
         WITH users AS (
@@ -7512,44 +4202,6 @@ ORACLES: dict[str, str] = {
                iso.iso_p
         FROM pre p JOIN iso ON p.clicks = iso.i
     """,
-    "ext_calibration_ece": f"""
-        WITH ud AS (
-            SELECT user_id, CAST(ts AS DATE) AS day,
-                   SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
-                       AS clicks,
-                   MAX(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-                       AS y
-            FROM events GROUP BY 1, 2),
-        scoredp AS (
-            SELECT clicks / (clicks + {float(ECE_SMOOTH)}) AS p, y FROM ud),
-        binned AS (
-            SELECT CAST(LEAST(FLOOR(p * {ECE_BINS}), {ECE_BINS - 1})
-                        AS BIGINT) AS bin, p, y
-            FROM scoredp),
-        per_bin AS (
-            SELECT bin, COUNT(*) AS n_days,
-                   CAST(SUM(CAST(FLOOR(p * {_NANO} + 0.5) AS BIGINT))
-                        AS BIGINT) AS conf_q,
-                   CAST(SUM(y) AS BIGINT) AS n_pos
-            FROM binned GROUP BY bin),
-        tot AS (SELECT CAST(SUM(n_days) AS BIGINT) AS n_total
-                FROM per_bin),
-        rws AS (
-            SELECT bin, n_days,
-                   conf_q / {_NANO} / n_days AS conf,
-                   n_pos / n_days AS acc,
-                   n_total
-            FROM per_bin CROSS JOIN tot),
-        ece AS (
-            SELECT CAST(SUM(CAST(FLOOR(n_days / n_total
-                       * ABS(acc - conf) * {_NANO} + 0.5) AS BIGINT))
-                       AS BIGINT) AS ece_q
-            FROM rws)
-        SELECT bin, CAST(n_days AS BIGINT) AS n_days,
-               ROUND(conf, 6) AS conf, ROUND(acc, 6) AS acc,
-               ROUND(ece_q / {_NANO} * 1.0, 6) AS ece
-        FROM rws CROSS JOIN ece
-    """,
     "ext_propensity_match": f"""
         WITH users AS (
             SELECT user_id, COUNT(*) AS a,
@@ -7647,39 +4299,6 @@ ORACLES: dict[str, str] = {
                    AS coverage_test
         FROM mu CROSS JOIN radius
     """,
-    "ext_experiment_health": """
-        WITH ud AS (
-            SELECT DISTINCT user_id, strftime(ts, '%Y-%m-%d') AS day
-            FROM events),
-        armed AS (
-            SELECT day,
-                   CAST('0x' || substr(md5('arm:'
-                       || CAST(user_id AS VARCHAR)), 1, 15)
-                       AS BIGINT) % 2 AS arm
-            FROM ud),
-        tot AS (
-            SELECT CAST(SUM(CASE WHEN arm = 1 THEN 1 ELSE 0 END)
-                        AS BIGINT) AS n1,
-                   CAST(SUM(CASE WHEN arm = 0 THEN 1 ELSE 0 END)
-                        AS BIGINT) AS n0
-            FROM armed),
-        daily AS (
-            SELECT day,
-                   SUM(CASE WHEN arm = 1 THEN 1 ELSE 0 END) AS d1,
-                   COUNT(*) AS dn
-            FROM armed GROUP BY day),
-        worst AS (
-            SELECT MAX(ABS(d1 / dn - 0.5)) AS worst_daily_imbalance
-            FROM daily)
-        SELECT n1 AS n_arm1_user_days, n0 AS n_arm0_user_days,
-               ROUND(CAST((n1 - n0) * (n1 - n0) AS DOUBLE)
-                     / (n1 + n0), 4) AS srm_chi2,
-               CAST((n1 - n0) * (n1 - n0) AS DOUBLE) / (n1 + n0)
-                   > 3.841 AS srm_fail,
-               ROUND(worst_daily_imbalance, 4)
-                   AS worst_daily_imbalance
-        FROM tot CROSS JOIN worst
-    """,
     "ext_hill_tail_index": f"""
         WITH rev AS (
             SELECT o_custkey,
@@ -7703,283 +4322,6 @@ ORACLES: dict[str, str] = {
                ROUND(x_ref / 100.0, 2) AS x_ref_usd,
                ROUND(k_used / (lq / {_NANO}), 4) AS hill_alpha
         FROM agg CROSS JOIN ref
-    """,
-    "ext_price_elasticity": f"""
-        WITH lx AS (
-            SELECT p_brand,
-                   LN(l_extendedprice / l_quantity) AS x,
-                   LN(CAST(l_quantity AS DOUBLE)) AS y
-            FROM lineitem
-            JOIN part ON p_partkey = l_partkey),
-        m AS (
-            SELECT p_brand, COUNT(*) AS n,
-                   CAST(SUM(CAST(FLOOR(x * {_NANO} + 0.5) AS BIGINT))
-                        AS BIGINT) AS sx,
-                   CAST(SUM(CAST(FLOOR(y * {_NANO} + 0.5) AS BIGINT))
-                        AS BIGINT) AS sy,
-                   CAST(SUM(CAST(FLOOR(x * y * {_NANO} + 0.5)
-                                 AS BIGINT)) AS BIGINT) AS sxy,
-                   CAST(SUM(CAST(FLOOR(x * x * {_NANO} + 0.5)
-                                 AS BIGINT)) AS BIGINT) AS sxx
-            FROM lx GROUP BY p_brand)
-        SELECT p_brand, n AS n_lines,
-               ROUND((CAST(n AS DOUBLE) * (sxy / {_NANO})
-                      - (sx / {_NANO}) * (sy / {_NANO}))
-                     / (CAST(n AS DOUBLE) * (sxx / {_NANO})
-                        - (sx / {_NANO}) * (sx / {_NANO})), 4)
-                   AS elasticity,
-               ROUND((CAST(n AS DOUBLE) * (sxy / {_NANO})
-                      - (sx / {_NANO}) * (sy / {_NANO}))
-                     / (CAST(n AS DOUBLE) * (sxx / {_NANO})
-                        - (sx / {_NANO}) * (sx / {_NANO})), 4) < -1.0
-                   AS elastic
-        FROM m
-    """,
-    "ext_stratified_effect": f"""
-        WITH users AS (
-            SELECT user_id,
-                   CAST(SUM(CASE WHEN event_type = 'purchase'
-                            THEN CAST(FLOOR(value * 100 + 0.5)
-                                      AS BIGINT)
-                            ELSE 0 END) AS BIGINT) AS x,
-                   CAST('0x' || substr(md5('arm:'
-                       || CAST(user_id AS VARCHAR)), 1, 15)
-                       AS BIGINT) % 2 AS arm
-            FROM events GROUP BY user_id),
-        joined AS (
-            SELECT u.*, c.c_mktsegment
-            FROM users u JOIN customer c ON c.c_custkey = u.user_id),
-        per_seg AS (
-            SELECT c_mktsegment, COUNT(*) AS n_seg,
-                   CAST(SUM(CASE WHEN arm = 1 THEN 1 ELSE 0 END)
-                        AS BIGINT) AS n1,
-                   CAST(SUM(CASE WHEN arm = 1 THEN x ELSE 0 END)
-                        AS BIGINT) AS s1,
-                   CAST(SUM(CASE WHEN arm = 0 THEN 1 ELSE 0 END)
-                        AS BIGINT) AS n0,
-                   CAST(SUM(CASE WHEN arm = 0 THEN x ELSE 0 END)
-                        AS BIGINT) AS s0
-            FROM joined GROUP BY c_mktsegment
-            HAVING SUM(CASE WHEN arm = 1 THEN 1 ELSE 0 END) > 0
-               AND SUM(CASE WHEN arm = 0 THEN 1 ELSE 0 END) > 0),
-        ntot AS (SELECT CAST(SUM(n_seg) AS BIGINT) AS nt
-                 FROM per_seg),
-        strat AS (
-            SELECT CAST(SUM(CAST(FLOOR(n_seg / nt
-                       * (s1 / n1 - s0 / n0) * {_NANO} + 0.5)
-                       AS BIGINT)) AS BIGINT) AS ate_q,
-                   CAST(SUM(n_seg) AS BIGINT) AS n_used
-            FROM per_seg CROSS JOIN ntot),
-        pooled AS (
-            SELECT SUM(CASE WHEN arm = 1 THEN x ELSE 0 END)
-                   / SUM(CASE WHEN arm = 1 THEN 1 ELSE 0 END)
-                   - SUM(CASE WHEN arm = 0 THEN x ELSE 0 END)
-                     / SUM(CASE WHEN arm = 0 THEN 1 ELSE 0 END)
-                       AS pooled
-            FROM joined)
-        SELECT n_used AS n_users,
-               ROUND(ate_q / {_NANO} / 100.0, 4)
-                   AS stratified_ate_usd,
-               ROUND(pooled / 100.0, 4) AS pooled_diff_usd
-        FROM strat CROSS JOIN pooled
-    """,
-    "ext_quantile_treatment_effect": f"""
-        WITH ev AS (
-            SELECT CAST('0x' || substr(md5('arm:'
-                       || CAST(user_id AS VARCHAR)), 1, 15)
-                       AS BIGINT) % 2 AS arm,
-                   CAST(FLOOR(value * 100 + 0.5) AS BIGINT) AS c
-            FROM events WHERE event_type = 'purchase'),
-        m AS (
-            SELECT arm, COUNT(*) AS n,
-                   {", ".join(
-                       f"ROUND(quantile_cont(c, {p!r}), 6)"
-                       f" AS q_{int(p * 100)}"
-                       for p in QTE_PS
-                   )}
-            FROM ev GROUP BY arm),
-        wide AS (
-            SELECT a1.n AS n1, a0.n AS n0,
-                   {", ".join(
-                       f"a1.q_{int(p * 100)} AS t_{int(p * 100)}, "
-                       f"a0.q_{int(p * 100)} AS c_{int(p * 100)}"
-                       for p in QTE_PS
-                   )}
-            FROM (SELECT * FROM m WHERE arm = 1) a1
-            CROSS JOIN (SELECT * FROM m WHERE arm = 0) a0)
-        {" UNION ALL ".join(
-            f'''SELECT CAST({int(p * 100)} AS BIGINT) AS pct, n1, n0,
-                   ROUND(t_{int(p * 100)} / 100.0, 4) AS treat_usd,
-                   ROUND(c_{int(p * 100)} / 100.0, 4) AS ctrl_usd,
-                   ROUND((t_{int(p * 100)} - c_{int(p * 100)})
-                         / 100.0, 4) AS qte_usd
-            FROM wide'''
-            for p in QTE_PS
-        )}
-    """,
-    "ext_churn_features": f"""
-        WITH ev AS (
-            SELECT user_id, event_type,
-                   strftime(ts, '%Y-%m-%d') AS day,
-                   CAST(FLOOR(value * 100 + 0.5) AS BIGINT) AS cents
-            FROM events)
-        SELECT user_id,
-               CAST(SUM(CASE WHEN day < '{CHURN_CUT}'
-                             THEN 1 ELSE 0 END) AS BIGINT)
-                   AS n_events_pre,
-               CAST(SUM(CASE WHEN day < '{CHURN_CUT}'
-                                  AND event_type = 'purchase'
-                             THEN cents ELSE 0 END) AS BIGINT)
-                   AS spend_pre_cents,
-               CAST(COUNT(DISTINCT CASE WHEN day < '{CHURN_CUT}'
-                                        THEN day END) AS BIGINT)
-                   AS active_days_pre,
-               CAST(datediff('day',
-                    CAST(MAX(CASE WHEN day < '{CHURN_CUT}'
-                             THEN day END) AS DATE),
-                    DATE '{CHURN_CUT}') AS BIGINT) AS recency_days,
-               CAST(1 - MAX(CASE WHEN day >= '{CHURN_CUT}'
-                                 THEN 1 ELSE 0 END) AS BIGINT)
-                   AS churned
-        FROM ev GROUP BY user_id
-        HAVING SUM(CASE WHEN day < '{CHURN_CUT}'
-                        THEN 1 ELSE 0 END) > 0
-    """,
-    "ext_target_encoding": f"""
-        WITH users AS (
-            SELECT user_id,
-                   MAX(CASE WHEN event_type = 'purchase'
-                            THEN 1 ELSE 0 END) AS y
-            FROM events GROUP BY user_id),
-        joined AS (
-            SELECT u.*, c.c_mktsegment
-            FROM users u JOIN customer c ON c.c_custkey = u.user_id),
-        cat AS (
-            SELECT c_mktsegment, COUNT(*) AS n,
-                   CAST(SUM(y) AS BIGINT) AS s
-            FROM joined GROUP BY c_mktsegment),
-        prior AS (
-            SELECT SUM(y) / COUNT(*) AS mu FROM joined)
-        SELECT c_mktsegment, n,
-               ROUND(s / n, 6) AS raw_rate,
-               ROUND((s + {TE_SMOOTH_M!r} * mu) / (n + {TE_SMOOTH_M!r}),
-                     6) AS encoded,
-               ROUND(mu, 6) AS prior
-        FROM cat CROSS JOIN prior
-    """,
-    "ext_decayed_engagement": f"""
-        WITH ev AS (
-            SELECT user_id, event_type, CAST(ts AS DATE) AS day,
-                   CAST(FLOOR(value * 100 + 0.5) AS BIGINT) AS cents
-            FROM events),
-        anchor AS (SELECT MAX(day) AS d0 FROM ev),
-        aged AS (
-            SELECT user_id, event_type, cents,
-                   POW(2.0, -datediff('day', day, d0)
-                             / {DECAY_HALF_LIFE_D!r}) AS w
-            FROM ev CROSS JOIN anchor),
-        scored AS (
-            SELECT user_id, COUNT(*) AS n_events,
-                   CAST(SUM(CAST(FLOOR(w * {_NANO} + 0.5) AS BIGINT))
-                        AS BIGINT) AS eng_q,
-                   CAST(SUM(CAST(FLOOR(CASE WHEN event_type = 'purchase'
-                                 THEN w * cents / 100.0 ELSE 0.0 END
-                                 * {_NANO} + 0.5) AS BIGINT))
-                        AS BIGINT) AS rev_q
-            FROM aged GROUP BY user_id)
-        SELECT user_id, n_events,
-               ROUND(eng_q / {_NANO}, 4) AS decayed_events,
-               ROUND(rev_q / {_NANO}, 4) AS decayed_rev_usd
-        FROM scored
-        ORDER BY decayed_events DESC, user_id LIMIT {DECAY_TOPK}
-    """,
-    "ext_simpson_screen": """
-        WITH users AS (
-            SELECT user_id,
-                   MAX(CASE WHEN event_type = 'purchase'
-                            THEN 1 ELSE 0 END) AS converted,
-                   CAST('0x' || substr(md5('arm:'
-                       || CAST(MIN(user_id) AS VARCHAR)), 1, 15)
-                       AS BIGINT) % 2 AS arm
-            FROM events GROUP BY user_id),
-        joined AS (
-            SELECT u.*, c.c_mktsegment
-            FROM users u
-            JOIN customer c ON c.c_custkey = u.user_id),
-        per_seg AS (
-            SELECT c_mktsegment,
-                   CAST(SUM(CASE WHEN arm = 1 THEN 1 ELSE 0 END)
-                        AS BIGINT) AS n1,
-                   CAST(SUM(CASE WHEN arm = 1 THEN converted
-                            ELSE 0 END) AS BIGINT) AS c1,
-                   CAST(SUM(CASE WHEN arm = 0 THEN 1 ELSE 0 END)
-                        AS BIGINT) AS n0,
-                   CAST(SUM(CASE WHEN arm = 0 THEN converted
-                            ELSE 0 END) AS BIGINT) AS c0
-            FROM joined GROUP BY c_mktsegment
-            HAVING SUM(CASE WHEN arm = 1 THEN 1 ELSE 0 END) > 0
-               AND SUM(CASE WHEN arm = 0 THEN 1 ELSE 0 END) > 0),
-        pooled AS (
-            SELECT SUM(CASE WHEN arm = 1 THEN converted ELSE 0 END)
-                   / SUM(CASE WHEN arm = 1 THEN 1 ELSE 0 END)
-                   - SUM(CASE WHEN arm = 0 THEN converted ELSE 0 END)
-                     / SUM(CASE WHEN arm = 0 THEN 1 ELSE 0 END)
-                       AS pooled_diff
-            FROM joined)
-        SELECT c_mktsegment, n1, n0,
-               ROUND(c1 / n1, 6) AS rate1,
-               ROUND(c0 / n0, 6) AS rate0,
-               ROUND(c1 / n1 - c0 / n0, 6) AS seg_diff,
-               ROUND(pooled_diff, 6) AS pooled_diff,
-               SIGN(c1 / n1 - c0 / n0) <> SIGN(pooled_diff)
-                   AS reversed
-        FROM per_seg CROSS JOIN pooled
-    """,
-    "ext_permutation_test": f"""
-        WITH per_user AS (
-            SELECT user_id,
-                   CAST(SUM(CAST(FLOOR(value * 100 + 0.5) AS BIGINT))
-                        AS BIGINT) AS x
-            FROM events WHERE event_type = 'purchase'
-            GROUP BY user_id),
-        obs AS (
-            SELECT COUNT(*) AS n_users,
-                   SUM(CASE WHEN arm = 1 THEN x ELSE 0 END)
-                   / SUM(CASE WHEN arm = 1 THEN 1 ELSE 0 END)
-                   - SUM(CASE WHEN arm = 0 THEN x ELSE 0 END)
-                     / SUM(CASE WHEN arm = 0 THEN 1 ELSE 0 END) AS obs
-            FROM (SELECT x,
-                         CAST('0x' || substr(md5('arm:'
-                             || CAST(user_id AS VARCHAR)), 1, 15)
-                             AS BIGINT) % 2 AS arm
-                  FROM per_user)),
-        reps AS (
-            SELECT b, x,
-                   CAST('0x' || substr(md5('perm:'
-                       || CAST(user_id AS VARCHAR) || '#'
-                       || CAST(b AS VARCHAR)), 1, 15)
-                       AS BIGINT) % 2 AS arm
-            FROM per_user
-            CROSS JOIN (SELECT UNNEST(range(1, {PERM_B} + 1)) AS b)),
-        stats AS (
-            SELECT b,
-                   SUM(CASE WHEN arm = 1 THEN x ELSE 0 END)
-                   / SUM(CASE WHEN arm = 1 THEN 1 ELSE 0 END)
-                   - SUM(CASE WHEN arm = 0 THEN x ELSE 0 END)
-                     / SUM(CASE WHEN arm = 0 THEN 1 ELSE 0 END)
-                       AS stat
-            FROM reps GROUP BY b),
-        extreme AS (
-            SELECT CAST(SUM(CASE WHEN ABS(stat) >= ABS(obs)
-                                 THEN 1 ELSE 0 END) AS BIGINT)
-                       AS n_extreme
-            FROM stats CROSS JOIN obs)
-        SELECT n_users,
-               ROUND(obs / 100.0, 4) AS obs_diff_usd,
-               CAST({PERM_B} AS BIGINT) AS n_perms,
-               ROUND((n_extreme + 1.0) / ({PERM_B} + 1.0), 4)
-                   AS p_value
-        FROM obs CROSS JOIN extreme
     """,
     "ext_journey_entropy": f"""
         WITH ev AS (
@@ -8146,188 +4488,6 @@ ORACLES: dict[str, str] = {
                ROUND(ols_slope / 100.0, 6) AS ols_usd_per_day
         FROM ols CROSS JOIN ts
     """,
-    "ext_ratio_metric_delta": """
-        WITH per_user AS (
-            SELECT CAST('0x' || substr(md5('arm:'
-                       || CAST(user_id AS VARCHAR)), 1, 15)
-                       AS BIGINT) % 2 AS arm,
-                   CAST(SUM(CASE WHEN event_type = 'purchase'
-                            THEN CAST(FLOOR(value * 100 + 0.5)
-                                      AS BIGINT) ELSE 0 END)
-                        AS HUGEINT) AS x,
-                   CAST(SUM(CASE WHEN event_type = 'click'
-                            THEN 1 ELSE 0 END) AS HUGEINT) AS y
-            FROM events
-            WHERE event_type IN ('click', 'purchase')
-            GROUP BY user_id),
-        m AS (
-            SELECT arm, CAST(COUNT(*) AS HUGEINT) AS n,
-                   SUM(x) AS sx, SUM(y) AS sy,
-                   SUM(x * x) AS sxx, SUM(y * y) AS syy,
-                   SUM(x * y) AS sxy
-            FROM per_user GROUP BY arm),
-        f AS (
-            SELECT arm, CAST(n AS BIGINT) AS n_users,
-                   CAST(sx AS DOUBLE) / CAST(sy AS DOUBLE) AS r,
-                   ((CAST(n * sxx AS DOUBLE) - CAST(sx * sx AS DOUBLE))
-                    / CAST(n * (n - 1) AS DOUBLE)
-                    + (CAST(sx AS DOUBLE) / CAST(sy AS DOUBLE))
-                      * (CAST(sx AS DOUBLE) / CAST(sy AS DOUBLE))
-                      * ((CAST(n * syy AS DOUBLE)
-                          - CAST(sy * sy AS DOUBLE))
-                         / CAST(n * (n - 1) AS DOUBLE))
-                    - 2.0 * (CAST(sx AS DOUBLE) / CAST(sy AS DOUBLE))
-                      * ((CAST(n * sxy AS DOUBLE)
-                          - CAST(sx * sy AS DOUBLE))
-                         / CAST(n * (n - 1) AS DOUBLE)))
-                   / (CAST(n AS DOUBLE)
-                      * (CAST(sy AS DOUBLE) / CAST(n AS DOUBLE))
-                      * (CAST(sy AS DOUBLE) / CAST(n AS DOUBLE)))
-                       AS vr
-            FROM m)
-        SELECT a1.n_users AS n1, a0.n_users AS n0,
-               ROUND(a1.r / 100.0, 6) AS rpc1_usd,
-               ROUND(a0.r / 100.0, 6) AS rpc0_usd,
-               ROUND((a1.r - a0.r) / SQRT(a1.vr + a0.vr), 4) AS z
-        FROM (SELECT * FROM f WHERE arm = 1) a1
-        CROSS JOIN (SELECT * FROM f WHERE arm = 0) a0
-    """,
-    "ext_ltv_triangle": """
-        WITH ev AS (
-            SELECT user_id, event_type, CAST(ts AS DATE) AS day,
-                   CAST(FLOOR(value * 100 + 0.5) AS BIGINT) AS cents
-            FROM events),
-        first_seen AS (
-            SELECT user_id,
-                   CAST(date_trunc('week', MIN(day)) AS DATE) AS cohort
-            FROM ev GROUP BY user_id),
-        sizes AS (SELECT cohort, COUNT(*) AS n_users
-                  FROM first_seen GROUP BY cohort),
-        rev AS (
-            SELECT cohort,
-                   CAST(FLOOR(datediff('day', cohort, day) / 7)
-                        AS BIGINT) AS age_week,
-                   CAST(SUM(cents) AS BIGINT) AS rev
-            FROM ev JOIN first_seen USING (user_id)
-            WHERE event_type = 'purchase'
-            GROUP BY 1, 2),
-        cum AS (
-            SELECT cohort, age_week,
-                   SUM(rev) OVER (PARTITION BY cohort ORDER BY age_week
-                       ROWS BETWEEN UNBOUNDED PRECEDING
-                       AND CURRENT ROW) AS cum
-            FROM rev)
-        SELECT strftime(cum.cohort, '%Y-%m-%d') AS cohort, age_week,
-               n_users,
-               ROUND(CAST(cum AS DOUBLE) / 100.0 / n_users, 4)
-                   AS cum_ltv_usd
-        FROM cum JOIN sizes ON sizes.cohort = cum.cohort
-    """,
-    "ext_sliding_median": """
-        WITH daily AS (
-            SELECT strftime(o_orderdate, '%Y-%m-%d') AS day,
-                   CAST(SUM(CAST(FLOOR(o_totalprice * 100 + 0.5)
-                                 AS BIGINT)) AS BIGINT) AS rev
-            FROM orders GROUP BY 1),
-        rolled AS (
-            SELECT day, ROUND(rev / 100.0, 2) AS rev_usd,
-                   ROUND(quantile_cont(rev, 0.5) OVER (ORDER BY day
-                       ROWS BETWEEN 6 PRECEDING AND CURRENT ROW)
-                       / 100.0, 4) AS med7_usd,
-                   COUNT(*) OVER (ORDER BY day
-                       ROWS BETWEEN 6 PRECEDING AND CURRENT ROW) AS n7
-            FROM daily)
-        SELECT day, rev_usd, med7_usd FROM rolled WHERE n7 = 7
-    """,
-    "ext_max_drawdown": f"""
-        WITH daily AS (
-            SELECT strftime(o_orderdate, '%Y-%m-%d') AS day,
-                   CAST(SUM(CAST(FLOOR(o_totalprice * 100 + 0.5)
-                                 AS BIGINT)) AS BIGINT) AS rev
-            FROM orders GROUP BY 1),
-        curve AS (
-            SELECT day,
-                   SUM(rev) OVER (ORDER BY day
-                       ROWS BETWEEN UNBOUNDED PRECEDING
-                       AND CURRENT ROW) AS cum
-            FROM daily),
-        peaks AS (
-            SELECT day, cum,
-                   MAX(cum) OVER (ORDER BY day
-                       ROWS BETWEEN UNBOUNDED PRECEDING
-                       AND CURRENT ROW) AS peak
-            FROM curve)
-        SELECT day, ROUND(cum / 100.0, 2) AS cum_usd,
-               ROUND(peak / 100.0, 2) AS peak_usd,
-               CAST(FLOOR(CAST(peak - cum AS DOUBLE) * 10000 / peak)
-                    AS BIGINT) AS dd_bps
-        FROM peaks ORDER BY peak - cum DESC, day LIMIT {CUSUM_TOP}
-    """,
-    "ext_logrank_test": f"""
-        WITH ev AS (
-            SELECT user_id, event_type, CAST(ts AS DATE) AS day
-            FROM events),
-        per_user AS (
-            SELECT user_id,
-                   MIN(CASE WHEN event_type = 'click'
-                            THEN day END) AS t0,
-                   MAX(day) AS last_seen
-            FROM ev GROUP BY user_id
-            HAVING MIN(CASE WHEN event_type = 'click' THEN day END)
-                   IS NOT NULL),
-        first_buy AS (
-            SELECT e.user_id, MIN(e.day) AS t_buy
-            FROM ev e JOIN per_user p ON e.user_id = p.user_id
-            WHERE e.event_type = 'purchase' AND e.day >= p.t0
-            GROUP BY e.user_id),
-        durs AS (
-            SELECT CAST('0x' || substr(md5('arm:'
-                            || CAST(user_id AS VARCHAR)), 1, 15)
-                        AS BIGINT) % 2 AS arm,
-                   CAST(datediff('day', t0,
-                                 COALESCE(t_buy, last_seen))
-                        AS BIGINT) AS dur,
-                   CASE WHEN t_buy IS NOT NULL THEN 1 ELSE 0 END AS d
-            FROM per_user LEFT JOIN first_buy USING (user_id)),
-        cells AS (SELECT arm, dur, COUNT(*) AS n_at,
-                         CAST(SUM(d) AS BIGINT) AS d_at
-                  FROM durs GROUP BY 1, 2),
-        ev_days AS (SELECT DISTINCT dur AS t FROM cells
-                    WHERE d_at > 0),
-        at_t AS (
-            SELECT t, arm, CAST(SUM(n_at) AS BIGINT) AS n_risk,
-                   CAST(SUM(CASE WHEN dur = t THEN d_at ELSE 0 END)
-                        AS BIGINT) AS d_t
-            FROM cells JOIN ev_days ON dur >= t
-            GROUP BY t, arm),
-        terms AS (
-            SELECT a1.t, a1.d_t AS d1,
-                   a1.n_risk + a0.n_risk AS n,
-                   a1.d_t + a0.d_t AS d,
-                   a1.n_risk AS n1, a0.n_risk AS n0
-            FROM (SELECT * FROM at_t WHERE arm = 1) a1
-            JOIN (SELECT * FROM at_t WHERE arm = 0) a0
-              ON a1.t = a0.t),
-        agg AS (
-            SELECT CAST(SUM(d1) AS BIGINT) AS o1,
-                   CAST(SUM(CAST(FLOOR(CAST(d AS DOUBLE) * n1 / n
-                            * {_NANO} + 0.5) AS BIGINT)) AS BIGINT)
-                       AS e1_q,
-                   CAST(SUM(CAST(FLOOR(CAST(d AS DOUBLE) * n1 * n0
-                            * (n - d)
-                            / (CAST(n AS DOUBLE) * n * (n - 1))
-                            * {_NANO} + 0.5) AS BIGINT)) AS BIGINT)
-                       AS v_q
-            FROM terms WHERE n > 1),
-        sizes AS (SELECT arm, COUNT(*) AS nu FROM durs GROUP BY arm)
-        SELECT (SELECT nu FROM sizes WHERE arm = 1) AS n_arm1,
-               (SELECT nu FROM sizes WHERE arm = 0) AS n_arm0,
-               o1 AS observed1,
-               ROUND(e1_q / {_NANO}, 4) AS expected1,
-               ROUND((o1 - e1_q / {_NANO}) * (o1 - e1_q / {_NANO})
-                     / (v_q / {_NANO}), 4) AS chi2
-        FROM agg
-    """,
     "ext_rrf_fusion": rf"""
         WITH tok AS (
             SELECT doc_id, UNNEST(string_split_regex(text, '\s+')) AS t
@@ -8446,51 +4606,6 @@ ORACLES: dict[str, str] = {
         FROM scored GROUP BY doc_id
         ORDER BY bm25 DESC, doc_id LIMIT {BM25_TOPK}
     """,
-    "ext_bh_fdr": f"""
-        WITH m AS (
-            SELECT event_type, CAST(COUNT(*) AS HUGEINT) AS n,
-                   SUM(c) AS s, SUM(c * c) AS ss
-            FROM (SELECT event_type,
-                         CAST(FLOOR(value * 100 + 0.5) AS HUGEINT) AS c
-                  FROM events)
-            GROUP BY event_type),
-        g AS (SELECT SUM(n) AS gn, SUM(s) AS gs, SUM(ss) AS gss
-              FROM m),
-        scored AS (
-            SELECT event_type, CAST(n AS BIGINT) AS n_events,
-                   (CAST(s AS DOUBLE) / CAST(n AS DOUBLE)
-                    - CAST(gs AS DOUBLE) / CAST(gn AS DOUBLE))
-                   / SQRT(((CAST(gn * gss AS DOUBLE)
-                            - CAST(gs * gs AS DOUBLE))
-                           / CAST(gn * (gn - 1) AS DOUBLE))
-                          / CAST(n AS DOUBLE)) AS z
-            FROM m CROSS JOIN g),
-        withp AS (
-            SELECT event_type, n_events, z,
-                   2.0 * (EXP(-ABS(z) * ABS(z) / 2.0)
-                          / {_SQRT_2PI!r}
-                          * ({_AS_B[0]!r} * k
-                             + {_AS_B[1]!r} * k * k
-                             + {_AS_B[2]!r} * k * k * k
-                             + {_AS_B[3]!r} * k * k * k * k
-                             + {_AS_B[4]!r} * k * k * k * k * k))
-                       AS p
-            FROM (SELECT *, 1.0 / (1.0 + {_AS_P!r} * ABS(z)) AS k
-                  FROM scored)),
-        ranked AS (
-            SELECT event_type, n_events, ROUND(z, 4) + 0.0 AS z,
-                   ROUND(p, 8) AS p,
-                   ROW_NUMBER() OVER (ORDER BY p, event_type) AS rank,
-                   COUNT(*) OVER () AS m
-            FROM withp),
-        kstar AS (
-            SELECT MAX(rank) AS kstar FROM ranked
-            WHERE p <= rank * {BH_Q} / m)
-        SELECT event_type, n_events, z, p, rank,
-               ROUND(rank * {BH_Q} / m, 8) AS bh_cut,
-               rank <= COALESCE(kstar, 0) AS reject
-        FROM ranked CROSS JOIN kstar
-    """,
     "ext_tfidf_cosine_pairs": rf"""
         WITH tok AS (
             SELECT doc_id, UNNEST(string_split_regex(text, '\s+')) AS t
@@ -8526,79 +4641,6 @@ ORACLES: dict[str, str] = {
         JOIN norms na ON na.doc_id = doc_a
         JOIN norms nb ON nb.doc_id = doc_b
         ORDER BY cosine DESC, doc_a, doc_b LIMIT {TFIDF_TOPK}
-    """,
-    "ext_cuped_adjustment": f"""
-        WITH per_user AS (
-            SELECT user_id,
-                   CAST(SUM(CASE WHEN strftime(ts, '%Y-%m-%d')
-                                      < '{DID_CUT}'
-                                 THEN CAST(FLOOR(value * 100 + 0.5)
-                                           AS BIGINT)
-                                 ELSE 0 END) AS HUGEINT) AS x,
-                   CAST(SUM(CASE WHEN strftime(ts, '%Y-%m-%d')
-                                      >= '{DID_CUT}'
-                                 THEN CAST(FLOOR(value * 100 + 0.5)
-                                           AS BIGINT)
-                                 ELSE 0 END) AS HUGEINT) AS y
-            FROM events WHERE event_type = 'purchase'
-            GROUP BY user_id),
-        m AS (
-            SELECT CAST(COUNT(*) AS HUGEINT) AS n, SUM(x) AS sx,
-                   SUM(y) AS sy, SUM(x * y) AS sxy,
-                   SUM(x * x) AS sxx, SUM(y * y) AS syy
-            FROM per_user),
-        f AS (
-            SELECT n, sy,
-                   CAST(n * sxy AS DOUBLE) - CAST(sx * sy AS DOUBLE)
-                       AS num,
-                   CAST(n * sxx AS DOUBLE) - CAST(sx * sx AS DOUBLE)
-                       AS denx,
-                   CAST(n * syy AS DOUBLE) - CAST(sy * sy AS DOUBLE)
-                       AS deny
-            FROM m)
-        SELECT CAST(n AS BIGINT) AS n_users,
-               ROUND(CAST(sy AS DOUBLE) / CAST(n AS DOUBLE) / 100.0, 4)
-                   AS mean_post_usd,
-               ROUND(num / denx, 6) AS theta,
-               ROUND(num * num / (denx * deny) * 100.0, 4)
-                   AS var_reduction_pct
-        FROM f
-    """,
-    "ext_mann_whitney": """
-        WITH ev AS (
-            SELECT CAST(FLOOR(value * 100 + 0.5) AS BIGINT) AS v,
-                   event_type = 'click' AS is_a
-            FROM events WHERE event_type IN ('click', 'purchase')),
-        cells AS (
-            SELECT v,
-                   CAST(SUM(CASE WHEN is_a THEN 1 ELSE 0 END)
-                        AS BIGINT) AS ca,
-                   CAST(SUM(CASE WHEN is_a THEN 0 ELSE 1 END)
-                        AS BIGINT) AS cb
-            FROM ev GROUP BY v),
-        ladder AS (
-            SELECT v, ca, cb, ca + cb AS t,
-                   COALESCE(SUM(ca + cb) OVER (ORDER BY v
-                       ROWS BETWEEN UNBOUNDED PRECEDING
-                       AND 1 PRECEDING), 0) AS cum_prev
-            FROM cells),
-        sums AS (
-            SELECT CAST(SUM(ca) AS BIGINT) AS na,
-                   CAST(SUM(cb) AS BIGINT) AS nb,
-                   CAST(SUM(ca * (2 * cum_prev + t + 1)) AS BIGINT)
-                       AS r2a,
-                   CAST(SUM(t * t * t - t) AS BIGINT) AS ties
-            FROM ladder)
-        SELECT na, nb,
-               (r2a - na * (na + 1)) / 2.0 AS u_a,
-               ROUND(CAST(r2a - na * (na + 1) - na * nb AS DOUBLE)
-                     / (2.0 * SQRT(CAST(na AS DOUBLE) * nb / 12.0
-                         * (CAST(na + nb + 1 AS DOUBLE)
-                            - CAST(ties AS DOUBLE)
-                              / (CAST(na + nb AS DOUBLE)
-                                 * CAST(na + nb - 1 AS DOUBLE))))),
-                     6) AS z
-        FROM sums
     """,
     "ext_poisson_bootstrap": f"""
         WITH ev AS (
@@ -8693,82 +4735,6 @@ ORACLES: dict[str, str] = {
                    AS d_crit_5pct
         FROM scored ORDER BY d DESC, v LIMIT 1
     """,
-    "ext_vshape_patterns": f"""
-        WITH daily AS (
-            SELECT strftime(o_orderdate, '%Y-%m-%d') AS day,
-                   CAST(SUM(CAST(FLOOR(o_totalprice * 100 + 0.5)
-                                 AS BIGINT)) AS BIGINT) AS rev
-            FROM orders GROUP BY 1),
-        lagged AS (
-            SELECT day, rev,
-                   LAG(rev, 1) OVER (ORDER BY day) AS prev,
-                   LEAD(rev, 1) OVER (ORDER BY day) AS nxt
-            FROM daily)
-        SELECT day, ROUND(rev / 100.0, 2) AS bottom_usd,
-               ROUND((prev - rev) * 100.0 / prev, 4) AS drop_pct,
-               ROUND((nxt - rev) * 100.0 / rev, 4) AS recovery_pct
-        FROM lagged
-        WHERE prev * {VSHAPE_DEN} >= rev * {VSHAPE_NUM}
-          AND nxt * {VSHAPE_DEN} >= rev * {VSHAPE_NUM}
-    """,
-    "ext_diff_in_diff": f"""
-        WITH ev AS (
-            SELECT CAST('0x' || substr(md5('did:'
-                            || CAST(user_id AS VARCHAR)), 1, 15)
-                        AS BIGINT) % 2 = 0 AS treated,
-                   strftime(ts, '%Y-%m-%d') >= '{DID_CUT}' AS post,
-                   CAST(FLOOR(value * 100 + 0.5) AS BIGINT) AS cents
-            FROM events WHERE event_type = 'purchase'),
-        m AS (
-            SELECT
-                SUM(CASE WHEN treated AND NOT post
-                         THEN cents ELSE 0 END) AS s_10,
-                SUM(CASE WHEN treated AND NOT post
-                         THEN 1 ELSE 0 END) AS n_10,
-                SUM(CASE WHEN treated AND post
-                         THEN cents ELSE 0 END) AS s_11,
-                SUM(CASE WHEN treated AND post
-                         THEN 1 ELSE 0 END) AS n_11,
-                SUM(CASE WHEN NOT treated AND NOT post
-                         THEN cents ELSE 0 END) AS s_00,
-                SUM(CASE WHEN NOT treated AND NOT post
-                         THEN 1 ELSE 0 END) AS n_00,
-                SUM(CASE WHEN NOT treated AND post
-                         THEN cents ELSE 0 END) AS s_01,
-                SUM(CASE WHEN NOT treated AND post
-                         THEN 1 ELSE 0 END) AS n_01
-            FROM ev)
-        SELECT ROUND(s_10 / 100.0 / n_10, 4) AS treat_pre,
-               ROUND(s_11 / 100.0 / n_11, 4) AS treat_post,
-               ROUND(s_00 / 100.0 / n_00, 4) AS ctrl_pre,
-               ROUND(s_01 / 100.0 / n_01, 4) AS ctrl_post,
-               ROUND((s_11 / 100.0 / n_11 - s_10 / 100.0 / n_10)
-                     - (s_01 / 100.0 / n_01 - s_00 / 100.0 / n_00), 4)
-                   AS did_usd
-        FROM m
-    """,
-    "ext_ab_power_mde": """
-        WITH m AS (
-            SELECT event_type, CAST(COUNT(*) AS HUGEINT) AS n,
-                   SUM(c) AS s, SUM(c * c) AS ss
-            FROM (SELECT event_type,
-                         CAST(FLOOR(value * 100 + 0.5) AS HUGEINT) AS c
-                  FROM events)
-            GROUP BY event_type),
-        f AS (
-            SELECT event_type, n,
-                   (CAST(n * ss AS DOUBLE) - CAST(s * s AS DOUBLE))
-                       / CAST(n * (n - 1) AS DOUBLE) AS var,
-                   CAST(s AS DOUBLE) / CAST(n AS DOUBLE) AS mean
-            FROM m)
-        SELECT event_type, CAST(n AS BIGINT) AS n_events,
-               ROUND(mean / 100.0, 4) AS mean_usd,
-               ROUND(SQRT(var) / 100.0, 4) AS stddev_usd,
-               ROUND(2.8 * SQRT(2.0 * var
-                                / (CAST(n AS DOUBLE) / 2.0))
-                     / mean * 100.0, 4) AS mde_pct
-        FROM f
-    """,
     "ext_fifo_allocation": """
         WITH ev AS (
             SELECT user_id, event_type, event_id, epoch_us(ts) AS ts_us,
@@ -8812,53 +4778,6 @@ ORACLES: dict[str, str] = {
                purchase_cents - matched_cents
                    AS uncovered_purchase_cents
         FROM totals JOIN alloc USING (user_id)
-    """,
-    "ext_peak_days": """
-        WITH daily AS (
-            SELECT strftime(o_orderdate, '%Y-%m-%d') AS day,
-                   CAST(SUM(CAST(FLOOR(o_totalprice * 100 + 0.5)
-                                 AS BIGINT)) AS BIGINT) AS rev
-            FROM orders GROUP BY 1),
-        scored AS (
-            SELECT day, rev,
-                   LAG(rev, 1) OVER (ORDER BY day) AS prev,
-                   LEAD(rev, 1) OVER (ORDER BY day) AS nxt,
-                   SUM(rev) OVER (ORDER BY day
-                                  ROWS BETWEEN 6 PRECEDING
-                                  AND CURRENT ROW) AS s7,
-                   COUNT(*) OVER (ORDER BY day
-                                  ROWS BETWEEN 6 PRECEDING
-                                  AND CURRENT ROW) AS n7
-            FROM daily)
-        SELECT day, ROUND(rev / 100.0, 2) AS rev_usd,
-               ROUND(rev * 7.0 / s7, 4) AS prominence
-        FROM scored
-        WHERE rev > prev AND rev > nxt AND n7 = 7
-          AND rev * 14 > s7 * 3
-    """,
-    "ext_burstiness_fano": """
-        WITH daily AS (
-            SELECT event_type, strftime(ts, '%Y-%m-%d') AS day,
-                   CAST(COUNT(*) AS HUGEINT) AS c
-            FROM events GROUP BY 1, 2),
-        m AS (
-            SELECT event_type, CAST(COUNT(*) AS HUGEINT) AS n,
-                   SUM(c) AS s, SUM(c * c) AS ss
-            FROM daily GROUP BY event_type),
-        f AS (
-            SELECT event_type, n,
-                   (CAST(n * ss AS DOUBLE) - CAST(s * s AS DOUBLE))
-                       / CAST(n * (n - 1) AS DOUBLE) AS var,
-                   CAST(s AS DOUBLE) / CAST(n AS DOUBLE) AS mean
-            FROM m)
-        SELECT event_type, CAST(n AS BIGINT) AS n_days,
-               ROUND(mean, 4) AS mean_daily,
-               ROUND(var, 4) AS var_daily,
-               ROUND(var / mean, 4) AS fano,
-               CASE WHEN var / mean > 1.1 THEN 'bursty'
-                    WHEN var / mean < 0.9 THEN 'regular'
-                    ELSE 'poisson-like' END AS regime
-        FROM f
     """,
     "ext_equidepth_histogram": f"""
         WITH pc AS (
@@ -8913,15 +4832,6 @@ ORACLES: dict[str, str] = {
                ROUND(MAX(pc) / 100.0, 2) AS hi
         FROM assigned GROUP BY bucket
     """,
-    "ext_equidepth_approx": f"""
-        WITH n1 AS (SELECT COUNT(*) AS n FROM lineitem)
-        SELECT CAST(b AS BIGINT) AS bucket,
-               CAST(n AS BIGINT) AS n_rows,
-               CAST(n // {EQD_BUCKETS} AS BIGINT) AS target_depth,
-               CAST(2 * (n // {EQA_ACC}) + 2 AS BIGINT) AS tol,
-               TRUE AS depth_ok
-        FROM (SELECT UNNEST(range({EQD_BUCKETS})) AS b) CROSS JOIN n1
-    """,
     "ext_sliding_bitmap_distinct": """
         WITH ev AS (
             SELECT CAST(ts AS DATE) AS day, user_id // 32 AS chunk,
@@ -8958,48 +4868,6 @@ ORACLES: dict[str, str] = {
         FROM inter
         JOIN sizes sa ON sa.event_type = type_a
         JOIN sizes sb ON sb.event_type = type_b
-    """,
-    "ext_kmv_intersection": f"""
-        WITH hashed AS ({_KMV_HASHED}),
-        sk AS (
-            SELECT event_type, h
-            FROM (SELECT event_type, h,
-                         ROW_NUMBER() OVER (PARTITION BY event_type
-                                            ORDER BY h) AS rn
-                  FROM hashed)
-            WHERE rn <= {KMV_K}),
-        theta AS (
-            SELECT event_type,
-                   CASE WHEN COUNT(*) < {KMV_K}
-                        THEN CAST({1 << 60} AS BIGINT)
-                        ELSE MAX(h) END AS theta
-            FROM sk GROUP BY event_type),
-        common AS (
-            SELECT a.event_type AS type_a, b.event_type AS type_b,
-                   COUNT(*) AS n_below,
-                   MAX(LEAST(ta.theta, tb.theta)) AS theta
-            FROM sk a
-            JOIN sk b ON a.h = b.h AND a.event_type < b.event_type
-            JOIN theta ta ON ta.event_type = a.event_type
-            JOIN theta tb ON tb.event_type = b.event_type
-            WHERE a.h < LEAST(ta.theta, tb.theta)
-            GROUP BY 1, 2),
-        exact_full AS (
-            SELECT a.event_type AS type_a, b.event_type AS type_b,
-                   COUNT(*) AS n_inter_exact
-            FROM hashed a JOIN hashed b
-              ON a.h = b.h AND a.event_type < b.event_type
-            GROUP BY 1, 2)
-        SELECT e.type_a, e.type_b, n_inter_exact,
-               ROUND(n_below
-                     / (CAST(theta AS DOUBLE) / {float(1 << 60)!r}), 4)
-                   AS kmv_est,
-               ROUND((n_below
-                      / (CAST(theta AS DOUBLE) / {float(1 << 60)!r})
-                      - n_inter_exact) * 100.0 / n_inter_exact, 4)
-                   AS err_pct
-        FROM exact_full e
-        JOIN common c ON c.type_a = e.type_a AND c.type_b = e.type_b
     """,
     "ext_weighted_median": """
         WITH cells AS (
@@ -9059,38 +4927,6 @@ ORACLES: dict[str, str] = {
         SELECT bitmap.event_type, n_chunks, n_distinct_bitmap,
                n_distinct_exact
         FROM bitmap JOIN exact USING (event_type)
-    """,
-    "ext_ols_trend": """
-        WITH daily AS (
-            SELECT o_orderpriority,
-                   CAST(datediff('day', DATE '1970-01-01',
-                                 CAST(o_orderdate AS DATE)) AS HUGEINT)
-                       AS x,
-                   CAST(SUM(CAST(FLOOR(o_totalprice * 100 + 0.5)
-                                 AS BIGINT)) AS HUGEINT) AS y
-            FROM orders
-            GROUP BY o_orderpriority, CAST(o_orderdate AS DATE)),
-        m AS (
-            SELECT o_orderpriority, CAST(COUNT(*) AS HUGEINT) AS n,
-                   SUM(x) AS sx, SUM(y) AS sy, SUM(x * y) AS sxy,
-                   SUM(x * x) AS sxx, SUM(y * y) AS syy
-            FROM daily GROUP BY o_orderpriority),
-        f AS (
-            SELECT o_orderpriority, n, sx, sy,
-                   CAST(n * sxy AS DOUBLE) - CAST(sx * sy AS DOUBLE)
-                       AS num,
-                   CAST(n * sxx AS DOUBLE) - CAST(sx * sx AS DOUBLE)
-                       AS den,
-                   CAST(n * syy AS DOUBLE) - CAST(sy * sy AS DOUBLE)
-                       AS deny
-            FROM m)
-        SELECT o_orderpriority, CAST(n AS BIGINT) AS n_days,
-               ROUND(num / den, 6) AS slope_cents_per_day,
-               ROUND((CAST(sy AS DOUBLE)
-                      - num / den * CAST(sx AS DOUBLE))
-                     / CAST(n AS DOUBLE), 2) AS intercept_cents,
-               ROUND(num * num / (den * deny), 6) AS r2
-        FROM f
     """,
     "ext_autocorr_daily": f"""
         WITH daily AS (
@@ -9186,26 +5022,6 @@ ORACLES: dict[str, str] = {
                CAST(SUM(len_us) AS BIGINT) AS covered_us
         FROM merged GROUP BY user_id
     """,
-    "ext_time_to_convert": """
-        WITH ev AS (
-            SELECT user_id, event_type, ts, event_id FROM events
-            WHERE event_type IN ('click', 'purchase')),
-        carried AS (
-            SELECT user_id, event_type, epoch_us(ts) AS t,
-                   MAX(CASE WHEN event_type = 'click'
-                            THEN epoch_us(ts) END) OVER (
-                       PARTITION BY user_id ORDER BY ts, event_id
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-                       AS last_click_us
-            FROM ev),
-        gaps AS (
-            SELECT t - last_click_us AS gap_us FROM carried
-            WHERE event_type = 'purchase' AND last_click_us IS NOT NULL
-              AND t - last_click_us > 0)
-        SELECT CAST(length(bin(gap_us)) - 1 AS BIGINT) AS log2_latency_us,
-               COUNT(*) AS n_conversions
-        FROM gaps GROUP BY 1
-    """,
     "ext_supplier_hhi": """
         WITH rev AS (
             SELECT s.s_nationkey,
@@ -9221,129 +5037,6 @@ ORACLES: dict[str, str] = {
                              * CAST(SUM(rev_usd) AS DOUBLE))) AS BIGINT)
                    AS hhi_ppm
         FROM rev GROUP BY s_nationkey
-    """,
-    "ext_inactivity_histogram": """
-        WITH gaps AS (
-            SELECT epoch_us(ts)
-                   - LAG(epoch_us(ts)) OVER (PARTITION BY user_id
-                                             ORDER BY ts, event_id)
-                       AS gap_us
-            FROM events)
-        SELECT CAST(length(bin(gap_us)) - 1 AS BIGINT) AS log2_gap_us,
-               COUNT(*) AS n_gaps,
-               MIN(gap_us) AS min_gap_us,
-               MAX(gap_us) AS max_gap_us
-        FROM gaps WHERE gap_us IS NOT NULL AND gap_us > 0
-        GROUP BY 1
-    """,
-    "ext_repeat_purchase_rate": """
-        WITH per_cust AS (
-            SELECT o_custkey,
-                   strftime(MIN(o_orderdate), '%Y-%m') AS cohort_month,
-                   COUNT(*) AS n_orders
-            FROM orders GROUP BY o_custkey)
-        SELECT cohort_month, COUNT(*) AS n_customers,
-               CAST(SUM(CASE WHEN n_orders > 1 THEN 1 ELSE 0 END) AS BIGINT)
-                   AS n_repeaters,
-               CAST(floor(SUM(CASE WHEN n_orders > 1 THEN 1 ELSE 0 END)
-                          * 1000000 / COUNT(*)) AS BIGINT) AS repeat_ppm
-        FROM per_cust GROUP BY cohort_month
-    """,
-    "ext_rfm_segments": f"""
-        WITH p AS (SELECT * FROM events WHERE event_type = 'purchase'),
-        per AS (
-            SELECT user_id,
-                   MAX(epoch_us(ts)) AS last_us,
-                   COUNT(*) AS frequency,
-                   CAST(SUM(CAST(FLOOR(value * 100 + 0.5) AS BIGINT))
-                        AS BIGINT) AS monetary_cents
-            FROM p GROUP BY user_id),
-        base AS (
-            SELECT user_id,
-                   CAST(FLOOR(((SELECT MAX(epoch_us(ts)) FROM p) - last_us)
-                              / 86400000000) AS BIGINT) AS recency_days,
-                   frequency, monetary_cents
-            FROM per),
-        scored AS (
-            SELECT *,
-                   CAST(ntile({RFM_BUCKETS}) OVER (
-                       ORDER BY recency_days, user_id) AS BIGINT) AS r_score,
-                   CAST(ntile({RFM_BUCKETS}) OVER (
-                       ORDER BY frequency DESC, user_id) AS BIGINT)
-                       AS f_score,
-                   CAST(ntile({RFM_BUCKETS}) OVER (
-                       ORDER BY monetary_cents DESC, user_id) AS BIGINT)
-                       AS m_score
-            FROM base)
-        SELECT user_id, recency_days, frequency, monetary_cents,
-               r_score, f_score, m_score,
-               CASE WHEN r_score = 1 AND f_score = 1 AND m_score = 1
-                    THEN 'champion'
-                    WHEN r_score <= 2 AND f_score <= 2 THEN 'loyal'
-                    WHEN r_score = {RFM_BUCKETS} THEN 'at_risk'
-                    ELSE 'other' END AS segment
-        FROM scored
-    """,
-    "ext_slo_burn": f"""
-        WITH daily AS (
-            SELECT strftime(ts, '%Y-%m-%d') AS day,
-                   COUNT(*) AS n_events,
-                   CAST(SUM(CASE WHEN event_type = 'error'
-                            THEN 1 ELSE 0 END) AS BIGINT) AS n_errors
-            FROM events GROUP BY 1),
-        win AS (
-            SELECT day, n_events, n_errors,
-                   CAST(FLOOR(1000000 * n_errors / n_events) AS BIGINT)
-                       AS err_ppm,
-                   CAST(FLOOR(1000000 * SUM(n_errors) OVER w
-                              / SUM(n_events) OVER w) AS BIGINT)
-                       AS burn7_ppm,
-                   COUNT(*) OVER w AS n_days
-            FROM daily
-            WINDOW w AS (ORDER BY day
-                         ROWS BETWEEN {SLO_WINDOW_D - 1} PRECEDING
-                                  AND CURRENT ROW))
-        SELECT day, n_events, n_errors, err_ppm, burn7_ppm,
-               CAST(n_days = {SLO_WINDOW_D} AND burn7_ppm > {SLO_PPM}
-                    AS INT) AS breach
-        FROM win
-    """,
-    "ext_drift_chi2": (
-        _drift_pair_sql(
-            "even_odd", "event_id % 2 = 0", "event_id % 2 = 1"
-        )
-        + " UNION ALL "
-        + _drift_pair_sql(
-            "half_month",
-            "EXTRACT(day FROM ts) <= 15",
-            "EXTRACT(day FROM ts) > 15",
-        )
-    ),
-    "ext_ab_test_zscore": """
-        WITH users AS (
-            SELECT user_id,
-                   MAX(CASE WHEN event_type = 'purchase'
-                            AND value > 180.0
-                       THEN 1 ELSE 0 END) AS conv
-            FROM events GROUP BY user_id),
-        per AS (
-            SELECT CAST(('0x' || substr(md5('ab:'
-                        || CAST(user_id AS VARCHAR)), 1, 15)) AS BIGINT) % 2
-                       AS variant,
-                   COUNT(*) AS n_users, CAST(SUM(conv) AS BIGINT) AS n_conv
-            FROM users GROUP BY 1),
-        a AS (SELECT n_users AS n_a, n_conv AS conv_a FROM per
-              WHERE variant = 0),
-        b AS (SELECT n_users AS n_b, n_conv AS conv_b FROM per
-              WHERE variant = 1)
-        SELECT n_a, conv_a, n_b, conv_b,
-               ROUND(conv_a / n_a, 6) AS rate_a,
-               ROUND(conv_b / n_b, 6) AS rate_b,
-               ROUND((conv_a / n_a - conv_b / n_b)
-                     / sqrt(((conv_a + conv_b) / (n_a + n_b))
-                            * (1 - (conv_a + conv_b) / (n_a + n_b))
-                            * (1.0 / n_a + 1.0 / n_b)), 4) AS z_score
-        FROM a, b
     """,
     "ext_pagerank_types": f"""
         WITH seq AS (
@@ -9411,24 +5104,6 @@ ORACLES: dict[str, str] = {
                               AS BIGINT) END AS mins_since_click
         FROM tagged WHERE event_type = 'purchase'
     """,
-    "ext_watermark_audit": f"""
-        WITH ev AS (SELECT event_type, epoch_us(ts) AS ts_us, event_id
-                    FROM events),
-        l AS (SELECT event_type,
-                     greatest(COALESCE(MAX(ts_us) OVER (
-                         PARTITION BY event_type ORDER BY event_id
-                         ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-                         ts_us) - ts_us, 0) AS late_us
-              FROM ev)
-        SELECT event_type, COUNT(*) AS n_events,
-               ROUND(MAX(late_us) / 1e6, 1) AS max_late_s,
-               ROUND(quantile_cont(late_us, 0.99) / 1e6, 1) AS p99_late_s,
-               {", ".join(
-                   f"CAST(SUM(CASE WHEN late_us > {m * 60 * 1_000_000} "
-                   f"THEN 1 ELSE 0 END) AS BIGINT) AS dropped_{m}m"
-                   for m in WM_CANDIDATES_MIN)}
-        FROM l GROUP BY event_type
-    """,
     "ext_map_funcs": f"""
         WITH c AS (SELECT event_type,
                           strftime(CAST(ts AS DATE), '%Y-%m-%d') AS day,
@@ -9439,69 +5114,6 @@ ORACLES: dict[str, str] = {
                ROUND(c.n * 1.0 / t.total, 6) AS share
         FROM c JOIN t USING (event_type)
         WHERE ROUND(c.n * 1.0 / t.total, 6) >= {MAP_SHARE_MIN}
-    """,
-    "ext_running_distinct_users": """
-        SELECT e1.event_type, e1.day,
-               CAST(COUNT(DISTINCT e2.user_id) AS BIGINT) AS n_users_cum
-        FROM (SELECT DISTINCT event_type,
-                     strftime(CAST(ts AS DATE), '%Y-%m-%d') AS day
-              FROM events) e1
-        JOIN (SELECT DISTINCT event_type,
-                     strftime(CAST(ts AS DATE), '%Y-%m-%d') AS day, user_id
-              FROM events) e2
-          ON e1.event_type = e2.event_type AND e2.day <= e1.day
-        GROUP BY e1.event_type, e1.day
-    """,
-    "ext_concurrency_sweep": f"""
-        WITH ev AS (SELECT event_type, epoch_us(ts) AS ts_us, event_id
-                    FROM events),
-        d AS (SELECT event_type, ts_us, event_id, 1 AS delta FROM ev
-              UNION ALL
-              SELECT event_type, ts_us + {SESSION_GAP_US // 2}, event_id,
-                     -1 FROM ev),
-        r AS (SELECT event_type, ts_us, event_id,
-                     CAST(SUM(delta) OVER (
-                         PARTITION BY event_type
-                         ORDER BY ts_us, delta DESC, event_id
-                         ROWS UNBOUNDED PRECEDING) AS BIGINT) AS open
-              FROM d)
-        SELECT event_type, open AS peak_concurrency, ts_us AS peak_at_us
-        FROM (SELECT *, row_number() OVER (
-                  PARTITION BY event_type
-                  ORDER BY open DESC, ts_us, event_id) AS rn FROM r) t
-        WHERE rn = 1
-    """,
-    "ext_session_paths": f"""
-        WITH ev AS (SELECT user_id, epoch_us(ts) AS ts_us, event_id,
-                           event_type FROM events),
-        l AS (SELECT *, lag(ts_us) OVER (
-                  PARTITION BY user_id ORDER BY ts_us, event_id) AS prev_ts
-              FROM ev),
-        f AS (SELECT *, CASE WHEN prev_ts IS NULL
-                              OR ts_us - prev_ts > {SESSION_GAP_US}
-                        THEN 1 ELSE 0 END AS new_sess FROM l),
-        s AS (SELECT *, SUM(new_sess) OVER (
-                  PARTITION BY user_id ORDER BY ts_us, event_id
-                  ROWS UNBOUNDED PRECEDING) AS sess FROM f),
-        p AS (SELECT user_id, sess,
-                     string_agg(event_type, '>' ORDER BY ts_us, event_id)
-                         AS path
-              FROM s GROUP BY user_id, sess)
-        SELECT path, COUNT(*) AS n_sessions FROM p GROUP BY path
-        ORDER BY n_sessions DESC, path LIMIT {PATH_TOP_K}
-    """,
-    "ext_event_transitions": """
-        WITH ev AS (SELECT user_id, epoch_us(ts) AS ts_us, event_id,
-                           event_type FROM events),
-        l AS (SELECT user_id, event_type, lag(event_type) OVER (
-                  PARTITION BY user_id ORDER BY ts_us, event_id)
-                  AS prev_type FROM ev),
-        t AS (SELECT prev_type, event_type, COUNT(*) AS n FROM l
-              WHERE prev_type IS NOT NULL GROUP BY prev_type, event_type)
-        SELECT prev_type, event_type, n,
-               ROUND(n * 1.0 / SUM(n) OVER (PARTITION BY prev_type), 4)
-                   AS prob
-        FROM t
     """,
     "ext_quantile_mergeable": """
         WITH partials AS (
@@ -9526,17 +5138,6 @@ ORACLES: dict[str, str] = {
                CAST(SUM(cnt) AS BIGINT) AS n_rows,
                COUNT(*) AS n_distinct_values
         FROM cum GROUP BY event_type
-    """,
-    "ext_cohort_retention": """
-        WITH ev AS (SELECT user_id, CAST(date_trunc('day', ts) AS DATE) AS day
-                    FROM events),
-             firsts AS (SELECT user_id, MIN(day) AS cohort_day
-                        FROM ev GROUP BY user_id)
-        SELECT strftime(cohort_day, '%Y-%m-%d') AS cohort,
-               date_diff('day', cohort_day, day) AS day_offset,
-               COUNT(DISTINCT ev.user_id) AS n_users
-        FROM ev JOIN firsts ON ev.user_id = firsts.user_id
-        GROUP BY cohort_day, day_offset
     """,
     "ext_rollup": f"""
         SELECT coalesce(o_orderpriority, '{ALL}') AS priority,
@@ -9677,26 +5278,6 @@ ORACLES: dict[str, str] = {
                ROUND(quantile_cont(c_acctbal, 0.5), 6) AS p50,
                ROUND(quantile_cont(c_acctbal, 0.9), 6) AS p90
         FROM customer GROUP BY c_mktsegment
-    """,
-    "ext_anomaly_mad": """
-        WITH m AS (
-            SELECT event_type, ROUND(quantile_cont(value, 0.5), 6) AS med
-            FROM events GROUP BY event_type
-        ),
-        d AS (
-            SELECT e.event_id, e.event_type, e.value, m.med
-            FROM events e JOIN m USING (event_type)
-        ),
-        md AS (
-            SELECT event_type,
-                   ROUND(quantile_cont(abs(value - med), 0.5), 6) AS mad
-            FROM d GROUP BY event_type
-        )
-        SELECT d.event_id, d.event_type, ROUND(d.value, 6) AS value,
-               ROUND(0.6745 * (d.value - d.med) / md.mad, 6) AS robust_z
-        FROM d JOIN md USING (event_type)
-        WHERE md.mad > 0
-          AND abs(ROUND(0.6745 * (d.value - d.med) / md.mad, 6)) > 3.5
     """,
     "ext_unpivot": """
         SELECT p_partkey, metric, value

@@ -60,7 +60,7 @@ SLIDING_WINDOW_ORACLE = """
 # streaming.upsert. They live HERE (leaf module) so that
 # streaming.upsert — whose mapInPandas functions Python workers
 # unpickle, importing the whole upsert module — never imports the
-# 9.5k-line analytics pack at module scope on the executor side.
+# analytics pack at module scope on the executor side.
 # ---------------------------------------------------------------------------
 
 from mini_sql_engine_spark.functions.numeric import NANO as _NANO

