@@ -33,11 +33,6 @@ SF_TABLES = (
     "embeddings",
 )
 
-# Dimension tables small enough to broadcast at ANY scale factor (region
-# and nation are fixed-size by construction — FIXTURES.md §1.1). Joins
-# against these should never shuffle the fact side.
-BROADCAST_TABLES = frozenset({"region", "nation"})
-
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Lazily load one table from ``{sf_dir}/{name}.parquet``.

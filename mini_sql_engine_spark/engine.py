@@ -21,6 +21,8 @@ same query string goes through ``Engine.sql(...)`` (DataFrame out) or
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame, SparkSession
 
 from mini_sql_engine_spark.plans import analyze, build_dataframe, parse_query
@@ -91,13 +93,17 @@ class Engine:
         """Full Spark SQL over the engine's tables — everything Catalyst
         parses (joins of any shape, window functions, CTEs, grouping
         sets, subqueries), a strict superset of the reference dialect.
-        Every engine table is re-registered as a temp view under its own
-        name on EVERY call, because another Engine on the same session
-        may have replaced a view of that name since; with the 10-table
-        benchmark catalog that costs a median 28-41 ms a call (4 cores).
+        Each engine table the query text names as a whole identifier (in
+        any case, back-quoted or not) is re-registered as a temp view
+        under its own name on every call, because another Engine on the
+        same session may have replaced a view of that name since. A name
+        that occurs only inside a literal or a comment registers one view
+        too many, which is harmless. Registering all 10 tables of the
+        benchmark catalog on every call cost a median 28-41 ms (4 cores).
         `sql` binds its tables per query instead (`plans.builder`)."""
         for name, df in self.tables.items():
-            df.createOrReplaceTempView(name)
+            if re.search(rf"(?<!\w){re.escape(name)}(?!\w)", query, re.IGNORECASE):
+                df.createOrReplaceTempView(name)
         return self.spark.sql(query)
 
     def explain(self, query: str) -> str:

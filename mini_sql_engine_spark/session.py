@@ -22,6 +22,27 @@ same code is correct and fast on a 1000-executor cluster:
   still gets a page of its own size. 1 MiB pages retained only ~8 MiB
   less on the curation benchmark (4 local cores) and would halve that
   cap. ``extra_conf`` overrides it.
+- a generated-code class cache of 1000 entries
+  (``spark.sql.codegen.cache.maxEntries``). Spark keeps the classes it
+  compiles for whole-stage codegen and projections in one JVM-wide LRU
+  cache, 100 entries by default. One curation chain (the 11 dedup,
+  similarity and text operators) over a fresh 300-document corpus needs
+  about 194 classes, so at 100 every chain evicted the previous chain's
+  classes and recompiled all ~194 (0.6-0.7 s of Janino compiling in a
+  3-4 s chain, 4 cores). At 1000, after one chain on a small corpus, the
+  next chain on a fresh corpus compiles about 32 classes and later ones
+  0-4. A cached class holds about 22 KiB of heap (800 one-stage plans,
+  1600 classes: 29.0 MiB live at 1000 entries against 9.7 MiB at 100),
+  so a full cache holds about 21 MiB. The size is a static conf with a
+  trap: the cache is built once, when the ``CodeGenerator`` object is
+  first touched, at the size that ``SQLConf.get`` returns on the
+  touching JVM thread. A thread with no active session gets Spark's
+  default of 100, and the first compile can happen there:
+  ``DataFrame.rdd`` (``catalog.ensure_min_partitions``) executes its
+  plan outside the session's scope, and a pool thread has no session of
+  its own. So ``get_spark`` initializes the object on its own thread,
+  right after ``getOrCreate``, where the session is active.
+  ``extra_conf`` overrides the size.
 """
 
 from __future__ import annotations
@@ -65,9 +86,18 @@ def get_spark(
         .config("spark.sql.python.filterPushdown.enabled", "true")
         # small Tungsten pages: see the module docstring
         .config("spark.buffer.pageSize", "2m")
+        # codegen class cache that holds a whole curation chain: see the
+        # module docstring
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    # build the codegen cache now, on this thread, where the session is
+    # active and its size is the session's (a no-op once built)
+    spark._jvm.java.lang.Class.forName(
+        "org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator$"
+    )
+    return spark

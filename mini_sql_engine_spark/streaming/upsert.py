@@ -54,7 +54,6 @@ from mini_sql_engine_spark.functions.hashing import md5_long
 from mini_sql_engine_spark.plans.dialect import EngineError
 from mini_sql_engine_spark.sources import datasource
 
-STATE_COLS = ["user_id", "n_events", "total_cents"]
 SENTINEL_KEY = -1  # user_id for the version row (real keys are >= 0)
 
 

@@ -196,3 +196,32 @@ def test_connector_engine_equivalent(spark, mini_dir, eng):
         "SELECT DISTINCT B FROM table1;",
     ):
         assert rows(ds_eng.sql(q)) == rows(eng.sql(q)), q
+
+
+def test_ansi_sql_binds_each_engines_own_tables(spark):
+    """Two Engines on one session with a table of the same name: each
+    call binds the calling engine's table, however the query names it."""
+    ones = Engine(spark, {"ansi_t": spark.sql("SELECT 1 AS v")})
+    twos = Engine(spark, {"ansi_t": spark.sql("SELECT 2 AS v UNION ALL SELECT 2")})
+    try:
+        for e, want in ((ones, [(1,)]), (twos, [(2,), (2,)]), (ones, [(1,)])):
+            for q in (
+                "SELECT v FROM ansi_t",
+                "SELECT v FROM `ansi_t`",
+                "SELECT v FROM Ansi_T",
+                "WITH c AS (SELECT v FROM ansi_t) SELECT v FROM c",
+            ):
+                assert rows(e.ansi_sql(q)) == want, q
+    finally:
+        spark.catalog.dropTempView("ansi_t")
+
+
+def test_ansi_sql_registers_only_named_tables(spark):
+    names = ("ansi_only_p", "ansi_only_p2", "ansi_only_q")
+    e = Engine(spark, {n: spark.sql(f"SELECT {i} AS v") for i, n in enumerate(names)})
+    try:
+        assert rows(e.ansi_sql("SELECT v FROM ansi_only_p2")) == [(1,)]
+        assert [n for n in names if spark.catalog.tableExists(n)] == ["ansi_only_p2"]
+    finally:
+        for n in names:
+            spark.catalog.dropTempView(n)

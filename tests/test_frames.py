@@ -3,12 +3,16 @@ must be drop-in equivalent to createDataFrame on values, names, and
 types (nullability intentionally differs: VALUES columns are
 non-nullable, which is strictly more precise and union-compatible).
 
-Also the frames the engine keeps alive between calls: the session's
-memory page size and the one-directory ``DFMemo`` lifetime."""
+Also what the engine keeps alive between calls: the session's memory
+page size, its codegen class cache and the one-directory ``DFMemo``
+lifetime."""
 
 from __future__ import annotations
 
 import math
+import os
+import subprocess
+import sys
 
 from hypothesis import HealthCheck, given, settings, strategies as st
 
@@ -127,6 +131,66 @@ def test_session_page_size(spark):
     # pins at least one page
     mm = spark.sparkContext._jsc.sc().env().memoryManager()
     assert mm.pageSizeBytes() == 2 * 1024 * 1024
+
+
+def recompiles_after_filling(spark, n: int = 120, again: int = 5) -> int:
+    """Compile ``n`` distinct one-stage plans, more than Spark's default
+    cache of 100 classes holds, then run the first ``again`` of them
+    once more: the number of classes the re-run compiles."""
+
+    def run(i: int) -> None:
+        spark.range(1, numPartitions=1).selectExpr(f"id * {i + 2} + {i}").collect()
+
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    for i in range(n):
+        run(i)
+    before = compiles.METRIC_COMPILATION_TIME().getCount()
+    for i in range(again):
+        run(i)
+    return compiles.METRIC_COMPILATION_TIME().getCount() - before
+
+
+def test_codegen_cache_holds_many_plans(spark):
+    # at the default size of 100 a curation chain's ~194 classes evict
+    # each other, and every chain recompiles all of them
+    assert recompiles_after_filling(spark) == 0
+
+
+_OFF_THREAD = """
+from concurrent.futures import ThreadPoolExecutor
+
+from mini_sql_engine_spark.session import get_spark
+from tests.test_frames import recompiles_after_filling
+
+spark = get_spark(app_name="codegen-cache-check")
+
+
+def first_compile_off_thread():
+    # DataFrame.rdd executes the plan outside the session's scope, and a
+    # pool thread has no active session of its own
+    spark.range(3).selectExpr("id + 1").rdd.getNumPartitions()
+    return recompiles_after_filling(spark)
+
+
+with ThreadPoolExecutor(1) as pool:
+    print("RECOMPILES", pool.submit(first_compile_off_thread).result())
+"""
+
+
+def test_codegen_cache_size_when_first_compile_is_off_thread():
+    """Spark sizes the codegen cache once, from the conf of the thread
+    that first compiles. A compile on a pool thread outside any session
+    scope would size it at Spark's default; ``get_spark`` builds the
+    cache on its own thread, so the size is the session's."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, SPARK_GRAFT_CPUS="2")
+    env["PYTHONPATH"] = repo + os.pathsep + env.get("PYTHONPATH", "")
+    proc = subprocess.run(
+        [sys.executable, "-c", _OFF_THREAD],
+        capture_output=True, text=True, timeout=300, env=env, cwd=repo,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    assert "RECOMPILES 0" in proc.stdout.splitlines(), proc.stdout
 
 
 def test_dfmemo_holds_one_directory(spark, tmp_path):
